@@ -17,7 +17,7 @@ makes long runs safe either way.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from simdgraphprocessing_spark.iteration import IterationResult, run_supersteps
@@ -53,18 +53,19 @@ def connected_components(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("c").alias("nbr_min"))
         )
+        # counted while the driver materializes the new state
+        changed = Observation()
         new = (
             state.join(nbr_min, "id", "left")
+            .observe(changed, F.count_if(F.col("nbr_min") < F.col("component")).alias("changed"))
             .select(
                 "id",
                 F.least(
                     F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
                 ).alias("component"),
-                (F.col("nbr_min") < F.col("component")).alias("_chg"),
             )
         )
-        changed = new.filter(F.col("_chg")).count()
-        return new.drop("_chg"), {"changed": int(changed)}
+        return new, {"changed": changed}
 
     result = run_supersteps(
         spark,

@@ -21,7 +21,7 @@ JVM-side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from simdgraphprocessing_spark.iteration import IterationResult, run_supersteps
@@ -58,16 +58,15 @@ def label_propagation(
                 "new_label"
             )
         )
+        label = F.coalesce(F.col("new_label"), F.col("label"))
+        # counted while the driver materializes the new state
+        changed = Observation()
         new = (
             state.join(best, "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
-                (F.coalesce(F.col("new_label"), F.col("label")) != F.col("label")).alias("_chg"),
-            )
+            .observe(changed, F.count_if(label != F.col("label")).alias("changed"))
+            .select("id", label.alias("label"))
         )
-        changed = new.filter(F.col("_chg")).count()
-        return new.drop("_chg"), {"changed": int(changed)}
+        return new, {"changed": changed}
 
     result = run_supersteps(
         spark,

@@ -9,22 +9,28 @@ numpy power-iteration oracle (tests/test_pagerank.py):
 
 with d = 0.85, r_0 = 1/N, dangling mass redistributed uniformly.
 
-Plan per superstep (all JVM-side, zero Python in the loop):
-  ranks ⋈ out_degrees (broadcast- or co-partitioned hash join on id)
-  → contribs = edges ⋈ ranks on src (edges pre-partitioned by src;
-    the exchange is reused every iteration)
-  → groupBy(dst).sum (THE shuffle; map-side partial agg halves it)
-  → full-outer with vertex table for zero-indegree vertices.
+Plan per superstep (all JVM-side, zero Python in the loop), one
+exchange and one Spark job (plus a dangling-mass action when some
+vertex dangles):
+  contribs = edges ⋈ state on src (edges pre-partitioned by src and
+    persisted; the state, materialized by a static plan, stays
+    hash-partitioned by id with the same partition count, so neither
+    side shuffles)
+  → groupBy(dst).sum (THE exchange; map-side partial agg halves it)
+  → state ⋈ contribs on id (co-partitioned: contribs is hashed on
+    dst = id), a left join so zero-indegree vertices keep their row.
 
-Convergence: L1 delta via ``agg(sum(abs(new-old)))`` — one scalar to
-the driver per superstep, like the reference's cardinality test.
+Convergence: L1 delta ``sum(abs(new-old))`` observed on that last
+join's rows while the driver materializes the new state — one scalar
+to the driver per superstep, like the reference's cardinality test,
+and no action of its own.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from simdgraphprocessing_spark.iteration import IterationResult, run_supersteps
@@ -34,11 +40,12 @@ from simdgraphprocessing_spark.iteration import IterationResult, run_supersteps
 class ShufflePlanContext:
     """The shuffle plan's one-time layout: src-partitioned persisted
     edges, the persisted (id, outdeg) vertex table, V, and whether any
-    vertex dangles. Building it costs three actions (V count, vtab
-    materialize, dangling probe); ``pagerank_auto`` runs the shuffle
-    plan twice per call (probe + post-fallback remainder), so it
-    builds this once and threads it through both — the supersteps
-    themselves are unchanged."""
+    vertex dangles. Building it costs one action (a single aggregate
+    over vtab that materializes it and yields V and the dangling
+    count); ``pagerank_auto`` runs the shuffle plan twice per call
+    (probe + post-fallback remainder), so it builds this once and
+    threads it through both — the supersteps themselves are
+    unchanged."""
 
     edges: DataFrame
     vtab: DataFrame
@@ -62,12 +69,11 @@ def build_shuffle_plan(edges: DataFrame) -> ShufflePlanContext:
     )
     # (id, outdeg) for every vertex; dangling => outdeg null
     vtab = vertices.join(out_deg, "id", "left").persist()
-    n = vtab.count()
-    # dangling-mass handling needs a per-superstep driver scalar; skip
-    # the action entirely when the graph has no dangling vertices
-    # (always true for symmetrized graphs)
-    has_dangling = vtab.filter(F.col("outdeg").isNull()).limit(1).count() > 0
-    return ShufflePlanContext(edges, vtab, n, has_dangling)
+    # dangling-mass handling needs a per-superstep driver scalar; the
+    # supersteps skip that action entirely when the graph has no
+    # dangling vertices (always true for symmetrized graphs)
+    n, dangling = vtab.agg(F.count("*"), F.count_if(F.col("outdeg").isNull())).first()
+    return ShufflePlanContext(edges, vtab, n, dangling > 0)
 
 
 def pagerank(
@@ -125,8 +131,9 @@ def pagerank(
                 or 0.0
             )
         # the E-sized join: edges stay put (pre-partitioned by src,
-        # persisted); the V-sized rank side shuffles to it and builds a
-        # hash table (shuffle_hash — no 19M-row re-sort per superstep)
+        # persisted); the V-sized rank side, co-partitioned with them,
+        # builds the hash table (shuffle_hash — no 19M-row re-sort per
+        # superstep)
         contribs = (
             edges.join(
                 state.select(
@@ -138,24 +145,16 @@ def pagerank(
             .agg(F.sum("w").alias("msum"))
         )
         base = (1.0 - damping) / n + damping * dangling / n
-        new = (
-            vtab.join(contribs.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))).alias("rank"),
-                "outdeg",
-            )
-        )
+        joined = state.join(contribs.hint("shuffle_hash"), "id", "left")
+        rank = F.lit(base) + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
         m = {"dangling_mass": float(dangling)}
         if compute_delta:
-            # convergence measure costs an extra V-join + agg; skipped
-            # for fixed-iteration runs (tol <= 0)
-            delta = (
-                new.join(state.select("id", F.col("rank").alias("old")), "id")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d"))
-                .collect()[0]["d"]
-            )
-            m["l1_delta"] = float(delta)
+            # the old rank is on the joined row: the delta is observed
+            # while the driver materializes the new state
+            obs = Observation()
+            joined = joined.observe(obs, F.sum(F.abs(rank - F.col("rank"))).alias("l1_delta"))
+            m["l1_delta"] = obs
+        new = joined.select("id", rank.alias("rank"), "outdeg")
         return new, m
 
     result = run_supersteps(

@@ -4,10 +4,27 @@ generalization of the reference's frontier loop
 union → difference → convergence test).
 
 Contract: a superstep is a pure function
-``state_df -> (new_state_df, metrics_dict)``. The driver
+``state_df -> (new_state_df, metrics_dict)``. A metric whose value is
+a :class:`pyspark.sql.Observation` (observed on ``new_state_df`` under
+the metric's own name) is read once the new state is materialized, so
+convergence measures cost no action of their own. The driver
 
 * persists each new state and truncates lineage (iterative DataFrame
   plans otherwise grow without bound — the classic Spark trap),
+* materializes each in-memory superstep with a static (non-adaptive)
+  plan. ``localCheckpoint`` under adaptive execution records
+  ``UnknownPartitioning`` for the new state, so the next superstep's
+  ``edges ⋈ state`` join re-shuffles all V state rows; planned
+  statically, the state keeps the ``hashpartitioning(id, n)`` its
+  final ``state ⋈ messages`` join gives it, and with the edges
+  ``repartition("src")``-ed to the same ``n`` that join needs no
+  exchange. AQE has nothing to do in these plans anyway: every join
+  has a cached or co-partitioned side, so neither skew splitting nor
+  partition coalescing can fire, while its per-stage re-planning is
+  most of a small superstep's cost. The session's setting is restored
+  as soon as the state is materialized; durable checkpoints stay
+  adaptive, since a state re-read from parquet has no partitioning to
+  keep,
 * checkpoints vertex state to a partitioned parquet directory
   (Iceberg-style layout ``checkpoint_dir/superstep=K/``) together
   with per-superstep metrics + lineage JSON (``_metrics.json``:
@@ -31,7 +48,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 Superstep = Callable[[DataFrame, int], tuple[DataFrame, dict]]
 
@@ -68,6 +85,18 @@ def _local_ckpt_jrdd(df: DataFrame):
     except Exception:  # py4j surface moved — degrade to cleaner-based GC
         pass
     return None
+
+
+def _static_local_checkpoint(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` of ``df`` planned with AQE off, so the
+    checkpoint keeps ``df``'s hash partitioning (see module docstring)."""
+    conf = spark.conf
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 def _ckpt_path(checkpoint_dir: str, k: int) -> str:
@@ -171,7 +200,7 @@ def run_supersteps(
             # truncate lineage in-memory between durable checkpoints;
             # eager localCheckpoint is the single materializing action
             # (no extra count job — row count is a durable-ckpt metric)
-            new_state = new_state.localCheckpoint(eager=True)
+            new_state = _static_local_checkpoint(spark, new_state)
             state.unpersist()
             # the new checkpoint is materialized, so the previous one's
             # RDD-level blocks (which DataFrame.unpersist cannot reach)
@@ -184,7 +213,10 @@ def run_supersteps(
             partition_lineage = None
 
         wall = time.time() - t0
-        m = dict(m)
+        m = {
+            key: val.get[key] if isinstance(val, Observation) else val
+            for key, val in m.items()
+        }
         m.update(
             {
                 "superstep": k,

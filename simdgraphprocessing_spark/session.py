@@ -22,8 +22,11 @@ def get_spark(
 
     AQE is on (runtime skew-join splitting + partition coalescing —
     the Spark analog of the reference's dynamic work-stealing queue,
-    ``src/common.hpp:214-276``); Arrow is on (all kernels are
-    pandas/Arrow vectorized, never per-row Python).
+    ``src/common.hpp:214-276``) everywhere except superstep
+    materialization, which ``iteration.run_supersteps`` plans
+    statically so the state keeps its hash partitioning across the
+    checkpoint; Arrow is on (all kernels are pandas/Arrow vectorized,
+    never per-row Python).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:

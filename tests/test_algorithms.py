@@ -384,3 +384,167 @@ def test_pagerank_auto_records_sustained_budget(spark):
     got = {r["id"]: r["rank"] for r in res.state.collect()}
     exp = {r["id"]: r["rank"] for r in base.state.collect()}
     assert all(abs(got[i] - exp[i]) < 1e-9 for i in got)
+
+
+# ---- superstep plan shape: static, co-partitioned materialization ----
+
+
+def _record_local_checkpoints(monkeypatch) -> list:
+    """Record every DataFrame handed to ``localCheckpoint``; after the
+    call its query execution holds the physical plan that ran."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen = []
+    real = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        seen.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    return seen
+
+
+def _exchanges(df) -> tuple[list[str], int, int]:
+    """Walk the plan that materialized ``df``. Returns every exchange
+    node (as its one-line description), the number of scans of a
+    checkpointed state (``Scan ExistingRDD``), and how many exchanges
+    shuffle such a scan (reach it through single-child nodes only).
+    Adaptive plans are walked through their final plan and stages."""
+    exchanges: list[str] = []
+    scans = shuffled = 0
+
+    def children(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return [node.executedPlan()]
+        if cls.endswith("QueryStageExec"):
+            return [node.plan()]
+        kids = node.children()
+        return [kids.apply(i) for i in range(kids.size())]
+
+    def shuffles_state(node) -> bool:
+        while len(kids := children(node)) == 1:
+            node = kids[0]
+        return node.nodeName() == "Scan ExistingRDD"
+
+    def walk(node):
+        nonlocal scans, shuffled
+        name = node.nodeName()
+        if "Exchange" in name:
+            exchanges.append(node.simpleString(200))
+            shuffled += shuffles_state(node)
+        scans += name == "Scan ExistingRDD"
+        for child in children(node):
+            walk(child)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return exchanges, scans, shuffled
+
+
+def test_pagerank_superstep_plan_has_one_exchange(spark, monkeypatch):
+    """Superstep 2 reads the superstep-1 checkpoint. Materialized by a
+    static plan, that state stays hash-partitioned by id, so the
+    superstep's only exchange is the contribs groupBy on dst: the
+    state side of both joins is read in place."""
+    seen = _record_local_checkpoints(monkeypatch)
+    e = edge_df(spark, zipf_random_pairs(n=60))
+    pagerank(e, max_iterations=2, tol=1e-12)
+    assert len(seen) == 2
+    exchanges, scans, shuffled = _exchanges(seen[1])
+    assert len(exchanges) == 1, exchanges
+    assert "hashpartitioning(dst" in exchanges[0], exchanges
+    assert scans == 2 and shuffled == 0, (scans, shuffled)
+
+
+@pytest.mark.parametrize("algorithm", [connected_components, label_propagation])
+def test_cc_lpa_read_state_without_exchange(spark, monkeypatch, algorithm):
+    seen = _record_local_checkpoints(monkeypatch)
+    e = edge_df(spark, zipf_random_pairs(n=60))
+    res = algorithm(e, max_iterations=3)
+    assert res.iterations >= 2 and len(seen) >= 2
+    exchanges, scans, shuffled = _exchanges(seen[1])
+    assert scans == 2 and shuffled == 0, (scans, shuffled, exchanges)
+
+
+def test_pagerank_superstep_runs_one_job(spark, monkeypatch):
+    """Each in-memory superstep's jobs, counted by job group from the
+    status store: the static materialization is the only one (no
+    adaptive stage jobs, no separate convergence action)."""
+    import importlib
+
+    pr = importlib.import_module("simdgraphprocessing_spark.algorithms.pagerank")
+    sc = spark.sparkContext
+    real = pr.run_supersteps
+
+    def grouped(spark_, init, step, **kwargs):
+        def step_in_group(state, k):
+            sc.setJobGroup(f"superstep-jobs-{k}", "superstep")
+            return step(state, k)
+
+        return real(spark_, init, step_in_group, **kwargs)
+
+    monkeypatch.setattr(pr, "run_supersteps", grouped)
+    e = edge_df(spark, zipf_random_pairs(n=60))
+    try:
+        res = pagerank(e, max_iterations=4, tol=1e-12)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert res.iterations == 4
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(f"superstep-jobs-{k}")) for k in range(4)]
+    assert jobs == [1, 1, 1, 1], jobs
+
+
+def test_supersteps_restore_adaptive_setting(spark):
+    """The static materialization never leaks into the session: AQE
+    reads as before after a run, after a step that raises, and after a
+    state whose materialization fails."""
+    from pyspark.errors import PySparkException
+    from pyspark.sql import functions as F
+
+    from simdgraphprocessing_spark.iteration import run_supersteps
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    init = spark.range(8)
+
+    def ok(state, k):
+        return state.select((F.col("id") + 1).alias("id")), {}
+
+    def raises(state, k):
+        raise RuntimeError("step failed")
+
+    def fails_in_materialization(state, k):
+        return state.select(F.raise_error(F.lit("bad state")).alias("id")), {}
+
+    try:
+        for value in ("false", "true"):
+            spark.conf.set(key, value)
+            res = run_supersteps(spark, init, ok, max_iterations=2)
+            assert sorted(r["id"] for r in res.state.collect()) == list(range(2, 10))
+            assert spark.conf.get(key) == value
+            for step, error in ((raises, RuntimeError), (fails_in_materialization, PySparkException)):
+                with pytest.raises(error):
+                    run_supersteps(spark, init, step, max_iterations=2)
+                assert spark.conf.get(key) == value
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_observed_metrics_match_across_checkpoint_kinds(spark, tmp_path):
+    """Convergence metrics are observed while the driver materializes
+    each state, both by a localCheckpoint and by a durable parquet
+    write: the two runs record the same history and result."""
+    e = edge_df(spark, zipf_random_pairs(n=250))
+    mem = connected_components(e, max_iterations=60)
+    ck = connected_components(e, max_iterations=60, checkpoint_dir=str(tmp_path / "cc"), checkpoint_every=1)
+    assert [m["changed"] for m in ck.metrics] == [m["changed"] for m in mem.metrics]
+    assert mem.metrics[-1]["changed"] == 0 and mem.iterations == len(mem.metrics)
+    assert sorted(ck.state.collect()) == sorted(mem.state.collect())
+
+    mem = pagerank(e, max_iterations=5, tol=1e-12)
+    ck = pagerank(e, max_iterations=5, tol=1e-12, checkpoint_dir=str(tmp_path / "pr"), checkpoint_every=2)
+    deltas = [m["l1_delta"] for m in mem.metrics]
+    assert all(d > 0 for d in deltas)
+    assert np.allclose([m["l1_delta"] for m in ck.metrics], deltas, rtol=1e-9)

@@ -19,11 +19,18 @@ reference binary-for-binary on its shipped graphs".
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 FB = "/root/reference/test/data/facebook.bin"
 DFB = "/root/reference/test/data/dfacebook.bin"
+
+_MISSING = [p for p in (FB, DFB) if not os.path.exists(p)]
+pytestmark = pytest.mark.skipif(
+    bool(_MISSING), reason=f"reference fixture(s) absent: {', '.join(_MISSING)}"
+)
 
 
 @pytest.fixture(scope="module")

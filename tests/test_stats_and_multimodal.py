@@ -95,10 +95,17 @@ def test_frame_sample_grid(spark):
     assert verify_media_sha(fs, media) == 0
 
 
-def test_binary_reader_rejects_wrong_flag(spark):
+def test_binary_reader_rejects_wrong_flag():
     from simdgraphprocessing_spark.sources.binary import _parse_adjacency_binary
 
-    buf = open("/root/reference/test/data/facebook.bin", "rb").read()
+    # undirected layout: u64 num_nodes; per node u64 external id,
+    # u64 row_size, u32[row_size] neighbor internal indices
+    def node(ext_id, row):
+        return np.array([ext_id, len(row)], np.uint64).tobytes() + np.array(row, np.uint32).tobytes()
+
+    buf = np.array([3], np.uint64).tobytes() + node(10, [1, 2]) + node(20, [0]) + node(30, [0])
+    src, dst = _parse_adjacency_binary(buf, directed=False)
+    assert list(zip(src, dst)) == [(10, 20), (10, 30), (20, 10), (30, 10)]
     with pytest.raises(ValueError):
         _parse_adjacency_binary(buf, directed=True)
 

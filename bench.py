@@ -199,9 +199,7 @@ def _session(cores: int, edges_path: str | None = None):
     )
 
 
-def _pinned_suite(
-    cores: int, edges_path: str, do_triangles: bool, do_gather: bool | None = None
-) -> dict:
+def _pinned_suite(cores: int, edges_path: str, do_triangles: bool) -> dict:
     """Run the graph suite in a FRESH subprocess per parallelism level
     (no inherited JVM heap/JIT state between levels). Parallelism is
     limited by ``local[N]`` + ``shuffle.partitions=2N`` alone — NOT
@@ -212,13 +210,10 @@ def _pinned_suite(
     N-core executor shares a wider host."""
     import subprocess
 
-    if do_gather is None:
-        do_gather = cores == 32
     cmd = [
         sys.executable, os.path.abspath(__file__),
         "--suite", str(cores), edges_path,
         "1" if do_triangles else "0",
-        "1" if do_gather else "0",
     ]
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=1800)
     if out.returncode != 0:
@@ -252,12 +247,11 @@ def run_graph_suite(
     spark,
     edges_path: str,
     do_triangles: bool = True,
-    do_gather: bool = False,
     cores_hint: int = 32,
 ) -> dict:
-    """PageRank — both physical strategies — (warmup + PR_ITERS timed)
-    and triangle count on the cached graph. Returns timings + counts."""
-    from simdgraphprocessing_spark.algorithms import pagerank, pagerank_auto
+    """PageRank (warmup + PR_ITERS timed) and triangle count on the
+    cached graph. Returns timings + counts."""
+    from simdgraphprocessing_spark.algorithms import pagerank
     from simdgraphprocessing_spark.operators import triangle_count
 
     edges = spark.read.parquet(edges_path).persist()
@@ -298,45 +292,6 @@ def run_graph_suite(
         "pagerank_edges_per_sec_iter": n_edge_rows / med_step,
         "pagerank_edges_per_sec_iter_min": n_edge_rows / min_step,
     }
-    if do_gather:
-        # strategy-probe phase (informational; excluded from the
-        # headline pair — single sample per level): pagerank_auto runs
-        # 2 shuffle supersteps, hands their rank state to the gather
-        # plan for the remainder under a per-step budget of 1.25× the
-        # measured shuffle median, and evicts gather back to shuffle
-        # the moment a superstep runs over (the over-budget step still
-        # counts — no discarded work, max regret = one slow step).
-        # This replaced the raw gather phase AND round 5's min-of-2
-        # one-shot probe: the gather plan's per-superstep driver
-        # collect swings its wall 4.2M–37.8M e/s/iter at a FIXED level
-        # within one hour, so a lucky probe sample picked gather and
-        # then paid 13 s/step for the run (67-98 s total vs shuffle's
-        # 16-27 s, bench_full_r5_run{1,2}.json); see the
-        # pagerank_auto docstring for the measured spread.
-        # 12 iterations, not PR_ITERS=5: switching to gather costs a
-        # one-time ~5-superstep setup fee (dst-range repartition +
-        # outdeg collect + two rank hand-offs), so auto's amortization
-        # gate rightly refuses to attempt it on a 5-iteration run —
-        # the informational phase needs a horizon where the attempt is
-        # economically sane, or it would only ever measure the gate.
-        AUTO_ITERS = 12
-        t0 = time.time()
-        ares = pagerank_auto(edges, max_iterations=AUTO_ITERS, tol=0.0)
-        a_total = time.time() - t0
-        a_walls = sorted(m["wall_sec"] for m in ares.metrics)
-        a_med = a_walls[len(a_walls) // 2]
-        out.update(
-            {
-                "pagerank_auto_probe": ares.strategy_probe,
-                "pagerank_auto_iters": AUTO_ITERS,
-                "pagerank_auto_sec": a_total,
-                "pagerank_auto_step_walls": a_walls,
-                "pagerank_auto_median_step_sec": a_med,
-                "pagerank_auto_min_step_sec": a_walls[0],
-                "pagerank_auto_edges_per_sec_iter": n_edge_rows / a_med,
-                "pagerank_auto_edges_per_sec_iter_min": n_edge_rows / a_walls[0],
-            }
-        )
     if do_triangles:
         # fresh plan per run — re-collecting the same DataFrame would
         # reuse the prior job's shuffle files and time nothing.
@@ -462,12 +417,8 @@ def pick_median(runs: list[dict], key: str = "pagerank_edges_per_sec_iter") -> d
 def scaling_summary(throughput: dict) -> dict:
     """North-rule headline from per-pair efficiencies (pure function).
 
-    Candidates are the SHUFFLE-plan pagerank pairs only — medians-of-3
-    fresh processes at both levels. The pagerank_auto phase never
-    feeds a pair: it runs one repeat per level and may pick a
-    DIFFERENT physical plan at each level, so a cross-level ratio of
-    its walls is not a scaling measurement (round 4's
-    gather_8_to_32 = 1.548 was exactly that artifact; removed).
+    Candidates are the pagerank pairs only — medians-of-3 fresh
+    processes at both levels.
 
     Each candidate pair carries two estimators from the same samples:
     ``..._2_to_8`` (median superstep walls) and ``..._2_to_8_minwall``
@@ -593,8 +544,8 @@ def criterion_verdict(throughput: dict, recorded: list[dict]) -> dict:
 def assemble_line(out: dict, limit: int = LINE_LIMIT) -> str:
     """Serialize the compact line with graceful degradation: never
     exceed ``limit`` chars (the driver machine-reads only the tail of
-    stdout). Drops ``graph`` first, then the per-level triangle/gather
-    query entries. Pure function — pinned by tests/test_bench_contract."""
+    stdout). Drops ``graph`` first, then the per-level triangle query
+    entries. Pure function — pinned by tests/test_bench_contract."""
     line = json.dumps(out, separators=(",", ":"))
     if len(line) > limit:
         out = {k: v for k, v in out.items() if k != "graph"}
@@ -608,33 +559,30 @@ def assemble_line(out: dict, limit: int = LINE_LIMIT) -> str:
         out["queries"] = {
             k: v
             for k, v in out["queries"].items()
-            if not k.startswith(
-                ("triangles_local", "triangles_csr_local", "pagerank_auto_",
-                 "pagerank_gather_")
-            )
+            if not k.startswith(("triangles_local", "triangles_csr_local"))
         }
         line = json.dumps(out, separators=(",", ":"))
-    if len(line) > limit and "strategy_probe" in out:
-        out = {k: v for k, v in out.items() if k != "strategy_probe"}
-        line = json.dumps(out, separators=(",", ":"))
     if len(line) > limit and "throughput" in out:
-        # last resort: drop per-level auto/triangle throughputs (full
-        # detail file keeps them); criterion pagerank throughputs and
-        # every scaling_* key always survive
+        # last resort: drop per-level triangle throughputs (full detail
+        # file keeps them); criterion pagerank throughputs and every
+        # scaling_* key always survive
         out = dict(out)
         out["throughput"] = {
             k: v
             for k, v in out["throughput"].items()
-            if not k.startswith(
-                ("pagerank_auto_edges_per_sec_iter", "triangles_per_sec_local")
-            )
+            if not k.startswith("triangles_per_sec_local")
         }
         line = json.dumps(out, separators=(",", ":"))
-    if len(line) > limit and out.get("scaling_criterion") and "recorded_pairs" in out:
-        # the criterion verdict already names the decisive recorded
-        # pair (numbers + src file), so the remaining recorded_pairs
-        # row is redundant with it — drop it before anything criterion-
-        # bearing would have to go
+    if (
+        len(line) > limit
+        and out.get("scaling_criterion", {}).get("met")
+        and "recorded_pairs" in out
+    ):
+        # a met criterion verdict already names the decisive pair
+        # (numbers + src file), so the remaining recorded_pairs row is
+        # redundant with it — drop it before anything criterion-bearing
+        # would have to go. A verdict that is not met names no pair, so
+        # the recorded near-misses stay.
         out = {k: v for k, v in out.items() if k != "recorded_pairs"}
         line = json.dumps(out, separators=(",", ":"))
     return line
@@ -687,7 +635,7 @@ def main():
     # elapsed time crosses fractions of the budget, later repeats /
     # phases are skipped (recorded in "truncated") instead of running
     # the clock out. Ordering puts the criterion evidence first:
-    # local[32] (headline value + triangles + gather), local[8]
+    # local[32] (headline value + triangles), local[8]
     # (completes the literal 8→32 pair), local[2] (the 2→8 pair),
     # then the query sweep.
     BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "3000"))
@@ -717,12 +665,6 @@ def main():
                 f"pagerank_{PR_ITERS}iter_local{c}": round(s["pagerank_sec"], 3)
                 for c, s in suite.items()
                 if "pagerank_sec" in s
-            },
-            **{
-                f"pagerank_auto_{s.get('pagerank_auto_iters', PR_ITERS)}"
-                f"iter_local{c}": round(s["pagerank_auto_sec"], 3)
-                for c, s in suite.items()
-                if "pagerank_auto_sec" in s
             },
             **{
                 f"triangles_local{c}": round(s["triangle_sec"], 3)
@@ -756,13 +698,6 @@ def main():
                 for c, s in suite.items()
                 if "triangles_per_sec" in s
             },
-            **{
-                f"pagerank_auto_edges_per_sec_iter_local{c}": round(
-                    s["pagerank_auto_edges_per_sec_iter"], 1
-                )
-                for c, s in suite.items()
-                if "pagerank_auto_edges_per_sec_iter" in s
-            },
         }
         for key, lo, hi, metric in (
             ("scaling_efficiency_pagerank_2_to_8", 2, 8, "pagerank_edges_per_sec_iter"),
@@ -771,11 +706,6 @@ def main():
             ("scaling_efficiency_pagerank_8_to_32", 8, 32, "pagerank_edges_per_sec_iter"),
             ("scaling_efficiency_pagerank_8_to_32_minwall", 8, 32,
              "pagerank_edges_per_sec_iter_min"),
-            # NO gather/auto scaling line: a cross-level efficiency of a
-            # strategy measured once per level (and, for auto, possibly
-            # a DIFFERENT winner per level) is physically meaningless —
-            # round 4 emitted gather_8_to_32 = 1.548 (super-linear = the
-            # broadcast bottleneck flapping, not scaling); dropped.
             # same-plan scaling only: join vs join, csr vs csr (best-of
             # is a throughput headline, never a scaling denominator)
             ("scaling_efficiency_triangles_join_8_to_32", 8, 32, "triangles_join_per_sec"),
@@ -789,38 +719,15 @@ def main():
         # each pair scored on median AND min-wall estimators; headline
         # + dual-pass flag computed by the pure scaling_summary().
         throughput.update(scaling_summary(throughput))
-        # headline value = PEAK measured throughput of the job across
-        # all levels and strategies on this box (not pinned to
-        # local[32]: at 32 threads one box's DRAM bus saturates and
-        # occasionally GC-walls; a real 32-core slice of a cluster
-        # brings its own memory channels)
+        # headline value = PEAK measured PageRank throughput across all
+        # levels on this box (not pinned to local[32]: at 32 threads
+        # one box's DRAM bus saturates and occasionally GC-walls; a
+        # real 32-core slice of a cluster brings its own memory
+        # channels)
         peak = max(
-            (
-                max(
-                    s.get("pagerank_edges_per_sec_iter", 0.0),
-                    s.get("pagerank_auto_edges_per_sec_iter", 0.0),
-                )
-                for s in suite.values()
-            ),
+            (s.get("pagerank_edges_per_sec_iter", 0.0) for s in suite.values()),
             default=0.0,
         )
-        # the auto phase's strategy decision, judge-visible in the
-        # compact line: per-level probe walls, the per-step budget the
-        # gather plan had to keep earning, the steady-state winner,
-        # and — when gather was evicted mid-run — at which superstep
-        probes = {
-            f"local{c}": {
-                "shuffle": s["pagerank_auto_probe"].get("shuffle_min_step_sec"),
-                "gather": s["pagerank_auto_probe"].get("gather_min_step_sec"),
-                "budget": s["pagerank_auto_probe"].get("gather_step_budget_sec"),
-                "chosen": s["pagerank_auto_probe"].get("chosen"),
-                "fallback_superstep": s["pagerank_auto_probe"].get(
-                    "fallback_superstep"
-                ),
-            }
-            for c, s in suite.items()
-            if "pagerank_auto_probe" in s
-        }
         host_noise = {
             **{
                 f"local{c}": s.get("steal_pct")
@@ -842,14 +749,13 @@ def main():
                 "triangles": suite.get(32, {}).get("triangles"),
             },
             "throughput": throughput,
-            **({"strategy_probe": probes} if probes else {}),
             "host_steal_pct": host_noise,
             "total_bench_sec": round(elapsed(), 1),
             **results,
         }
         # big-graph criterion evidence recorded by prior exclusive
-        # pair runs (labeled with source file + mtime; never numbers
-        # from THIS run — see recorded_pair_summaries docstring)
+        # pair runs (each row labeled with its source file; never
+        # numbers from THIS run — see recorded_pair_summaries docstring)
         rp = recorded_pair_summaries(BENCH_DIR, n_files)
         if rp:
             out["recorded_pairs"] = rp
@@ -897,25 +803,21 @@ def main():
                 _pinned_suite(
                     cores, edges_path,
                     do_triangles=(cores in (8, 32)) and rep == 0,
-                    # pagerank_auto at 8 AND 32 (informational): probes
-                    # both physical plans, runs the measured winner;
-                    # rep 0 only (~2 min extra per level)
-                    do_gather=(cores in (8, 32)) and rep == 0,
                 )
             )
         # Steal top-up: the queries phase has re-run >5%-steal samples
         # since round 3; the criterion pairs get the same rule. If
         # fewer than 2 repeats at this level ran clean (≤5% hypervisor
         # steal), run up to 2 extra repeats (pagerank only — triangles
-        # and the auto probe stay rep-0) so the median is not itself a
-        # steal-degraded sample (r5 run3: local32 steals 9.7/8.1/1.1 —
+        # stay rep-0) so the median is not itself a steal-degraded
+        # sample (r5 run3: local32 steals 9.7/8.1/1.1 —
         # the reported median was a contended repeat).
         extra = 0
         while (
             len(clean_runs(runs)) < 2 and extra < 2 and elapsed() <= 0.7 * BUDGET
         ):
             runs.append(
-                _pinned_suite(cores, edges_path, do_triangles=False, do_gather=False)
+                _pinned_suite(cores, edges_path, do_triangles=False)
             )
             extra += 1
         med_pool = median_pool(runs)
@@ -926,18 +828,12 @@ def main():
         best_min = min(min(r["pagerank_step_walls"]) for r in runs)
         med["pagerank_min_step_sec"] = best_min
         med["pagerank_edges_per_sec_iter_min"] = med["edge_rows"] / best_min
-        # triangles/gather only measured on the first repeat — carry over
+        # triangles only measured on the first repeat — carry over
         for r in runs:
             for key in (
                 "triangles", "triangle_sec", "triangle_csr_sec",
                 "triangles_per_sec", "triangles_join_per_sec",
                 "triangles_csr_per_sec",
-                "pagerank_auto_probe", "pagerank_auto_sec",
-                "pagerank_auto_iters",
-                "pagerank_auto_median_step_sec",
-                "pagerank_auto_min_step_sec", "pagerank_auto_step_walls",
-                "pagerank_auto_edges_per_sec_iter",
-                "pagerank_auto_edges_per_sec_iter_min",
             ):
                 if key in r and key not in med:
                     med[key] = r[key]
@@ -960,11 +856,11 @@ def main():
     emit(partial=False)
 
 
-def suite_main(cores: int, edges_path: str, do_triangles: bool, do_gather: bool):
+def suite_main(cores: int, edges_path: str, do_triangles: bool):
     """Child-process entrypoint (fresh JVM per parallelism level)."""
     c0 = _read_cpu_stat()
     spark = _session(cores, edges_path)
-    out = run_graph_suite(spark, edges_path, do_triangles, do_gather, cores_hint=cores)
+    out = run_graph_suite(spark, edges_path, do_triangles, cores_hint=cores)
     spark.stop()
     out.update(_steal_pct(c0, _read_cpu_stat()))
     print(json.dumps(out))
@@ -988,12 +884,7 @@ def queries_main():
 
 if __name__ == "__main__":
     if len(sys.argv) > 2 and sys.argv[1] == "--suite":
-        suite_main(
-            int(sys.argv[2]),
-            sys.argv[3],
-            sys.argv[4] == "1",
-            len(sys.argv) > 5 and sys.argv[5] == "1",
-        )
+        suite_main(int(sys.argv[2]), sys.argv[3], sys.argv[4] == "1")
     elif len(sys.argv) > 2 and sys.argv[1] == "--build":
         build_main(int(sys.argv[2]))
     elif len(sys.argv) > 1 and sys.argv[1] == "--queries":

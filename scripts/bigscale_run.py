@@ -54,7 +54,7 @@ def main():
     for cores in LEVELS:
         runs = []
         for rep in range(repeats):
-            s = child(["--suite", str(cores), path, "0", "0"])
+            s = child(["--suite", str(cores), path, "0"])
             runs.append(s)
             edge_rows = s["edge_rows"]
             print(json.dumps({

@@ -18,8 +18,7 @@ from each level's fastest single superstep across all repeats
 but it cannot manufacture a fast superstep at the other level.
 
 Usage: python scripts/pair_run.py [lo] [hi] [repeats] [n_files]
-       (defaults: 2 8 3 2000000; shuffle-plan PageRank only — the
-       gather plan is benched through pagerank_auto in the full suite)
+       (defaults: 2 8 3 2000000)
 Writes BENCH/pair_<lo>_<hi>_latest.json with full samples. The BENCH
 dir is anchored to the repo root (bench.__file__), not the CWD.
 """
@@ -52,19 +51,8 @@ def main():
     hi = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     repeats = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     n_files = int(sys.argv[4]) if len(sys.argv) > 4 else 2_000_000
-    strategy = sys.argv[5] if len(sys.argv) > 5 else "shuffle"
     if hi != 4 * lo:
         raise SystemExit("pair must be N and 4N")
-    if strategy != "shuffle":
-        # the raw-gather suite phase was replaced by pagerank_auto in
-        # round 5 (the plan's bimodal wall made gather-vs-gather
-        # efficiency physically meaningless — round-4 verdict); the
-        # one historical gather pair artifact is preserved as
-        # BENCH/pair_8_32_gather_latest.json
-        raise SystemExit(
-            "only the shuffle strategy is pair-measurable; the gather "
-            "plan is benched through pagerank_auto in the full suite"
-        )
     metric = "pagerank_edges_per_sec_iter"
     step_key = "pagerank_median_step_sec"
     walls_key = "pagerank_step_walls"
@@ -80,7 +68,7 @@ def main():
         # already-measured samples)
         runs = []
         for rep in range(repeats):
-            r = child(["--suite", str(cores), path, "0", "0"])
+            r = child(["--suite", str(cores), path, "0"])
             runs.append(r)
             print(json.dumps({
                 "level": f"local{cores}", "rep": rep,
@@ -112,7 +100,6 @@ def main():
     )
     out = {
         "pair": f"local{lo}_to_local{hi}",
-        "strategy": strategy,
         "scaling_efficiency": eff,
         "scaling_efficiency_minwall": eff_minwall,
         "pass_dual": bool(eff >= 0.8 and eff_minwall >= 0.8),
@@ -127,10 +114,9 @@ def main():
     }
     bench_dir = os.path.join(os.path.dirname(os.path.abspath(bench.__file__)), "BENCH")
     os.makedirs(bench_dir, exist_ok=True)
-    suffix = "" if strategy == "shuffle" else f"_{strategy}"
     size_tag = "" if n_files == 2_000_000 else f"_n{n_files}"
     with open(
-        os.path.join(bench_dir, f"pair_{lo}_{hi}{suffix}{size_tag}_latest.json"), "w"
+        os.path.join(bench_dir, f"pair_{lo}_{hi}{size_tag}_latest.json"), "w"
     ) as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps(out, separators=(",", ":")))

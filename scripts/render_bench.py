@@ -72,70 +72,6 @@ def main():
     lines += [
         "",
         (
-            # round-5 bench runs the strategy probe (pagerank_auto);
-            # older artifacts carry the raw gather phase instead
-            "| PageRank auto-strategy (zero-waste continuation; gather "
-            "evicted on first over-budget superstep), "
-            "local[32] | "
-            f"{t.get('pagerank_auto_edges_per_sec_iter_local32', 0):,.0f} "
-            "edges/sec/iter |"
-            if "pagerank_auto_edges_per_sec_iter_local32" in t
-            else "| PageRank broadcast-gather variant, local[32] | "
-            f"{t.get('pagerank_gather_edges_per_sec_iter_local32', 0):,.0f} "
-            "edges/sec/iter |"
-        ),
-        *(
-            [
-                "| auto-strategy walls (zero-waste continuation probe) @32 | "
-                + ", ".join(
-                    (
-                        f"{k}: {v}"
-                        if k == "fallback_superstep"
-                        else f"{k}: {v:.2f}s"
-                    )
-                    for k, v in sorted(
-                        b["suite_raw"]["local32"]["pagerank_auto_probe"].items()
-                    )
-                    if isinstance(v, (int, float))
-                )
-                + " → chose "
-                + str(
-                    b["suite_raw"]["local32"]["pagerank_auto_probe"].get(
-                        "chosen", "?"
-                    )
-                )
-                + " |"
-            ]
-            if isinstance(
-                b.get("suite_raw", {}).get("local32", {}).get("pagerank_auto_probe"),
-                dict,
-            )
-            else []
-        ),
-        *(
-            [
-                "| PageRank auto-strategy, local[8] | "
-                f"{t['pagerank_auto_edges_per_sec_iter_local8']:,.0f} "
-                "edges/sec/iter — chose "
-                + str(
-                    b.get("suite_raw", {})
-                    .get("local8", {})
-                    .get("pagerank_auto_probe", {})
-                    .get("chosen", "?")
-                )
-                + ", fallback_superstep: "
-                + str(
-                    b.get("suite_raw", {})
-                    .get("local8", {})
-                    .get("pagerank_auto_probe", {})
-                    .get("fallback_superstep")
-                )
-                + " (None = gather stayed in-budget to completion) |"
-            ]
-            if "pagerank_auto_edges_per_sec_iter_local8" in t
-            else []
-        ),
-        (
             "| Triangle counting (best of join/csr) | "
             f"local[8]: {t.get('triangles_per_sec_local8', 0):,.0f}/s, "
             f"local[32]: {t.get('triangles_per_sec_local32', 0):,.0f}/s |"
@@ -157,7 +93,6 @@ def main():
         ("scaling_efficiency_pagerank_2_to_8_minwall", "PageRank local[2] → local[8] (min-wall)"),
         ("scaling_efficiency_pagerank_8_to_32", "PageRank local[8] → local[32] (median)"),
         ("scaling_efficiency_pagerank_8_to_32_minwall", "PageRank local[8] → local[32] (min-wall)"),
-        ("scaling_efficiency_gather_8_to_32", "PageRank gather plan 8 → 32 (informational, 1 sample/level)"),
         ("scaling_efficiency_triangles_join_8_to_32", "Triangles (join plan) local[8] → local[32]"),
         ("scaling_efficiency_triangles_csr_8_to_32", "Triangles (csr plan) local[8] → local[32]"),
         ("scaling_efficiency_triangles_8_to_32", "Triangles local[8] → local[32]"),
@@ -347,17 +282,13 @@ def main():
         "criterion-grade pairs are therefore the ones where the box's "
         "own bandwidth DOES scale ≥4× — 1→4 and 2→8 — which is also the "
         "regime that faithfully models real N→4N executors (4N memory "
-        "buses). The ~22.5M ceiling describes the criterion's SHUFFLE "
-        "superstep (one E-sized random-scatter exchange per step); the "
-        "auto strategy's broadcast-CSR gather mode has a different bus "
-        "profile and is not bound by it — run 6 sustained 41M "
-        "edges/s/iter at local[32] in that mode "
-        "(MEASUREMENT_HISTORY.md, run-6 entry).",
+        "buses). The ~22.5M ceiling describes the PageRank superstep "
+        "(one E-sized random-scatter exchange per step).",
         "",
         "## Headline metric",
         "",
         f"- **{b['metric']}**: {b['value']:,.0f} "
-        "(peak across parallelism levels and strategies on this box; "
+        "(peak across parallelism levels on this box; "
         "see breakdown above)",
         f"- PageRank {b['pr_iters']} iterations wall: "
         f"{q.get('pagerank_5iter_local32')}s @32, "

@@ -24,7 +24,7 @@ import bench  # noqa: E402
 def run_suite(cores: int, path: str) -> dict:
     out = subprocess.run(
         [sys.executable, os.path.abspath(bench.__file__), "--suite",
-         str(cores), path, "0", "0"],
+         str(cores), path, "0"],
         capture_output=True, text=True, timeout=1800,
     )
     if out.returncode != 0:

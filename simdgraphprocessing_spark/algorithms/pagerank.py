@@ -42,10 +42,9 @@ class ShufflePlanContext:
     edges, the persisted (id, outdeg) vertex table, V, and whether any
     vertex dangles. Building it costs one action (a single aggregate
     over vtab that materializes it and yields V and the dangling
-    count); ``pagerank_auto`` runs the shuffle plan twice per call
-    (probe + post-fallback remainder), so it builds this once and
-    threads it through both — the supersteps themselves are
-    unchanged."""
+    count). Callers that time the layout build apart from the
+    supersteps build it themselves and pass it to :func:`pagerank` —
+    the supersteps are the same either way."""
 
     edges: DataFrame
     vtab: DataFrame
@@ -83,7 +82,6 @@ def pagerank(
     tol: float = 1e-10,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
-    initial_ranks: DataFrame | None = None,
     plan: ShufflePlanContext | None = None,
 ) -> IterationResult:
     """Returns IterationResult whose state is ``(id, rank)``.
@@ -91,12 +89,8 @@ def pagerank(
     ``edges`` is a directed edge table (src, dst); for undirected
     graphs pass the symmetrized table. Vertices = src ∪ dst.
 
-    ``initial_ranks``: optional ``(id, rank)`` table to continue a
-    power iteration from (``pagerank_auto``'s strategy hand-off uses
-    this so no probed superstep is ever discarded). Vertices absent
-    from it start at 1/N; the update rule is state-free, so resuming
-    from superstep k here is bit-compatible with having run k
-    supersteps in this plan modulo float reduction order.
+    An empty edge table has no vertices: the result is an empty
+    ``(id, rank)`` state after zero supersteps.
 
     ``plan``: optional prebuilt :class:`ShufflePlanContext`. When
     given, the caller owns its lifetime (no unpersist here) and
@@ -107,17 +101,15 @@ def pagerank(
     if own_plan:
         plan = build_shuffle_plan(edges)
     edges, vtab, n, has_dangling = plan.edges, plan.vtab, plan.n, plan.has_dangling
+    if n == 0:
+        # no vertices: nothing to iterate, and 1/N is undefined
+        if own_plan:
+            plan.close()
+        return IterationResult(vtab.select("id", F.lit(0.0).alias("rank")), 0)
 
     # outdeg rides inside the state so the superstep needs no extra
     # vertex-table join to compute rank/outdeg
-    if initial_ranks is not None:
-        init = vtab.join(
-            initial_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
-        ).select(
-            "id", F.coalesce(F.col("r0"), F.lit(1.0 / n)).alias("rank"), "outdeg"
-        )
-    else:
-        init = vtab.select("id", F.lit(1.0 / n).alias("rank"), "outdeg")
+    init = vtab.select("id", F.lit(1.0 / n).alias("rank"), "outdeg")
 
     compute_delta = tol > 0
 

@@ -59,9 +59,6 @@ class IterationResult:
     iterations: int
     metrics: list[dict] = field(default_factory=list)
     resumed_from: int | None = None
-    # set by strategy-probing wrappers (pagerank_auto): which physical
-    # plan ran and the measured probe walls that decided it
-    strategy_probe: dict | None = None
 
 
 def _local_ckpt_jrdd(df: DataFrame):

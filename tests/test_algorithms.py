@@ -3,6 +3,9 @@ PageRank allclose(1e-6), CC exact, label propagation exact."""
 
 from __future__ import annotations
 
+import functools
+import os
+
 import numpy as np
 import pytest
 
@@ -145,157 +148,56 @@ def test_checkpoint_resume(spark, tmp_path):
     a = {r["id"]: r["rank"] for r in res2.state.collect()}
     b = {r["id"]: r["rank"] for r in clean.state.collect()}
     assert all(abs(a[k] - b[k]) < 1e-12 for k in a)
-
-
-def test_pagerank_gather_matches_shuffle_and_oracle(spark):
-    from simdgraphprocessing_spark.algorithms import pagerank_gather
-
-    pairs = zipf_random_pairs(n=150)
-    n = max(max(p) for p in pairs) + 1
-    e = spark.createDataFrame(pairs, "src long, dst long")
-    A = np.zeros((n, n), dtype=np.int64)
-    for a, b in pairs:
-        A[a, b] = 1
-    got = {
-        r["id"]: r["rank"]
-        for r in pagerank_gather(e, max_iterations=25, tol=1e-12).state.collect()
-    }
-    expect = pagerank_oracle(A, iters=25, tol=1e-12)
-    shuffle = {
-        r["id"]: r["rank"]
-        for r in pagerank(e, max_iterations=25, tol=1e-12).state.collect()
-    }
-    # gather path covers the full dense range [0, n); compare where both
-    # define a vertex, and against the dense numpy oracle everywhere
-    for i in shuffle:
-        assert abs(got[i] - shuffle[i]) < 1e-9
-    got_v = np.array([got[i] for i in range(n)])
-    assert np.allclose(got_v, expect, atol=1e-6)
-
-
-def test_pagerank_gather_checkpoint_resume(spark, tmp_path):
-    from simdgraphprocessing_spark.algorithms import pagerank_gather
-
-    pairs = zipf_random_pairs(n=80)
-    e = edge_df(spark, pairs)
-    ck = str(tmp_path / "prg_ck")
-    pagerank_gather(e, max_iterations=3, tol=0.0, checkpoint_dir=ck)
-    resumed = pagerank_gather(e, max_iterations=6, tol=0.0, checkpoint_dir=ck)
-    assert resumed.resumed_from == 3
-    fresh = pagerank_gather(e, max_iterations=6, tol=0.0)
-    a = {r["id"]: r["rank"] for r in resumed.state.collect()}
-    b = {r["id"]: r["rank"] for r in fresh.state.collect()}
-    assert all(abs(a[i] - b[i]) < 1e-12 for i in a)
     # per-superstep metrics survive the resume
-    assert [m["superstep"] for m in resumed.metrics] == [1, 2, 3, 4, 5, 6]
+    assert [m["superstep"] for m in res2.metrics] == [1, 2, 3, 4, 5, 6]
 
 
-def test_pagerank_auto_probes_and_matches(spark):
-    """pagerank_auto's probed supersteps are REAL supersteps (shuffle
-    probe state hands off to gather via initial_ranks and back on
-    fallback), so whatever strategy path a given run takes, the final
-    ranks must match the plain shuffle plan and the decision must be
-    logged."""
-    from simdgraphprocessing_spark.algorithms import pagerank_auto
-
-    pairs = zipf_random_pairs(n=120)
-    e = edge_df(spark, pairs)
-    res = pagerank_auto(e, max_iterations=8, tol=0.0)
-    probe = res.strategy_probe
-    assert probe is not None and probe["chosen"] in ("shuffle", "gather")
-    assert probe["shuffle_min_step_sec"] > 0
-    # 8 iterations leave 6 after the probe — under the default
-    # amortization floor, so gather must not even be attempted (its
-    # ~5-superstep setup fee can't be recouped) and the gate is logged
-    assert probe["chosen"] == "shuffle"
-    assert "gather_skipped" in probe
-    assert res.iterations == 8
-    assert [m["superstep"] for m in res.metrics] == list(range(1, 9))
-    base = pagerank(e, max_iterations=8, tol=0.0)
-    got = {r["id"]: r["rank"] for r in res.state.collect()}
-    exp = {r["id"]: r["rank"] for r in base.state.collect()}
-    assert set(got) == set(exp)
-    assert all(abs(got[i] - exp[i]) < 1e-9 for i in got)
-
-
-def test_pagerank_auto_gather_keeps_slot_with_big_budget(spark):
-    """With an effectively unlimited per-step budget the gather plan
-    runs the whole remainder: chosen == "gather", no fallback, and the
-    cross-strategy continuation (shuffle steps 1-2, gather steps 3-8)
-    still reproduces the shuffle plan's ranks exactly."""
-    from simdgraphprocessing_spark.algorithms import pagerank_auto
-
-    pairs = zipf_random_pairs(n=120)
-    e = edge_df(spark, pairs)
-    res = pagerank_auto(
-        e,
-        max_iterations=8,
-        tol=0.0,
-        gather_step_budget_factor=1e9,
-        min_gather_amortization_iters=1,
-    )
-    probe = res.strategy_probe
-    assert probe["chosen"] == "gather"
-    assert probe["fallback_superstep"] is None
-    assert probe["gather_min_step_sec"] > 0
-    assert res.iterations == 8
-    base = pagerank(e, max_iterations=8, tol=0.0)
-    got = {r["id"]: r["rank"] for r in res.state.collect()}
-    exp = {r["id"]: r["rank"] for r in base.state.collect()}
-    assert all(abs(got[i] - exp[i]) < 1e-9 for i in got)
+@pytest.mark.parametrize(
+    "algorithm",
+    [
+        pytest.param(functools.partial(pagerank, tol=0.0), id="pagerank"),
+        connected_components,
+        label_propagation,
+    ],
+)
+def test_resume_from_torn_checkpoint(spark, tmp_path, algorithm):
+    """A superstep whose parquet never committed ``_SUCCESS`` is not
+    resumed from: the run restarts after the last complete superstep
+    and ends where an uninterrupted run ends."""
+    # a 12-vertex path: min labels need 11 hops, so neither CC nor LPA
+    # settles within the 3 checkpointed supersteps
+    e = edge_df(spark, [(i, i + 1) for i in range(11)])
+    ck = tmp_path / "ck"
+    algorithm(e, max_iterations=3, checkpoint_dir=str(ck), checkpoint_every=1)
+    os.remove(ck / "superstep=3" / "_SUCCESS")
+    res = algorithm(e, max_iterations=6, checkpoint_dir=str(ck), checkpoint_every=1)
+    clean = algorithm(e, max_iterations=6)
+    assert clean.iterations >= 4
+    assert res.resumed_from == 2 and res.iterations == clean.iterations
+    assert [m["superstep"] for m in res.metrics] == list(range(1, res.iterations + 1))
+    got, want = dict(res.state.collect()), dict(clean.state.collect())
+    # ranks within 1e-12; integer labels, exactly
+    assert got.keys() == want.keys()
+    assert all(abs(got[v] - want[v]) < 1e-12 for v in want)
 
 
-def test_pagerank_auto_evicts_slow_gather_mid_run(spark):
-    """A zero budget makes gather's first superstep over-budget: it
-    must still COUNT (post-step check — no discarded work), then the
-    shuffle plan finishes the run from gather's rank state. The
-    composed run matches plain shuffle and records where the fallback
-    happened."""
-    from simdgraphprocessing_spark.algorithms import pagerank_auto
-
-    pairs = zipf_random_pairs(n=120)
-    e = edge_df(spark, pairs)
-    res = pagerank_auto(
-        e,
-        max_iterations=8,
-        tol=0.0,
-        gather_step_budget_factor=0.0,
-        min_gather_amortization_iters=1,
-    )
-    probe = res.strategy_probe
-    assert probe["chosen"] == "shuffle"
-    # probe(2 shuffle) + 1 counted-but-evicted gather step
-    assert probe["fallback_superstep"] == 3
-    assert res.iterations == 8
-    assert [m["superstep"] for m in res.metrics] == list(range(1, 9))
-    assert res.metrics[2].get("timeout_exceeded") is True
-    base = pagerank(e, max_iterations=8, tol=0.0)
-    got = {r["id"]: r["rank"] for r in res.state.collect()}
-    exp = {r["id"]: r["rank"] for r in base.state.collect()}
-    assert all(abs(got[i] - exp[i]) < 1e-9 for i in got)
-
-
-def test_pagerank_auto_demotes_oversized_vertex_space(spark, monkeypatch):
-    """Graphs beyond the gather plan's dense-vector cap must auto-pick
-    the shuffle plan with the demotion visible in the probe log."""
-    import importlib
-
-    from simdgraphprocessing_spark.algorithms import pagerank_auto
-
-    # the package re-exports the function under the module's name, so
-    # resolve the real module through importlib
-    pg = importlib.import_module(
-        "simdgraphprocessing_spark.algorithms.pagerank_gather"
-    )
-    monkeypatch.setattr(pg, "MAX_DENSE_VERTICES", 10)
-    pairs = zipf_random_pairs(n=120)
-    e = edge_df(spark, pairs)
-    res = pagerank_auto(
-        e, max_iterations=3, tol=0.0, min_gather_amortization_iters=1
-    )
-    assert res.strategy_probe["chosen"] == "shuffle"
-    assert res.strategy_probe["gather_min_step_sec"] is None
-    assert "gather_skipped" not in res.strategy_probe  # demoted, not gated
+@pytest.mark.parametrize("algorithm", [pagerank, connected_components, label_propagation])
+@pytest.mark.parametrize("pairs", [[], [(0, 0), (1, 1)]], ids=["empty", "self_loops_only"])
+def test_degenerate_inputs(spark, algorithm, pairs):
+    """An empty edge table gives an empty state; a graph of self-loops
+    only keeps every vertex to itself: identity labels, and an even
+    split of the rank (each vertex links only to itself)."""
+    res = algorithm(spark.createDataFrame(pairs, "src long, dst long"))
+    got = dict(res.state.collect())
+    if not pairs:
+        assert got == {}
+    elif algorithm is pagerank:
+        assert got.keys() == {0, 1} and all(abs(r - 0.5) < 1e-12 for r in got.values())
+    else:
+        assert got == {0: 0, 1: 1}
+    if algorithm is pagerank and not pairs:
+        assert res.iterations == 0 and res.metrics == []
+        assert res.state.schema.simpleString() == "struct<id:bigint,rank:double>"
 
 
 def test_supersteps_free_localcheckpoint_blocks(spark):
@@ -318,72 +220,6 @@ def test_supersteps_free_localcheckpoint_blocks(spark):
     assert n_persistent() - base <= 4, (base, n_persistent())
     assert res.iterations == 8
     res.state.unpersist()
-
-
-def test_sustained_exceeded_pure_rules():
-    """Lower-median over post-setup walls: the setup step never
-    counts, <2 post-setup samples never evict, and a single slow
-    burst among good steps never evicts (lower median = the faster
-    of two)."""
-    from simdgraphprocessing_spark.algorithms.pagerank_gather import (
-        _sustained_exceeded,
-    )
-
-    assert _sustained_exceeded([], 1.0) is False
-    assert _sustained_exceeded([9.0], 1.0) is False  # setup only
-    assert _sustained_exceeded([9.0, 5.0], 1.0) is False  # 1 sample
-    # run-6 local[8] shape: 12s sustained vs 7.3s budget -> evict
-    assert _sustained_exceeded([11.0, 12.4, 12.0], 7.3) is True
-    # run-6 local[32] shape: sub-second sustained vs 3.0s budget -> keep
-    assert _sustained_exceeded([9.0, 0.93, 0.81], 3.0) is False
-    # one steal burst among good steps -> keep (lower median)
-    assert _sustained_exceeded([9.0, 1.0, 6.0], 3.0) is False
-    assert _sustained_exceeded([9.0, 1.0, 6.0, 1.1], 3.0) is False
-
-
-def test_pagerank_gather_sustained_eviction(spark):
-    """With the catastrophic per-step budget too loose to ever trip,
-    a sustained budget of zero must evict at exactly the minimum
-    3 counted steps (setup + 2 post-setup samples), flagged so
-    pagerank_auto's phase 3 takes over."""
-    from simdgraphprocessing_spark.algorithms import pagerank_gather
-
-    pairs = zipf_random_pairs(n=120)
-    e = spark.createDataFrame(pairs, "src long, dst long")
-    res = pagerank_gather(
-        e,
-        max_iterations=8,
-        tol=0.0,
-        step_timeout_sec=1e9,
-        sustained_budget_sec=0.0,
-    )
-    assert res.iterations == 3
-    assert res.metrics[-1]["sustained_exceeded"] is True
-    assert res.metrics[-1]["timeout_exceeded"] is True
-    assert not any("sustained_exceeded" in m for m in res.metrics[:-1])
-
-
-def test_pagerank_auto_records_sustained_budget(spark):
-    """The probe log carries both yardsticks: the catastrophic
-    per-step budget (x median probe wall) and the sustained budget
-    (x min probe wall), with sustained <= per-step by construction."""
-    from simdgraphprocessing_spark.algorithms import pagerank_auto
-
-    pairs = zipf_random_pairs(n=120)
-    e = edge_df(spark, pairs)
-    res = pagerank_auto(
-        e, max_iterations=12, tol=0.0, min_gather_amortization_iters=1
-    )
-    probe = res.strategy_probe
-    assert probe["gather_sustained_budget_sec"] is not None
-    assert (
-        probe["gather_sustained_budget_sec"]
-        <= probe["gather_step_budget_sec"] + 1e-9
-    )
-    base = pagerank(e, max_iterations=12, tol=0.0)
-    got = {r["id"]: r["rank"] for r in res.state.collect()}
-    exp = {r["id"]: r["rank"] for r in base.state.collect()}
-    assert all(abs(got[i] - exp[i]) < 1e-9 for i in got)
 
 
 # ---- superstep plan shape: static, co-partitioned materialization ----

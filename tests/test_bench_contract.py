@@ -45,9 +45,6 @@ def _pessimistic_out() -> dict:
     queries.update({f"triangles_local{c}": 1234.567 for c in (32, 8)})
     queries.update({f"triangles_csr_local{c}": 1234.567 for c in (32, 8)})
     queries.update(
-        {f"pagerank_auto_5iter_local{c}": 12345.678 for c in (32, 8)}
-    )
-    queries.update(
         {
             name: 123.456
             for name in (
@@ -62,10 +59,6 @@ def _pessimistic_out() -> dict:
         **{f"pagerank_edges_per_sec_iter_local{c}": 12345678.9 for c in (32, 8, 2)},
         **{f"pagerank_edges_per_sec_iter_min_local{c}": 12345678.9 for c in (32, 8, 2)},
         **{f"triangles_per_sec_local{c}": 123456.7 for c in (32, 8)},
-        **{
-            f"pagerank_auto_edges_per_sec_iter_local{c}": 12345678.9
-            for c in (32, 8)
-        },
         "scaling_efficiency_pagerank_2_to_8": 0.888,
         "scaling_efficiency_pagerank_2_to_8_minwall": 0.888,
         "scaling_efficiency_pagerank_8_to_32": 0.888,
@@ -82,10 +75,6 @@ def _pessimistic_out() -> dict:
         "sf": 0.1,
         "graph": {"edge_rows": 38_269_442, "n_files": 2_000_000, "triangles": 297_934},
         "throughput": throughput,
-        "strategy_probe": {
-            f"local{c}": {"shuffle": 2.345, "gather": 3.456, "chosen": "shuffle"}
-            for c in (32, 8)
-        },
         "host_steal_pct": {
             **{f"local{c}": 12.34 for c in (32, 8, 2)},
             "queries": 12.34,
@@ -131,7 +120,7 @@ def test_compact_line_stays_under_driver_tail_buffer():
 
 def test_assemble_line_degrades_in_order():
     """Oversized payload: first the graph dict is dropped, then the
-    per-level triangle/gather query entries — never an unparseable or
+    per-level triangle query entries — never an unparseable or
     over-limit line, and the headline keys always survive."""
     out = _pessimistic_out()
     # inflate: a tiny limit forces both fallbacks
@@ -139,7 +128,7 @@ def test_assemble_line_degrades_in_order():
     parsed = json.loads(line)
     assert "graph" not in parsed
     assert not any(
-        k.startswith(("triangles_local", "triangles_csr_local", "pagerank_auto_"))
+        k.startswith(("triangles_local", "triangles_csr_local"))
         for k in parsed["queries"]
     )
     assert "scaling_efficiency_headline" in parsed["throughput"]
@@ -341,7 +330,7 @@ def test_criterion_verdict_not_met_without_any_dual_pass():
 
 
 def test_assemble_line_drops_recorded_pairs_last_when_criterion_present():
-    """When the criterion verdict is in the line it subsumes the
+    """When a met criterion verdict is in the line it subsumes the
     decisive recorded pair (numbers + src), so recorded_pairs may be
     dropped entirely under extreme pressure — the verdict itself and
     the headline throughput keys always survive."""
@@ -361,3 +350,9 @@ def test_assemble_line_drops_recorded_pairs_last_when_criterion_present():
     assert "scaling_efficiency_headline" in parsed["throughput"]
     # original dict not mutated
     assert "recorded_pairs" in out
+    # a verdict that is not met names no pair: the recorded rows are
+    # the only near-miss evidence in the line, so they stay
+    out["scaling_criterion"] = {"met": False, "basis": None}
+    parsed = json.loads(bench.assemble_line(out, limit=900))
+    assert parsed["scaling_criterion"] == {"met": False, "basis": None}
+    assert [r["pair"] for r in parsed["recorded_pairs"]] == ["local2_to_local8"]

@@ -5,30 +5,23 @@ Headline numbers (BASELINE.md protocol):
   corpus-derived link graph sized by the scale factor, measured as the
   SAME job at N and 4N cores on identical cached input — the
   in-sandbox proxy for the north rule's N vs 4N executor scaling;
-  efficiency = (T_4N/T_N)/4, target ≥ 0.8. Both 4× pairs (2→8 and
-  8→32) run medians-of-3 fresh processes per level. Since round 4 each
-  pair is scored by TWO estimators computed from the same samples:
-  the MEDIAN superstep wall (sustained throughput, contention and all)
-  and the MIN superstep wall (uncontended capability — the fastest
-  single superstep any repeat achieved at that level, immune to the
-  oversubscribed host's steal bursts). The criterion pair passes only
-  when BOTH estimators clear 0.8 in the same run — a single
-  noise-assisted median can no longer decide the round (round 3's
-  0.911 headline was exactly that: a steal-depressed denominator).
-  Since round 5 a level whose repeats ran mostly contended (fewer
-  than 2 samples at ≤5% steal) tops up with extra pagerank-only
-  repeats, and the median is taken over clean samples when ≥2 exist —
-  steal only ever depresses a sample, so excluding contended repeats
-  cannot manufacture throughput.
-* Per-query seconds for the driver-testdata queries at local[32],
-  each query re-run once if its sample carried >5% hypervisor steal
-  (better reading kept, both logged in the full detail file).
-
-Phase order puts the criterion evidence first — local[32], local[8],
-local[2], then the query sweep — so the soft wall budget starves the
-optional phases, never the 2→8 / 8→32 pairs (round 3's local[2] was
-truncated to one sample by a budget spent on local[4], which fed no
-reported pair; local[4] is dropped).
+  efficiency = (T_4N/T_N)/4, target ≥ 0.8. ``measure_level`` scores
+  each level and ``pair_scores`` each pair; ``scripts/pair_run.py``
+  calls the same two functions, so an in-run pair and a recorded one
+  are scored by one rule:
+  - each level runs 3 fresh-process repeats; a level with fewer than
+    2 samples at ≤5% hypervisor steal tops up with up to 2 extra
+    pagerank-only repeats, and the median (lower middle) is taken over
+    the clean samples when ≥2 exist — steal only ever depresses a
+    sample, so excluding contended repeats cannot manufacture
+    throughput;
+  - each pair is scored by TWO estimators from the same samples: the
+    MEDIAN superstep wall (sustained throughput) and the MIN superstep
+    wall over all repeats (uncontended capability). It passes only when
+    BOTH clear 0.8 — round 3's 0.911 headline was a single
+    steal-depressed denominator.
+* Per-query seconds for the driver-testdata queries at local[32]
+  (min of ≥2 samples, each with its own steal window).
 
 The final printed line is kept under ~1,700 characters (the driver
 parses only the tail of stdout); full per-run detail — repeat samples,
@@ -75,12 +68,10 @@ BENCH_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "false",
     "spark.driver.memory": "24g",
 }
-# experiment knobs (recorded in CONF_NOTE via the env themselves):
-# SPARK_GRAFT_DRIVER_MEM sizes the heap to the graph under test —
-# 24g is tuned for the default 2M-file graph; the 8M-file graph's 4×
-# working set turns G1 mixed collections into ~10 s superstep stalls
-# at that size. SPARK_GRAFT_JAVA_OPTS adds e.g. -Xlog:gc* for pause
-# forensics.
+# SPARK_GRAFT_DRIVER_MEM overrides the 24g heap, which is tuned for the
+# default 2M-file graph: at 8M files the 4x working set makes G1 mixed
+# collections stall supersteps for ~10 s, so size the heap to the graph
+# under test. The override is recorded in CONF_NOTE with the rest.
 if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
     BENCH_CONF["spark.driver.memory"] = os.environ["SPARK_GRAFT_DRIVER_MEM"]
 # ExplicitGCInvokesConcurrent: the 45s periodic cleaner GC (below) calls
@@ -88,19 +79,12 @@ if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
 # default — measured as a 73s superstep (vs the 21-23s plateau) when it
 # landed mid-superstep on the 8M-file graph. As a concurrent cycle it
 # still lets the ContextCleaner reap shuffle files without the stall.
+# Mirrored to executors: a no-op under local[N] (driver == executor
+# JVM), but GC settings that reached only the driver would un-pin every
+# executor's collector if the session helper ran on a real master.
 _GC_OPT = "-XX:+ExplicitGCInvokesConcurrent"
-BENCH_CONF["spark.driver.extraJavaOptions"] = (
-    _GC_OPT + " " + os.environ["SPARK_GRAFT_JAVA_OPTS"]
-    if os.environ.get("SPARK_GRAFT_JAVA_OPTS")
-    else _GC_OPT
-)
-# mirrored to executors: a no-op under local[N] (driver == executor JVM)
-# but correct if this session helper is ever reused with a real master —
-# GC pinning that silently reached only the driver would un-pin every
-# executor's collector and invalidate the pass_dual comparison there
-BENCH_CONF["spark.executor.extraJavaOptions"] = BENCH_CONF[
-    "spark.driver.extraJavaOptions"
-]
+BENCH_CONF["spark.driver.extraJavaOptions"] = _GC_OPT
+BENCH_CONF["spark.executor.extraJavaOptions"] = _GC_OPT
 CONF_NOTE = {
     **BENCH_CONF,
     "spark.sql.adaptive.enabled": "true",
@@ -157,38 +141,27 @@ def _session(cores: int, edges_path: str | None = None):
     from simdgraphprocessing_spark.session import get_spark
 
     conf = dict(BENCH_CONF)
-    # Shuffle files live on the /dev/shm ramdisk and the ContextCleaner
-    # frees them only when a JVM GC collects the ShuffleDependency —
-    # Spark's default periodic GC is 30 MIN, so an iterative job that
-    # outruns organic old-gen GC accumulates every superstep's shuffle
-    # in RAM. Measured on the 8M-file graph at local[8]: superstep
-    # walls degraded monotonically 22s → 77s within one run (CPU 76%
-    # idle, zero steal, no GC pause >0.3s) as ~4 GB/superstep of
-    # uncompressed shuffle crowded the page cache. A 45s periodic GC
-    # bounds the backlog; for big inputs (>0.5 GB parquet ≈ >100M edge
-    # rows) shuffle compression goes back on — lz4 is ~4× on int
-    # columns and the disk-I/O-confound argument for keeping it off
-    # only holds when the whole backlog fits comfortably beside the
-    # page cache. Keyed on the INPUT, so both levels of a scaling pair
-    # always run the identical conf.
+    # The ContextCleaner frees ramdisk shuffle files only when a JVM GC
+    # collects their ShuffleDependency, and Spark's periodic GC is 30
+    # MIN: on the 8M-file graph at local[8], superstep walls degraded
+    # 22s → 77s within one run (CPU 76% idle, zero steal) as ~4 GB per
+    # superstep of uncompressed shuffle crowded the page cache. A 45s
+    # periodic GC bounds the backlog, and big inputs (>0.5 GB parquet)
+    # compress shuffles again (lz4 is ~4× on int columns). Keyed on the
+    # INPUT, so both levels of a scaling pair run the identical conf.
     conf["spark.cleaner.periodicGC.interval"] = "45s"
     if edges_path and _dir_bytes(edges_path) > 500 * 1024 * 1024:
         conf["spark.shuffle.compress"] = "true"
         conf["spark.shuffle.spill.compress"] = "true"
     # GC capacity proportional to the level, not the host: HotSpot
-    # sizes its GC pools from the BOX's 32 CPUs no matter what
-    # local[N] is, so a local[2] "slice" gets ~23 parallel GC threads
-    # of idle silicon a real 2-core executor would never have — free
-    # GC capacity that inflates the low-core denominator of every
-    # N → 4N pair. On a real cluster the GC-threads-per-core ratio is
-    # constant across cluster sizes (each executor JVM sizes GC from
-    # its own cores); pinning ParallelGCThreads = cores and
-    # ConcGCThreads = cores/4 (HotSpot's own default ratio) restores
-    # that invariant for the proxy. Applied identically at every
-    # level, recorded in CONF_NOTE.
+    # sizes its GC pools from the BOX's 32 CPUs, so a local[2] "slice"
+    # would get ~23 parallel GC threads a real 2-core executor never
+    # has — free capacity that inflates the low-core denominator of
+    # every N → 4N pair. ParallelGCThreads = cores and ConcGCThreads =
+    # cores/4 (HotSpot's own ratio) keep GC threads per core constant
+    # across levels, as on a cluster. Recorded in CONF_NOTE.
     conf["spark.driver.extraJavaOptions"] = (
-        conf.get("spark.driver.extraJavaOptions", _GC_OPT)
-        + f" -XX:ParallelGCThreads={cores} -XX:ConcGCThreads={max(1, cores // 4)}"
+        _GC_OPT + f" -XX:ParallelGCThreads={cores} -XX:ConcGCThreads={max(1, cores // 4)}"
     )
     conf["spark.executor.extraJavaOptions"] = conf["spark.driver.extraJavaOptions"]
     return get_spark(
@@ -199,25 +172,30 @@ def _session(cores: int, edges_path: str | None = None):
     )
 
 
-def _pinned_suite(cores: int, edges_path: str, do_triangles: bool) -> dict:
-    """Run the graph suite in a FRESH subprocess per parallelism level
-    (no inherited JVM heap/JIT state between levels). Parallelism is
-    limited by ``local[N]`` + ``shuffle.partitions=2N`` alone — NOT
-    cpu pinning: measured on this sandbox, ``taskset -c 0-31`` on the
-    32-vCPU box HALVED throughput (6.1M vs 10.1M edges/s/iter; the
-    hypervisor schedules vCPUs and hard affinity defeats it). GC/IO
-    threads may exceed N, which matches a real cluster node where an
-    N-core executor shares a wider host."""
+# a local[2] repeat on the 8M-file graph runs ~20 min; 90 min leaves
+# headroom for a contended one
+CHILD_TIMEOUT = 5400
+
+
+def run_child(args: list[str]) -> dict:
+    """Run ``bench.py <args>`` in a FRESH interpreter and return the JSON
+    of its last stdout line. Every Spark phase runs this way: no JVM
+    heap/JIT state is inherited between levels, and a stopped but
+    resident parent JVM measurably degrades child suites (PageRank@32
+    dropped 10.1M → 2.1M edges/s/iter when the suites ran after a
+    parent queries phase). Parallelism is limited by ``local[N]`` +
+    ``shuffle.partitions=2N`` alone — NOT cpu pinning: ``taskset -c
+    0-31`` on the 32-vCPU box HALVED throughput (6.1M vs 10.1M
+    edges/s/iter; the hypervisor schedules vCPUs and hard affinity
+    defeats it)."""
     import subprocess
 
-    cmd = [
-        sys.executable, os.path.abspath(__file__),
-        "--suite", str(cores), edges_path,
-        "1" if do_triangles else "0",
-    ]
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=1800)
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), *args],
+        capture_output=True, text=True, timeout=CHILD_TIMEOUT,
+    )
     if out.returncode != 0:
-        raise RuntimeError(f"suite subprocess failed: {out.stderr[-2000:]}")
+        raise RuntimeError(f"child {args} failed: {out.stderr[-2000:]}")
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
@@ -258,20 +236,14 @@ def run_graph_suite(
     n_edge_rows = edges.count()  # directed rows (symmetrized)
 
     # warm-up (JIT, code-gen, page cache): two iterations — one is not
-    # enough for C2 to compile the join/agg loops, which skews the
-    # first measured run. On BIG inputs the ramp is much longer: the
-    # 8M-file graph at local[8] walks 69s → 34s → ... → 21-23s plateau
-    # over ~10 supersteps (C2 tiers + G1 sizing the heap to the 4×
-    # working set), so a 2-superstep warm-up leaves the first measured
-    # run reporting the ramp, not the engine. Steady-state-first is the
-    # standard JMH discipline; both levels of a scaling pair get the
-    # IDENTICAL warm-up, keyed on the input.
+    # enough for C2 to compile the join/agg loops. Big inputs ramp far
+    # longer: the 8M-file graph at local[8] walks 69s → 34s → ... →
+    # 21-23s over ~10 supersteps (C2 tiers + G1 heap sizing). Keyed on
+    # the input, so both levels of a scaling pair warm up identically.
     warm_iters = 10 if _dir_bytes(edges_path) > 500 * 1024 * 1024 else 2
     pagerank(edges, max_iterations=warm_iters, tol=0.0)
-    # robust measurement: two runs, per-superstep walls from the
-    # driver's metrics, take the median of all steady-state steps —
-    # local-mode JVMs have multi-second GC outliers that a single
-    # total-wall sample cannot separate from real throughput
+    # two runs; the median over all per-superstep walls, which a
+    # single total-wall sample cannot separate from GC outliers
     walls: list[float] = []
     pr_total = []
     for _ in range(2):
@@ -280,6 +252,8 @@ def run_graph_suite(
         pr_total.append(time.time() - t0)
         walls.extend(m["wall_sec"] for m in res.metrics)
     walls.sort()
+    # the slower middle wall on even counts: the same pessimistic
+    # lower-middle throughput rule as pick_median
     med_step = walls[len(walls) // 2]
     min_step = walls[0]
 
@@ -293,36 +267,27 @@ def run_graph_suite(
         "pagerank_edges_per_sec_iter_min": n_edge_rows / min_step,
     }
     if do_triangles:
-        # fresh plan per run — re-collecting the same DataFrame would
-        # reuse the prior job's shuffle files and time nothing.
-        # Both physical methods timed: join (scale-default, pure
-        # codegen) and csr (broadcast shared-CSR + Arrow kernel — the
-        # reference's execution shape; ~2x faster on the power-law
-        # bench graph since round 2's batched kernel).
-        # low-core levels get one timed run after warm-up (the join
-        # takes ~2 min/run at local[8] on the big graph; the warm-up
-        # already absorbs JIT so min-of-2 buys little there), high-core
-        # levels keep min-of-2 against GC outliers
+        # Both physical methods, a fresh plan per run (re-collecting one
+        # DataFrame would reuse its shuffle files): join (pure codegen)
+        # and csr (broadcast shared-CSR + Arrow kernel). One timed run
+        # after warm-up below local[32] (the join takes ~2 min/run at
+        # local[8] on the big graph), min-of-2 at 32 against GC outliers.
         tri_runs = 2 if cores_hint >= 32 else 1
-        triangle_count(edges).collect()  # warm
-        tri_secs = []
-        for _ in range(tri_runs):
-            t0 = time.time()
-            triangles = triangle_count(edges).collect()[0]["triangles"]
-            tri_secs.append(time.time() - t0)
-        tri_sec = min(tri_secs)
-        triangle_count(edges, method="csr").collect()  # warm
-        csr_secs = []
-        for _ in range(tri_runs):
-            t0 = time.time()
-            triangle_count(edges, method="csr").collect()
-            csr_secs.append(time.time() - t0)
-        csr_sec = min(csr_secs)
+
+        def timed(method: str) -> tuple[int, float]:
+            triangle_count(edges, method=method).collect()  # warm
+            secs = []
+            for _ in range(tri_runs):
+                t0 = time.time()
+                n = triangle_count(edges, method=method).collect()[0]["triangles"]
+                secs.append(time.time() - t0)
+            return n, min(secs)
+
+        triangles, tri_sec = timed("join")
+        _, csr_sec = timed("csr")
         best = min(tri_sec, csr_sec)
-        # per-method throughputs reported alongside best-of: the N vs 4N
-        # scaling claim must compare the SAME physical plan at both
-        # levels (join vs join, csr vs csr) — best-of could silently
-        # switch plans between levels and fake (or hide) scaling
+        # per-method throughputs beside best-of: a scaling pair must
+        # compare the SAME plan at both levels, never a best-of switch
         out.update(
             {
                 "triangles": int(triangles),
@@ -340,17 +305,11 @@ def run_graph_suite(
 def run_testdata_queries(spark) -> dict:
     """Per-query wall seconds for representative driver queries.
 
-    Every query takes TWO samples (both logged with their own
-    hypervisor-steal window in ``detail``) and reports the MIN — the
-    uncontended-capability estimator the scaling pairs already use.
-    Round 5 made the second sample unconditional: it used to run only
-    when the first carried >5% steal, which made the judge-visible
-    numbers an inconsistent mix of cold singles and warm minimums
-    across rounds (round 3's 8%-steal phase re-ran several queries —
-    warm minimums; round 4's quiet phase did not — cold singles — and
-    the same unchanged code appeared to "regress" 20% round-over-round:
-    dict-MinHash 24.3 → 29.2 → 34.9 s while its plan was byte-identical
-    since round 3). A third sample runs only if both carried >5% steal.
+    Every query takes TWO samples (each logged with its own steal
+    window in ``detail``) and reports the MIN, plus a third only if
+    both carried >5% steal. The second sample is unconditional so every
+    round reports warm minimums (a conditional re-run made unchanged
+    code look 20% slower round-over-round; MEASUREMENT_HISTORY.md).
     """
     import __spark_entry__ as E
 
@@ -414,42 +373,112 @@ def pick_median(runs: list[dict], key: str = "pagerank_edges_per_sec_iter") -> d
     return runs[(len(runs) - 1) // 2]
 
 
-def scaling_summary(throughput: dict) -> dict:
-    """North-rule headline from per-pair efficiencies (pure function).
+MEDIAN_KEY = "pagerank_edges_per_sec_iter"
+MINWALL_KEY = "pagerank_edges_per_sec_iter_min"
+TRIANGLE_KEYS = (
+    "triangles", "triangle_sec", "triangle_csr_sec",
+    "triangles_per_sec", "triangles_join_per_sec", "triangles_csr_per_sec",
+)
 
-    Candidates are the pagerank pairs only — medians-of-3 fresh
-    processes at both levels.
 
-    Each candidate pair carries two estimators from the same samples:
-    ``..._2_to_8`` (median superstep walls) and ``..._2_to_8_minwall``
-    (fastest superstep at each level). The headline pair is the one
-    with the best WORSE-estimator value, and ``scaling_pass_dual`` is
-    true only when both estimators clear 0.8 together — the round-4
-    anti-lottery rule (a steal burst can depress one level's median,
-    but it cannot manufacture a fast superstep at the other).
-    """
-    pair_names = {
-        "scaling_efficiency_pagerank_2_to_8": "local2_to_local8",
-        "scaling_efficiency_pagerank_8_to_32": "local8_to_local32",
+def measure_level(
+    cores: int, edges_path: str, repeats: int,
+    triangles: bool = False, deadline: float = float("inf"),
+) -> tuple[dict, dict]:
+    """Score one parallelism level — the one estimator ``main`` and
+    ``scripts/pair_run.py`` share. Runs ``repeats`` fresh-process
+    suites (triangles on the first only, if asked; repeats after the
+    first stop at ``deadline``), then the steal top-up, then takes the
+    ``pick_median`` of ``median_pool`` and the min-wall over ALL
+    repeats. Returns (the median suite dict carrying the min-wall and
+    triangle keys, the per-sample detail)."""
+    runs: list[dict] = []
+
+    def run(tri: bool) -> None:
+        r = run_child(["--suite", str(cores), edges_path, "1" if tri else "0"])
+        runs.append(r)
+        print(json.dumps({  # progress, so a killed run still shows its samples
+            "level": f"local{cores}", "rep": len(runs) - 1,
+            "edges_per_sec_iter": round(r[MEDIAN_KEY], 1),
+            "min_step_sec": round(min(r["pagerank_step_walls"]), 3),
+            "steal_pct": r.get("steal_pct"),
+        }), file=sys.stderr, flush=True)
+
+    for rep in range(repeats):
+        if rep > 0 and time.time() > deadline:
+            break
+        run(triangles and rep == 0)
+    planned = len(runs)
+    # Steal top-up: if fewer than 2 repeats ran clean (≤5% hypervisor
+    # steal), run up to 2 extra pagerank-only repeats so the median is
+    # not itself a steal-degraded sample (r5 run3: local32 steals
+    # 9.7/8.1/1.1 — the reported median was a contended repeat).
+    while len(clean_runs(runs)) < 2 and len(runs) < planned + 2 and time.time() <= deadline:
+        run(False)
+    pool = median_pool(runs)
+    med = dict(pick_median(pool))
+    # min-wall estimator: the fastest single superstep ANY repeat
+    # achieved — uncontended capability, robust to steal bursts that
+    # depress a whole repeat's median
+    med["pagerank_min_step_sec"] = min(min(r["pagerank_step_walls"]) for r in runs)
+    med[MINWALL_KEY] = med["edge_rows"] / med["pagerank_min_step_sec"]
+    for r in runs:  # triangles ran on the first repeat only
+        med.update({k: r[k] for k in TRIANGLE_KEYS if k in r and k not in med})
+    samples = [round(r[MEDIAN_KEY], 1) for r in runs]
+    detail = {
+        "n_samples": len(runs),
+        "topped_up": len(runs) - planned,
+        "samples_edges_per_sec_iter": samples,
+        "rel_spread": round((max(samples) - min(samples)) / max(samples), 3),
+        "steal_pcts": [r.get("steal_pct") for r in runs],
+        "median_step_walls": [round(r["pagerank_median_step_sec"], 3) for r in runs],
+        "min_step_walls": [round(min(r["pagerank_step_walls"]), 3) for r in runs],
+        # which samples fed the median (clean-only when ≥2 ran ≤5% steal)
+        "median_pool_n": len(pool),
     }
-    out: dict = {}
-    scored = {}
-    for key, name in pair_names.items():
-        med = throughput.get(key)
-        mn = throughput.get(key + "_minwall")
-        if med is None:
-            continue
-        worse = med if mn is None else min(med, mn)
-        scored[key] = (worse, med, mn, name)
+    return med, detail
+
+
+def efficiency(levels: dict, lo: int, hi: int, key: str) -> float | None:
+    """(T_hi / T_lo) / (hi / lo) over two ``measure_level`` medians."""
+    a, b = levels.get(lo, {}).get(key), levels.get(hi, {}).get(key)
+    return round((b / a) / (hi / lo), 3) if a and b else None
+
+
+def dual_pass(eff: float | None, eff_minwall: float | None) -> bool:
+    return bool(eff is not None and eff_minwall is not None
+                and eff >= 0.8 and eff_minwall >= 0.8)
+
+
+def pair_scores(levels: dict, lo: int, hi: int) -> tuple:
+    """(eff, eff_minwall, pass_dual) of the lo → hi PageRank pair: the
+    MEDIAN estimator (sustained) and the MIN-WALL one (uncontended
+    capability) from the same samples, passing only when both clear
+    0.8 — a steal burst can depress one level's median, but it cannot
+    manufacture a fast superstep at the other."""
+    eff = efficiency(levels, lo, hi, MEDIAN_KEY)
+    eff_minwall = efficiency(levels, lo, hi, MINWALL_KEY)
+    return eff, eff_minwall, dual_pass(eff, eff_minwall)
+
+
+def scaling_summary(throughput: dict) -> dict:
+    """North-rule headline from the in-run PageRank pair efficiencies
+    (pure function): the pair with the best WORSE estimator, and
+    ``scaling_pass_dual`` when both of its estimators clear 0.8."""
+    scored = []
+    for lo, hi in ((2, 8), (8, 32)):
+        med = throughput.get(f"scaling_efficiency_pagerank_{lo}_to_{hi}")
+        mn = throughput.get(f"scaling_efficiency_pagerank_{lo}_to_{hi}_minwall")
+        if med is not None:
+            worse = med if mn is None else min(med, mn)
+            scored.append((worse, med, mn, f"local{lo}_to_local{hi}"))
     if not scored:
-        return out
-    best_key = max(scored, key=lambda k: scored[k][0])
-    worse, med, mn, name = scored[best_key]
-    out["scaling_headline_pair"] = name
-    out["scaling_efficiency_headline"] = med
+        return {}
+    _, med, mn, name = max(scored, key=lambda sc: sc[0])
+    out = {"scaling_headline_pair": name, "scaling_efficiency_headline": med}
     if mn is not None:
         out["scaling_efficiency_headline_minwall"] = mn
-    out["scaling_pass_dual"] = bool(med >= 0.8 and (mn is not None and mn >= 0.8))
+    out["scaling_pass_dual"] = dual_pass(med, mn)
     return out
 
 
@@ -457,19 +486,18 @@ RUN_MEASURED_PAIRS = ("local2_to_local8", "local8_to_local32")
 
 
 def recorded_pair_summaries(bench_dir: str, current_n_files: int) -> list[dict]:
-    """Compact summaries of prior exclusive pair-run artifacts
-    (``scripts/pair_run.py`` writes them with full per-sample
-    throughput + steal). The driver's wall budget cannot host every
-    criterion pair — local[2] alone runs ~20 min/repeat at 8M files,
-    and the low-core 1→4 pair (which isolates plan scaling from the
-    single box's memory-bus saturation) feeds no driver phase — so the
-    compact line carries these recorded readings, each labeled with
-    its source file and input size so it can never be mistaken for a
-    measurement of THIS run. Shuffle-strategy (criterion-plan) pairs
-    only; a recorded pair is EXCLUDED when this run measures the same
-    pair at the same input size fresh (the live reading must never be
-    masked by a cached one). Dual-pass rows lead, then larger inputs;
-    capped at 3. Pure function over the BENCH dir."""
+    """Compact summaries of prior ``scripts/pair_run.py`` artifacts
+    (full per-sample throughput + steal inside). The bench's wall
+    budget cannot host every criterion pair (local[2] alone runs ~20
+    min/repeat at 8M files), so the compact line carries these recorded
+    readings, each labeled with its source file and input size so it
+    can never be mistaken for a measurement of THIS run, and with the
+    ISO ``date`` pair_run.py stamped on it (None for older, undated
+    files) so its age shows. Shuffle-strategy (criterion-plan) pairs only; a recorded pair is
+    EXCLUDED when this run measures the same pair at the same input
+    size fresh (the live reading must never be masked by a cached one).
+    Dual-pass rows lead, then larger inputs; capped at 3. Pure function
+    over the BENCH dir."""
     import glob
 
     rows = []
@@ -497,6 +525,7 @@ def recorded_pair_summaries(bench_dir: str, current_n_files: int) -> list[dict]:
                 "eff_minwall": d.get("scaling_efficiency_minwall"),
                 "pass_dual": d.get("pass_dual"),
                 "src": "BENCH/" + os.path.basename(path),
+                "date": d.get("date"),  # None for the undated legacy files
             }
         )
     rows.sort(key=lambda r: (bool(r["pass_dual"]), r["n_files"]), reverse=True)
@@ -508,16 +537,12 @@ def criterion_verdict(throughput: dict, recorded: list[dict]) -> dict:
     (≥0.8 between N and 4N cores, dual estimator since round 4) — pure
     function over this run's throughput block + the recorded pair rows.
 
-    Basis ``in_run`` when THIS run's headline pair dual-passes: the
-    strongest evidence, measured minutes ago. Otherwise the best
-    criterion-grade recorded pair (shuffle plan, dual pass, per-sample
-    steal in its src artifact) answers: the full bench shares one
-    ~35-min window with the query sweep on an oversubscribed host, so
-    a steal burst can fail the in-run pair without saying anything
-    about the plan (round-5 history: 2/5 in-run dual passes at 2M
-    files vs 2/2 for the focused 8M-file pair runs —
-    BENCH/MEASUREMENT_HISTORY.md). Estimators are never mixed across
-    runs and a recorded basis always names its source file.
+    Basis ``in_run`` when THIS run's headline pair dual-passes.
+    Otherwise the best recorded pair (shuffle plan, dual pass,
+    per-sample steal in its src artifact) answers — pair_run.py scores
+    it with the same ``measure_level``/``pair_scores`` — and the
+    verdict names its source file and date. Estimators are never mixed
+    across runs.
     """
     if throughput.get("scaling_pass_dual"):
         return {
@@ -537,6 +562,7 @@ def criterion_verdict(throughput: dict, recorded: list[dict]) -> dict:
                 "eff": r.get("eff"),
                 "eff_minwall": r.get("eff_minwall"),
                 "src": r.get("src"),
+                "date": r.get("date"),
             }
     return {"met": False, "basis": None}
 
@@ -597,47 +623,25 @@ def main():
     total_t0 = time.time()
     results: dict = {"sf": SF, "bench_files": n_files, "pr_iters": PR_ITERS}
 
-    # The parent does NO Spark work: a stopped-but-resident parent JVM
-    # measurably degrades child suites (PageRank@32 dropped 10.1M →
-    # 2.1M edges/s/iter when the suites ran after a parent queries
-    # phase). Every phase runs in its own pristine subprocess.
-    import subprocess
-
-    def _child(args: list[str]) -> dict:
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), *args],
-            capture_output=True, text=True, timeout=1800,
-        )
-        if out.returncode != 0:
-            raise RuntimeError(f"child {args[0]} failed: {out.stderr[-2000:]}")
-        return json.loads(out.stdout.strip().splitlines()[-1])
-
-    # ---- build (or reuse) the corpus-derived graph
-    b = _child(["--build", str(n_files)])
+    # The parent does NO Spark work: the graph build, every repeat and
+    # the query sweep each run in a pristine subprocess (run_child).
+    b = run_child(["--build", str(n_files)])
     edges_path, etl_sec = b["path"], b["etl_sec"]
     results["etl_sec"] = round(etl_sec, 2)
 
-    # ---- identical job at the criterion parallelism levels, each a
-    # fresh process; both reported N vs 4N pairs (2→8, 8→32) get
-    # medians-of-3 at every level. Triangles (CPU-bound) at 8/32 only —
-    # 10^9 intersections at low core counts would dominate the bench
-    # wall. local[1] was dropped in round 3 (305s/run; pair history
-    # recorded: 1→4 = 0.967/0.821/0.814); local[4] dropped in round 4 —
-    # it fed no reported pair and its 3 repeats starved local[2] down
-    # to one sample in the round-3 driver run.
-    REPEATS = {32: 3, 8: 3, 2: 3}
-    # Soft wall budget: the harness that runs this per round may kill a
-    # long process, and a killed bench that has printed NOTHING loses
-    # the whole round's perf evidence (round 2 lost it to a too-long
-    # line; a timeout loses it the same way). Two defenses: (a) a
-    # cumulative compact line is printed after EVERY phase — whatever
-    # tail survives a kill is a complete, parseable snapshot; (b) when
-    # elapsed time crosses fractions of the budget, later repeats /
-    # phases are skipped (recorded in "truncated") instead of running
-    # the clock out. Ordering puts the criterion evidence first:
-    # local[32] (headline value + triangles), local[8]
-    # (completes the literal 8→32 pair), local[2] (the 2→8 pair),
-    # then the query sweep.
+    # Identical job at the criterion levels, medians-of-3 fresh
+    # processes at every level of both reported N vs 4N pairs (2→8,
+    # 8→32). local[1] was dropped in round 3 (305s/run); local[4] in
+    # round 4 — it fed no reported pair and its repeats starved local[2].
+    REPEATS = 3
+    # Soft wall budget: a killed bench that has printed NOTHING loses
+    # the round's perf evidence. So (a) a cumulative compact line is
+    # printed after EVERY phase — whatever tail survives a kill is a
+    # complete, parseable snapshot; (b) past 70% of the budget later
+    # repeats are skipped, past 90% the query sweep (recorded in
+    # "truncated"). Criterion evidence runs first: local[32] (headline
+    # + triangles), local[8] (completes 8→32), local[2] (2→8), then
+    # the query sweep.
     BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "3000"))
     suite: dict = {}
     spread: dict = {}
@@ -654,88 +658,51 @@ def main():
         detail file. Defensive against missing levels/metrics so a
         partial snapshot never crashes the emit."""
 
-        def eff(metric, lo, hi):
-            a, b = suite.get(lo, {}).get(metric), suite.get(hi, {}).get(metric)
-            if not a or not b:
-                return None
-            return round((b / a) / (hi / lo), 3)
+        def per_level(prefix: str, key: str, ndigits: int) -> dict:
+            return {
+                f"{prefix}{c}": round(lv[key], ndigits)
+                for c, lv in suite.items() if key in lv
+            }
 
         queries = {
-            **{
-                f"pagerank_{PR_ITERS}iter_local{c}": round(s["pagerank_sec"], 3)
-                for c, s in suite.items()
-                if "pagerank_sec" in s
-            },
-            **{
-                f"triangles_local{c}": round(s["triangle_sec"], 3)
-                for c, s in suite.items()
-                if "triangle_sec" in s
-            },
-            **{
-                f"triangles_csr_local{c}": round(s["triangle_csr_sec"], 3)
-                for c, s in suite.items()
-                if "triangle_csr_sec" in s
-            },
+            **per_level(f"pagerank_{PR_ITERS}iter_local", "pagerank_sec", 3),
+            **per_level("triangles_local", "triangle_sec", 3),
+            **per_level("triangles_csr_local", "triangle_csr_sec", 3),
             **q,
         }
         throughput = {
-            **{
-                f"pagerank_edges_per_sec_iter_local{c}": round(
-                    s["pagerank_edges_per_sec_iter"], 1
-                )
-                for c, s in suite.items()
-                if "pagerank_edges_per_sec_iter" in s
-            },
-            **{
-                f"pagerank_edges_per_sec_iter_min_local{c}": round(
-                    s["pagerank_edges_per_sec_iter_min"], 1
-                )
-                for c, s in suite.items()
-                if "pagerank_edges_per_sec_iter_min" in s
-            },
-            **{
-                f"triangles_per_sec_local{c}": round(s["triangles_per_sec"], 1)
-                for c, s in suite.items()
-                if "triangles_per_sec" in s
-            },
+            **per_level("pagerank_edges_per_sec_iter_local", MEDIAN_KEY, 1),
+            **per_level("pagerank_edges_per_sec_iter_min_local", MINWALL_KEY, 1),
+            **per_level("triangles_per_sec_local", "triangles_per_sec", 1),
         }
-        for key, lo, hi, metric in (
-            ("scaling_efficiency_pagerank_2_to_8", 2, 8, "pagerank_edges_per_sec_iter"),
-            ("scaling_efficiency_pagerank_2_to_8_minwall", 2, 8,
-             "pagerank_edges_per_sec_iter_min"),
-            ("scaling_efficiency_pagerank_8_to_32", 8, 32, "pagerank_edges_per_sec_iter"),
-            ("scaling_efficiency_pagerank_8_to_32_minwall", 8, 32,
-             "pagerank_edges_per_sec_iter_min"),
-            # same-plan scaling only: join vs join, csr vs csr (best-of
-            # is a throughput headline, never a scaling denominator)
-            ("scaling_efficiency_triangles_join_8_to_32", 8, 32, "triangles_join_per_sec"),
-            ("scaling_efficiency_triangles_csr_8_to_32", 8, 32, "triangles_csr_per_sec"),
-        ):
-            e = eff(metric, lo, hi)
-            if e is not None:
-                throughput[key] = e
-        # north-rule evidence: same job, same input, N vs 4N cores,
-        # medians-of-3 at BOTH levels of BOTH reported pairs (REPEATS),
-        # each pair scored on median AND min-wall estimators; headline
-        # + dual-pass flag computed by the pure scaling_summary().
+        effs = {}
+        for lo, hi in ((2, 8), (8, 32)):
+            eff, eff_minwall, _ = pair_scores(suite, lo, hi)
+            effs[f"pagerank_{lo}_to_{hi}"] = eff
+            effs[f"pagerank_{lo}_to_{hi}_minwall"] = eff_minwall
+        # same-plan scaling only: join vs join, csr vs csr (best-of is a
+        # throughput headline, never a scaling denominator)
+        for plan in ("join", "csr"):
+            effs[f"triangles_{plan}_8_to_32"] = efficiency(
+                suite, 8, 32, f"triangles_{plan}_per_sec"
+            )
+        throughput.update(
+            {f"scaling_efficiency_{k}": e for k, e in effs.items() if e is not None}
+        )
+        # headline pair + dual-pass flag from the pure scaling_summary()
         throughput.update(scaling_summary(throughput))
         # headline value = PEAK measured PageRank throughput across all
         # levels on this box (not pinned to local[32]: at 32 threads
         # one box's DRAM bus saturates and occasionally GC-walls; a
         # real 32-core slice of a cluster brings its own memory
         # channels)
-        peak = max(
-            (s.get("pagerank_edges_per_sec_iter", 0.0) for s in suite.values()),
-            default=0.0,
-        )
+        peak = max((lv.get(MEDIAN_KEY, 0.0) for lv in suite.values()), default=0.0)
         host_noise = {
-            **{
-                f"local{c}": s.get("steal_pct")
-                for c, s in suite.items()
-                if s.get("steal_pct") is not None
-            },
-            **({"queries": q_steal} if q_steal is not None else {}),
+            f"local{c}": lv["steal_pct"]
+            for c, lv in suite.items() if lv.get("steal_pct") is not None
         }
+        if q_steal is not None:
+            host_noise["queries"] = q_steal
         any_level = next(iter(suite.values()), {})
         out = {
             "metric": "pagerank_edges_per_sec_per_iteration",
@@ -781,75 +748,28 @@ def main():
             json.dump(full, fh, indent=1)
         print(assemble_line(out), flush=True)
 
-    for cores in (32, 8, 2, "queries"):
-        if cores == "queries":
-            # ---- driver-testdata queries, own pristine process, LAST:
-            # the criterion pairs must never be starved by the sweep
-            if elapsed() > 0.9 * BUDGET:
-                truncated.append("queries_skipped")
-                continue
-            qres = _child(["--queries"])
-            q_steal = qres.pop("queries_steal_pct", None)
-            q_detail = qres.get("detail", {})
-            q = qres.get("queries", qres)
-            emit(partial=True)
-            continue
-        runs = []
-        for rep in range(REPEATS.get(cores, 1)):
-            if rep > 0 and elapsed() > 0.7 * BUDGET:
-                truncated.append(f"local{cores}_reps_{rep}_of_{REPEATS[cores]}")
-                break
-            runs.append(
-                _pinned_suite(
-                    cores, edges_path,
-                    do_triangles=(cores in (8, 32)) and rep == 0,
-                )
-            )
-        # Steal top-up: the queries phase has re-run >5%-steal samples
-        # since round 3; the criterion pairs get the same rule. If
-        # fewer than 2 repeats at this level ran clean (≤5% hypervisor
-        # steal), run up to 2 extra repeats (pagerank only — triangles
-        # stay rep-0) so the median is not itself a steal-degraded
-        # sample (r5 run3: local32 steals 9.7/8.1/1.1 —
-        # the reported median was a contended repeat).
-        extra = 0
-        while (
-            len(clean_runs(runs)) < 2 and extra < 2 and elapsed() <= 0.7 * BUDGET
-        ):
-            runs.append(
-                _pinned_suite(cores, edges_path, do_triangles=False)
-            )
-            extra += 1
-        med_pool = median_pool(runs)
-        med = dict(pick_median(med_pool))
-        # min-wall estimator: the fastest single superstep ANY repeat
-        # achieved at this level — uncontended capability, robust to
-        # steal bursts that depress a whole repeat's median
-        best_min = min(min(r["pagerank_step_walls"]) for r in runs)
-        med["pagerank_min_step_sec"] = best_min
-        med["pagerank_edges_per_sec_iter_min"] = med["edge_rows"] / best_min
-        # triangles only measured on the first repeat — carry over
-        for r in runs:
-            for key in (
-                "triangles", "triangle_sec", "triangle_csr_sec",
-                "triangles_per_sec", "triangles_join_per_sec",
-                "triangles_csr_per_sec",
-            ):
-                if key in r and key not in med:
-                    med[key] = r[key]
-        suite[cores] = med
-        samples = [round(r["pagerank_edges_per_sec_iter"], 1) for r in runs]
-        spread[f"local{cores}"] = {
-            "n_samples": len(samples),
-            "samples_edges_per_sec_iter": samples,
-            "rel_spread": round(
-                (max(samples) - min(samples)) / max(samples), 3
-            ),
-            "steal_pcts": [r.get("steal_pct") for r in runs],
-            "min_step_walls": [round(min(r["pagerank_step_walls"]), 3) for r in runs],
-            # which samples fed the median (clean-only when ≥2 ran ≤5% steal)
-            "median_pool_n": len(med_pool),
-        }
+    for cores in (32, 8, 2):
+        # triangles (CPU-bound) at 8/32 only: 10^9 intersections at
+        # low core counts would dominate the bench wall
+        suite[cores], detail = measure_level(
+            cores, edges_path, REPEATS, triangles=cores in (8, 32),
+            deadline=total_t0 + 0.7 * BUDGET,
+        )
+        spread[f"local{cores}"] = detail
+        done = detail["n_samples"] - detail["topped_up"]
+        if done < REPEATS:
+            truncated.append(f"local{cores}_reps_{done}_of_{REPEATS}")
+        emit(partial=True)
+
+    # driver-testdata queries, own pristine process, LAST: the
+    # criterion pairs must never be starved by the sweep
+    if elapsed() > 0.9 * BUDGET:
+        truncated.append("queries_skipped")
+    else:
+        qres = run_child(["--queries"])
+        q_steal = qres.pop("queries_steal_pct", None)
+        q_detail = qres.get("detail", {})
+        q = qres.get("queries", qres)
         emit(partial=True)
 
     # final complete line (identical content, partial flag dropped)

@@ -16,12 +16,13 @@ import json
 import os
 import sys
 
-LEVELS = [1, 2, 4, 8, 32]
-# anchor to the repo root (this file lives in scripts/) — running from
-# any CWD must read/write the same BENCH/ the bench harness uses
-BENCH_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH"
-)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# BENCH_DIR is anchored to the repo root: running from any CWD must
+# read/write the same BENCH/ the bench harness uses
+from bench import BENCH_DIR, STEAL_CLEAN_PCT  # noqa: E402
+
+LEVELS = [2, 8, 32]
 
 
 def load(p):
@@ -34,6 +35,41 @@ def load(p):
         return json.loads(raw)
     except json.JSONDecodeError:
         return json.loads(raw.strip().splitlines()[-1])
+
+
+def criterion_line(b: dict) -> str:
+    """The report's scaling-criterion sentence. A recorded-basis verdict
+    says only that the in-run pair did not dual-pass; host contention is
+    named only when a level of the in-run pair recorded more than
+    ``STEAL_CLEAN_PCT`` hypervisor steal."""
+    crit = b["scaling_criterion"]
+    if crit.get("met") and crit.get("basis") == "in_run":
+        return (
+            f"**Criterion verdict: MET (in-run).** This run's own "
+            f"{crit.get('pair')} pair dual-passed "
+            f"({crit.get('eff')}/{crit.get('eff_minwall')})."
+        )
+    if not crit.get("met"):
+        return (
+            "**Criterion verdict: NOT MET in this artifact** — no "
+            "dual-passing pair in-run or recorded."
+        )
+    steal = b.get("host_steal_pct") or {}
+    pair = b["throughput"].get("scaling_headline_pair") or ""
+    hot = [
+        f"{lvl} {steal[lvl]}%" for lvl in pair.split("_to_")
+        if (steal.get(lvl) or 0.0) > STEAL_CLEAN_PCT
+    ]
+    return (
+        "**Criterion verdict: MET (recorded pair).** The in-run pair did "
+        "not dual-pass"
+        + (f"; its levels recorded host contention ({', '.join(hot)} steal)" if hot else "")
+        + f". The verdict rests on the recorded pair {crit.get('pair')} at "
+        f"{crit.get('n_files'):,} files: {crit.get('eff')}/"
+        f"{crit.get('eff_minwall')} dual pass (`{crit.get('src')}`, "
+        f"{'dated ' + crit['date'] if crit.get('date') else 'undated'}, "
+        "per-sample steal inside)."
+    )
 
 
 def main():
@@ -88,14 +124,12 @@ def main():
         "|---|---|---|",
     ]
     for key, label in [
-        ("scaling_efficiency_pagerank_1_to_4", "PageRank local[1] → local[4]"),
         ("scaling_efficiency_pagerank_2_to_8", "PageRank local[2] → local[8] (median)"),
         ("scaling_efficiency_pagerank_2_to_8_minwall", "PageRank local[2] → local[8] (min-wall)"),
         ("scaling_efficiency_pagerank_8_to_32", "PageRank local[8] → local[32] (median)"),
         ("scaling_efficiency_pagerank_8_to_32_minwall", "PageRank local[8] → local[32] (min-wall)"),
         ("scaling_efficiency_triangles_join_8_to_32", "Triangles (join plan) local[8] → local[32]"),
         ("scaling_efficiency_triangles_csr_8_to_32", "Triangles (csr plan) local[8] → local[32]"),
-        ("scaling_efficiency_triangles_8_to_32", "Triangles local[8] → local[32]"),
     ]:
         others = ", ".join(
             f"{r['throughput'][key]:.3f}" for r in runs[1:] if key in r["throughput"]
@@ -107,12 +141,9 @@ def main():
         lines += [
             "",
             "Within-run repeat samples (fresh process each, PageRank "
-            "edges/sec/iter; the headline pair uses the MEDIAN of these). "
-            "steal% = hypervisor steal share during that sample — the "
-            "sandbox VM is oversubscribed and steal spikes exactly when "
-            "the bench is busy (dated observations in "
-            "BENCH/MEASUREMENT_HISTORY.md), so a sample with high steal "
-            "under-reports real throughput:",
+            "edges/sec/iter). The level median is the lower middle of the "
+            "samples at ≤5% hypervisor steal when two or more exist, else "
+            "of all; a high-steal sample under-reports real throughput:",
             "",
             "| level | samples | rel. spread | steal% per sample |",
             "|---|---|---|---|",
@@ -172,16 +203,8 @@ def main():
                     )
                 )
 
-            # min-wall efficiency: stored by round-4+ pair files;
-            # derived from min_step_walls for older files
+            # as recorded: pre-round-4 files carry no min-wall estimator
             mw = p.get("scaling_efficiency_minwall")
-            if mw is None:
-                walls = [d.get("min_step_walls") for _, d in lvls]
-                if all(w for w in walls):
-                    mw = round((min(walls[0]) / min(walls[1])) / 4.0, 3)
-            dual = p.get("pass_dual")
-            if dual is None and mw is not None:
-                dual = p["scaling_efficiency"] >= 0.8 and mw >= 0.8
             label = p["pair"] + (
                 f" ({p['strategy']})" if p.get("strategy", "shuffle") != "shuffle" else ""
             )
@@ -190,7 +213,7 @@ def main():
             lines.append(
                 f"| {label} | **{p['scaling_efficiency']}** "
                 f"| {mw if mw is not None else '—'} "
-                f"| {'PASS' if dual else '—'} "
+                f"| {'PASS' if p.get('pass_dual') else '—'} "
                 f"| {fmt(lvls[0][1])} | {fmt(lvls[1][1])} "
                 f"| {p.get('max_steal_pct')}% |"
             )
@@ -208,82 +231,21 @@ def main():
             if headline_eff is not None
             else ""
         )
-        + " — same job, same cached input, two parallelism levels 4× "
-        "apart; each level runs fresh-process repeats and reports the "
-        "MEDIAN superstep wall (sustained) plus the MIN superstep wall "
-        "(uncontended capability). The criterion counts as met only "
-        "when BOTH estimators clear 0.8 in the same run — a steal "
-        "burst can depress one level's median but cannot manufacture "
-        "a fast superstep at the other level.",
+        + " — same job, same cached input, two levels 4× apart, each "
+        "scored on its MEDIAN superstep wall (sustained) and its MIN "
+        "superstep wall (uncontended capability); the criterion counts "
+        "as met only when BOTH clear 0.8 in the same run.",
         "",
     ]
-    crit = b.get("scaling_criterion")
-    if crit:
-        if crit.get("met") and crit.get("basis") == "in_run":
-            crit_line = (
-                f"**Criterion verdict: MET (in-run).** This run's own "
-                f"{crit.get('pair')} pair dual-passed "
-                f"({crit.get('eff')}/{crit.get('eff_minwall')})."
-            )
-        elif crit.get("met"):
-            crit_line = (
-                f"**Criterion verdict: MET (recorded pair).** This run's "
-                f"in-run pair landed in a contended host window, so the "
-                f"verdict rests on the criterion-grade recorded pair "
-                f"{crit.get('pair')} at {crit.get('n_files'):,} files: "
-                f"{crit.get('eff')}/{crit.get('eff_minwall')} dual pass "
-                f"(`{crit.get('src')}`, per-sample steal inside)."
-            )
-        else:
-            crit_line = (
-                "**Criterion verdict: NOT MET in this artifact** — no "
-                "dual-passing pair in-run or recorded."
-            )
-        lines += [crit_line, ""]
+    if b.get("scaling_criterion"):
+        lines += [criterion_line(b), ""]
     lines += [
-        "**Reading these numbers.** The north rule's ≥0.8 criterion is "
-        "defined for N vs 4N *executors* — 4N executors bring 4N memory "
-        "buses, NICs, and page caches. The sandbox proxy (N vs 4N cores of "
-        "ONE box) is strictly harsher: every level shares a single DRAM "
-        "bus, and PageRank is one E-sized shuffle per superstep, so "
-        "high-core pairs measure bus saturation as much as plan quality; "
-        "the plan itself has no serial stage, no single-partition "
-        "exchange, and partition counts track parallelism (verified: "
-        "`explain` shows no SinglePartition anywhere in the superstep). "
-        "Host noise is MEASURED, not estimated: per-sample hypervisor "
-        "steal is recorded beside every number in the tables above. "
-        "Round-stamped measurement history (cross-round pair readings, "
-        "steal anecdotes, quiet-window records) lives in "
-        "BENCH/MEASUREMENT_HISTORY.md — a static dated log, so this "
-        "generated report never restates stale figures as current. "
-        "BENCH/DECOMPOSITION.md carries the measured two-graph-size "
-        "F + W/N superstep decomposition.",
-        "",
-        "**The 8→32 pair is hardware-ceiling-limited — measured, not "
-        "argued.** A STREAM-triad sweep (`scripts/membw_forensics.py`, "
-        "artifact `BENCH/membw_ceiling.json`) shows this box's aggregate "
-        "DRAM bandwidth grows 3.82× across 1→4 workers and 4.18× across "
-        "2→8, but only **3.31× across 8→32** — so even a perfectly "
-        "parallel, purely bandwidth-bound job with the friendliest "
-        "(sequential) access pattern cannot exceed **0.828** efficiency "
-        "on the 8→32 pair here, and a shuffle superstep's random "
-        "gather/scatter saturates the same bus earlier. Stacked with the "
-        "fixed-overhead decomposition this reproduces the measured 8→32 "
-        "readings within ~7% at both graph sizes; the pinned 8M-file "
-        "series (min-wall 0.574 / 0.684 / 0.790 across three attempts) "
-        "stays under the 0.828 bound with run-to-run spread set by which "
-        "level the hypervisor favors, while the ABSOLUTE local[32] "
-        "capability is ceiling-pinned: its best single superstep across "
-        "all attempts and rounds is ~22.5M edges/s/iter, only 2.30× the "
-        "local[8] best (9.79M, measured at 0.0% steal in the same run) "
-        "against the 3.31× sequential-bandwidth bound — the numerator "
-        "cannot grow 4×, whichever run you pick "
-        "(BENCH/MEASUREMENT_HISTORY.md, round-5 entries). The "
-        "criterion-grade pairs are therefore the ones where the box's "
-        "own bandwidth DOES scale ≥4× — 1→4 and 2→8 — which is also the "
-        "regime that faithfully models real N→4N executors (4N memory "
-        "buses). The ~22.5M ceiling describes the PageRank superstep "
-        "(one E-sized random-scatter exchange per step).",
+        "How to read these numbers — why one box is a harsher proxy than "
+        "N vs 4N executors, the measured 8→32 bandwidth ceiling, and the "
+        "harness tuning — is recorded once, in [the 2026-10-17 entry of "
+        "MEASUREMENT_HISTORY.md](MEASUREMENT_HISTORY.md#reading-the-bench-"
+        "report-2026-10-17); BENCH/DECOMPOSITION.md carries the measured "
+        "per-superstep decomposition.",
         "",
         "## Headline metric",
         "",
@@ -321,12 +283,6 @@ def main():
         "```json",
         json.dumps(conf, indent=2) if conf else "(see BENCH/bench_full_latest.json)",
         "```",
-        "",
-        "Tuning notes baked into the harness (each measured, see bench.py "
-        "comments): driver.memory=24g (48g → G1 full-GC walls of 2–27s; "
-        "12g → triangle-join spill), no `taskset` pinning (halves "
-        "throughput under the sandbox hypervisor), 2-iteration JIT "
-        "warm-up, every phase in a pristine subprocess.",
         "",
         f"Total bench wall: {b['total_bench_sec']}s (graph ETL "
         f"{b['etl_sec']}s, cached across levels). Reproduce with "

@@ -17,12 +17,19 @@ from simdgraphprocessing_spark.operators import (
     bfs_levels,
     clique_count,
     common_neighbors,
+    jaccard_pairs,
     lollipop_count,
     max_degree_vertex,
     n_path_length,
     similar_nodes,
     symbiosity,
     triangle_count,
+    triangles_per_edge,
+)
+from simdgraphprocessing_spark.operators.motifs import (
+    fish_count,
+    tadpole_count,
+    triangles_per_vertex,
 )
 from tests.conftest import (
     edge_df,
@@ -279,3 +286,33 @@ def test_clique_csr_join_parity_and_triangle_consistency(spark):
         a = clique_count(g.edges, k, method="csr").collect()[0]["cliques"]
         b = clique_count(g.edges, k, method="join").collect()[0]["cliques"]
         assert a == b
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        pytest.param(lambda e: triangle_count(e, method="auto"), id="triangle_count-auto"),
+        pytest.param(lambda e: triangle_count(e, method="csr"), id="triangle_count-csr"),
+        pytest.param(lambda e: triangle_count(e, method="join"), id="triangle_count-join"),
+        pytest.param(lambda e: triangles_per_edge(e, method="csr"), id="triangles_per_edge-csr"),
+        pytest.param(lambda e: clique_count(e, k=4, method="auto"), id="clique4-auto"),
+        pytest.param(lambda e: clique_count(e, k=4, method="join"), id="clique4-join"),
+        pytest.param(similar_nodes, id="similar_nodes"),
+        pytest.param(jaccard_pairs, id="jaccard_pairs"),
+        pytest.param(triangles_per_vertex, id="triangles_per_vertex"),
+        pytest.param(tadpole_count, id="tadpole_count"),
+        pytest.param(fish_count, id="fish_count"),
+        pytest.param(lollipop_count, id="lollipop_count"),
+    ],
+)
+@pytest.mark.parametrize(
+    "pairs",
+    [[], [(0, 0), (1, 1)], [(0, 1), (1, 0)]],
+    ids=["empty", "self_loops_only", "single_edge"],
+)
+def test_counting_operators_on_degenerate_inputs(spark, op, pairs):
+    """No triangle, clique, motif or neighbour-overlap exists on an
+    empty table, on self-loops only or on one undirected edge: every
+    counting operator returns a single zero or no rows, never an error."""
+    rows = op(spark.createDataFrame(pairs, "src long, dst long")).collect()
+    assert [tuple(r) for r in rows] in ([], [(0,)])

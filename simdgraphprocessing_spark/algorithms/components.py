@@ -4,8 +4,17 @@ BFS-frontier template (``apps/n_path.cpp:58-83``) with label state.
 
 new_label(v) = min(label(v), min_{u ∈ N(v)} label(u)); stop when no
 label changed. Converges in O(diameter) supersteps on the symmetrized
-edge table; each superstep is one join (edges pre-partitioned by src,
-exchange reused) + one groupBy(dst) shuffle.
+edge table; each superstep is one join + one groupBy(dst) shuffle, and
+one Spark job.
+
+Loop inputs are leaves (see :mod:`simdgraphprocessing_spark.iteration`):
+the edges are checkpointed once, hash-partitioned by src, and so is the
+initial ``(id, id)`` state, hash-partitioned by id — one job each, so a
+call runs supersteps + 2 jobs, and neither side of the edges ⋈ state
+join shuffles. Fault model: those leaves, like every in-memory
+superstep's state, are executor-cached blocks lost with an executor;
+only a ``checkpoint_dir`` run survives that, and its resume rebuilds
+the leaves from ``edges``.
 
 Scale note: on huge, high-diameter graphs the large-star/small-star
 algorithm (Kiveris et al., "Connected Components in MapReduce") cuts
@@ -20,7 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from simdgraphprocessing_spark.iteration import IterationResult, run_supersteps
+from simdgraphprocessing_spark.iteration import (
+    IterationResult,
+    edge_leaf,
+    free_leaf,
+    run_supersteps,
+)
 
 
 def connected_components(
@@ -35,12 +49,7 @@ def connected_components(
     :func:`simdgraphprocessing_spark.graph.normalize_edges` produces.
     """
     spark = edges.sparkSession
-    edges = edges.select("src", "dst").repartition("src").persist()
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    edges, vertices = edge_leaf(edges)
     init = vertices.select("id", F.col("id").alias("component"))
 
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
@@ -67,14 +76,15 @@ def connected_components(
         )
         return new, {"changed": changed}
 
-    result = run_supersteps(
-        spark,
-        init,
-        step,
-        max_iterations=max_iterations,
-        converged=lambda m: m.get("changed", 1) == 0,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-    )
-    edges.unpersist()
-    return result
+    try:
+        return run_supersteps(
+            spark,
+            init,
+            step,
+            max_iterations=max_iterations,
+            converged=lambda m: m.get("changed", 1) == 0,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+        )
+    finally:
+        free_leaf(edges)

@@ -15,8 +15,17 @@ deterministic by construction):
   iteration cap).
 
 Each superstep: edges ⋈ labels on src → count per (dst, label) →
-argmax via max_by over a (count, -label) struct — two shuffles, all
-JVM-side.
+argmax via max_by over a (count, -label) struct — two shuffles and one
+Spark job, all JVM-side.
+
+Loop inputs are leaves (see :mod:`simdgraphprocessing_spark.iteration`):
+the edges are checkpointed once, hash-partitioned by src, and so is the
+initial ``(id, id)`` state, hash-partitioned by id — one job each, so a
+call runs supersteps + 2 jobs, and neither side of the edges ⋈ labels
+join shuffles. Fault model: those leaves, like every in-memory
+superstep's state, are executor-cached blocks lost with an executor;
+only a ``checkpoint_dir`` run survives that, and its resume rebuilds
+the leaves from ``edges``.
 """
 
 from __future__ import annotations
@@ -24,7 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from simdgraphprocessing_spark.iteration import IterationResult, run_supersteps
+from simdgraphprocessing_spark.iteration import (
+    IterationResult,
+    edge_leaf,
+    free_leaf,
+    run_supersteps,
+)
 
 
 def label_propagation(
@@ -35,12 +49,7 @@ def label_propagation(
 ) -> IterationResult:
     """State: (id, label). ``edges`` symmetrized."""
     spark = edges.sparkSession
-    edges = edges.select("src", "dst").repartition("src").persist()
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    edges, vertices = edge_leaf(edges)
     init = vertices.select("id", F.col("id").alias("label"))
 
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
@@ -68,14 +77,15 @@ def label_propagation(
         )
         return new, {"changed": changed}
 
-    result = run_supersteps(
-        spark,
-        init,
-        step,
-        max_iterations=max_iterations,
-        converged=lambda m: m.get("changed", 1) == 0,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-    )
-    edges.unpersist()
-    return result
+    try:
+        return run_supersteps(
+            spark,
+            init,
+            step,
+            max_iterations=max_iterations,
+            converged=lambda m: m.get("changed", 1) == 0,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+        )
+    finally:
+        free_leaf(edges)

@@ -7,24 +7,37 @@ Contract: a superstep is a pure function
 ``state_df -> (new_state_df, metrics_dict)``. A metric whose value is
 a :class:`pyspark.sql.Observation` (observed on ``new_state_df`` under
 the metric's own name) is read once the new state is materialized, so
-convergence measures cost no action of their own. The driver
+convergence measures cost no action of their own.
 
-* persists each new state and truncates lineage (iterative DataFrame
-  plans otherwise grow without bound — the classic Spark trap),
-* materializes each in-memory superstep with a static (non-adaptive)
-  plan. ``localCheckpoint`` under adaptive execution records
-  ``UnknownPartitioning`` for the new state, so the next superstep's
-  ``edges ⋈ state`` join re-shuffles all V state rows; planned
-  statically, the state keeps the ``hashpartitioning(id, n)`` its
-  final ``state ⋈ messages`` join gives it, and with the edges
-  ``repartition("src")``-ed to the same ``n`` that join needs no
+Loop inputs are leaves. The reference builds its immutable CSR
+(``src/SparseMatrix.hpp:12-68``) once and every query loop reads only
+that; here :func:`edge_leaf` materializes the ``repartition("src")``-ed
+edges once, with the same static eager ``localCheckpoint`` every
+superstep's state gets, and :func:`run_supersteps` does the same to the
+initial state. A superstep's plan therefore reads ``Scan ExistingRDD``
+leaves only, whatever lineage built the caller's edges: Spark analyses,
+cache-matches and plans a few nodes per superstep instead of the whole
+build (on the benchmark's corpus graph a PageRank superstep's analyzed
+plan is 12 lines; planned over the edges' build lineage it is 160).
+The driver
+
+* truncates lineage after every superstep (iterative DataFrame plans
+  otherwise grow without bound — the classic Spark trap),
+* materializes the initial state and each in-memory superstep with a
+  static (non-adaptive) plan. ``localCheckpoint`` under adaptive
+  execution records ``UnknownPartitioning`` for the new state, so the
+  next superstep's ``edges ⋈ state`` join re-shuffles all V state
+  rows; planned statically, the state keeps the
+  ``hashpartitioning(id, n)`` its final ``state ⋈ messages`` join (or
+  the initial vertex ``distinct``) gives it, and with the edge leaf
+  hash-partitioned on ``src`` to the same ``n`` that join needs no
   exchange. AQE has nothing to do in these plans anyway: every join
-  has a cached or co-partitioned side, so neither skew splitting nor
-  partition coalescing can fire, while its per-stage re-planning is
-  most of a small superstep's cost. The session's setting is restored
-  as soon as the state is materialized; durable checkpoints stay
-  adaptive, since a state re-read from parquet has no partitioning to
-  keep,
+  has a checkpointed or co-partitioned side, so neither skew splitting
+  nor partition coalescing can fire, while its per-stage re-planning
+  is most of a small superstep's cost. The session's setting is
+  restored as soon as the state is materialized; durable checkpoints
+  stay adaptive, since a state re-read from parquet has no
+  partitioning to keep,
 * checkpoints vertex state to a partitioned parquet directory
   (Iceberg-style layout ``checkpoint_dir/superstep=K/``) together
   with per-superstep metrics + lineage JSON (``_metrics.json``:
@@ -33,6 +46,12 @@ convergence measures cost no action of their own. The driver
 * resumes from the last *complete* superstep (one whose parquet
   committed its ``_SUCCESS`` marker and metrics file) after a crash —
   ``run()`` with the same ``checkpoint_dir`` just continues.
+
+Fault model: the leaves and every in-memory superstep's state are
+executor-cached blocks (``localCheckpoint``), so they are lost with an
+executor. Only a ``checkpoint_dir`` run survives that: its resume
+rebuilds the leaves from the caller's edges and continues from the last
+complete parquet superstep.
 
 At 100 TB the state table is large; checkpointing every K supersteps
 (``checkpoint_every``) trades recompute for IO exactly like Spark's
@@ -49,6 +68,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 Superstep = Callable[[DataFrame, int], tuple[DataFrame, dict]]
 
@@ -96,6 +116,32 @@ def _static_local_checkpoint(spark: SparkSession, df: DataFrame) -> DataFrame:
         conf.set("spark.sql.adaptive.enabled", aqe)
 
 
+def free_leaf(df: DataFrame) -> None:
+    """Drop the blocks behind a ``localCheckpoint``-ed DataFrame now
+    (``DataFrame.unpersist`` cannot reach them; see
+    :func:`_local_ckpt_jrdd`)."""
+    jrdd = _local_ckpt_jrdd(df)
+    if jrdd is not None:
+        jrdd.unpersist(False)
+
+
+def edge_leaf(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The loop's edge input: ``(src, dst)`` hash-partitioned on
+    ``src``, materialized as a static checkpoint so no superstep plan
+    carries the caller's lineage; and the vertex set ``src ∪ dst`` as
+    a plan over that leaf (hash-partitioned on ``id`` once executed).
+    The caller frees the leaf with :func:`free_leaf`."""
+    leaf = _static_local_checkpoint(
+        edges.sparkSession, edges.select("src", "dst").repartition("src")
+    )
+    vertices = (
+        leaf.select(F.col("src").alias("id"))
+        .union(leaf.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    return leaf, vertices
+
+
 def _ckpt_path(checkpoint_dir: str, k: int) -> str:
     return os.path.join(checkpoint_dir, f"superstep={k}")
 
@@ -136,6 +182,11 @@ def run_supersteps(
     ``converged(metrics)`` inspects the metrics dict the step returned
     (e.g. ``{"delta": 1e-7}``) — the driver-side convergence test the
     reference does with ``frontier.cardinality == 0``.
+
+    The initial state (or the resumed parquet state) is materialized
+    as a static checkpoint, one job, and freed once the first
+    superstep's state is materialized; each in-memory superstep is then
+    one job.
     """
     start_k = 0
     resumed_from = None
@@ -154,13 +205,12 @@ def run_supersteps(
             if metrics_log and converged and converged(metrics_log[-1]):
                 return IterationResult(state, last, metrics_log, resumed_from)
 
-    state = state.persist()
-    state.count()  # materialize
+    state = _static_local_checkpoint(spark, state)
 
     # JVM handle of the CURRENT state's localCheckpoint blocks (None
-    # when state is a plain persist or durable parquet); freed as soon
-    # as the next state is materialized
-    state_ckpt_jrdd = None
+    # when state is durable parquet); freed as soon as the next state
+    # is materialized
+    state_ckpt_jrdd = _local_ckpt_jrdd(state)
     k = start_k
     while k < max_iterations:
         t0 = time.time()

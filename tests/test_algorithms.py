@@ -4,6 +4,7 @@ PageRank allclose(1e-6), CC exact, label propagation exact."""
 from __future__ import annotations
 
 import functools
+import importlib
 import os
 
 import numpy as np
@@ -200,12 +201,66 @@ def test_degenerate_inputs(spark, algorithm, pairs):
         assert res.state.schema.simpleString() == "struct<id:bigint,rank:double>"
 
 
-def test_supersteps_free_localcheckpoint_blocks(spark):
+def _wrap_step(monkeypatch, algorithm, wrap) -> None:
+    """Hand ``wrap(step)`` to ``run_supersteps`` instead of the
+    algorithm's own superstep, for the rest of the test."""
+    algorithm = getattr(algorithm, "func", algorithm)  # a functools.partial
+    module = importlib.import_module(algorithm.__module__)
+    real = module.run_supersteps
+
+    def patched(spark_, init, step, *args, **kwargs):
+        return real(spark_, init, wrap(step), *args, **kwargs)
+
+    monkeypatch.setattr(module, "run_supersteps", patched)
+
+
+def _record_superstep_states(monkeypatch, algorithm) -> list:
+    """Record the new state each superstep hands to ``run_supersteps``
+    (superstep k+1 at index k). That DataFrame is the one the driver
+    materializes, so after the call its query execution holds the plan
+    that ran."""
+    states = []
+
+    def wrap(step):
+        def recording(state, k):
+            new, m = step(state, k)
+            states.append(new)
+            return new, m
+
+        return recording
+
+    _wrap_step(monkeypatch, algorithm, wrap)
+    return states
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _directed_with_dangling(spark):
+    """The zipf graph with low → high edges only: the high ids dangle."""
+    pairs = zipf_random_pairs(n=60)
+    return spark.createDataFrame(pairs, "src long, dst long")
+
+
+@pytest.mark.parametrize(
+    "algorithm",
+    [
+        pytest.param(functools.partial(pagerank, tol=0.0), id="pagerank"),
+        connected_components,
+        label_propagation,
+    ],
+)
+def test_supersteps_free_localcheckpoint_blocks(spark, algorithm):
     """Each superstep's localCheckpoint must free the previous one's
     RDD-level blocks immediately — DataFrame.unpersist cannot reach
     them, and waiting for the ContextCleaner leaks one V-sized block
     per superstep (measured: superstep walls degrading 23s -> 46s on
-    an 8M-file graph until the periodic GC fired)."""
+    an 8M-file graph until the periodic GC fired). The checkpointed
+    loop inputs (edge leaf, vertex table, initial state) are freed
+    too."""
     sc = spark.sparkContext
 
     def n_persistent() -> int:
@@ -214,37 +269,41 @@ def test_supersteps_free_localcheckpoint_blocks(spark):
     pairs = zipf_random_pairs(n=400, seed=11)
     edges = edge_df(spark, pairs)
     base = n_persistent()
-    res = pagerank(edges, max_iterations=8, tol=0.0)
-    # live set after the run: the final state's checkpoint block plus
-    # at most the persisted vertex/vtab helpers — NOT 8 state blocks
-    assert n_persistent() - base <= 4, (base, n_persistent())
-    assert res.iterations == 8
-    res.state.unpersist()
+    res = algorithm(edges, max_iterations=8)
+    # live set after the run: the final state's checkpoint block only
+    assert n_persistent() - base <= 1, (base, n_persistent())
+    # all 8 supersteps ran, or the labels settled before
+    assert res.iterations == 8 or res.metrics[-1]["changed"] == 0
+    assert res.iterations >= 3
+
+
+def test_build_shuffle_plan_runs_at_most_three_jobs(spark):
+    """The plan build is the edge-leaf and vertex-table checkpoints; V
+    and the dangling count are observed by the second, not collected
+    by a job of their own."""
+    from simdgraphprocessing_spark.algorithms.pagerank import build_shuffle_plan
+
+    e = _directed_with_dangling(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-build-jobs", "plan build")
+    try:
+        plan = build_shuffle_plan(e)
+    finally:
+        sc._jsc.clearJobGroup()
+    try:
+        assert plan.n == 60 and plan.has_dangling
+        assert _jobs_in_group(spark, "plan-build-jobs") <= 3
+    finally:
+        plan.close()
 
 
 # ---- superstep plan shape: static, co-partitioned materialization ----
 
 
-def _record_local_checkpoints(monkeypatch) -> list:
-    """Record every DataFrame handed to ``localCheckpoint``; after the
-    call its query execution holds the physical plan that ran."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    seen = []
-    real = DataFrame.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        seen.append(self)
-        return real(self, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
-    return seen
-
-
 def _exchanges(df) -> tuple[list[str], int, int]:
     """Walk the plan that materialized ``df``. Returns every exchange
     node (as its one-line description), the number of scans of a
-    checkpointed state (``Scan ExistingRDD``), and how many exchanges
+    checkpointed leaf (``Scan ExistingRDD``), and how many exchanges
     shuffle such a scan (reach it through single-child nodes only).
     Adaptive plans are walked through their final plan and stages."""
     exchanges: list[str] = []
@@ -279,57 +338,200 @@ def _exchanges(df) -> tuple[list[str], int, int]:
 
 
 def test_pagerank_superstep_plan_has_one_exchange(spark, monkeypatch):
-    """Superstep 2 reads the superstep-1 checkpoint. Materialized by a
-    static plan, that state stays hash-partitioned by id, so the
-    superstep's only exchange is the contribs groupBy on dst: the
-    state side of both joins is read in place."""
-    seen = _record_local_checkpoints(monkeypatch)
+    """Superstep 2 reads the superstep-1 checkpoint and the edge leaf.
+    Both are hash-partitioned (the state by id, the edges by src, to
+    the same count), so the superstep's only exchange is the contribs
+    groupBy on dst: the state side of both joins and the edges are
+    read in place."""
+    states = _record_superstep_states(monkeypatch, pagerank)
     e = edge_df(spark, zipf_random_pairs(n=60))
     pagerank(e, max_iterations=2, tol=1e-12)
-    assert len(seen) == 2
-    exchanges, scans, shuffled = _exchanges(seen[1])
+    assert len(states) == 2
+    exchanges, scans, shuffled = _exchanges(states[1])
     assert len(exchanges) == 1, exchanges
     assert "hashpartitioning(dst" in exchanges[0], exchanges
-    assert scans == 2 and shuffled == 0, (scans, shuffled)
+    assert scans == 3 and shuffled == 0, (scans, shuffled)
 
 
 @pytest.mark.parametrize("algorithm", [connected_components, label_propagation])
 def test_cc_lpa_read_state_without_exchange(spark, monkeypatch, algorithm):
-    seen = _record_local_checkpoints(monkeypatch)
+    """Superstep 2 scans the edge leaf once and the state twice, and
+    shuffles none of them."""
+    states = _record_superstep_states(monkeypatch, algorithm)
     e = edge_df(spark, zipf_random_pairs(n=60))
     res = algorithm(e, max_iterations=3)
-    assert res.iterations >= 2 and len(seen) >= 2
-    exchanges, scans, shuffled = _exchanges(seen[1])
-    assert scans == 2 and shuffled == 0, (scans, shuffled, exchanges)
+    assert res.iterations >= 2 and len(states) >= 2
+    exchanges, scans, shuffled = _exchanges(states[1])
+    assert scans == 3 and shuffled == 0, (scans, shuffled, exchanges)
+
+
+def _logical_plan(df) -> tuple[int, set[str]]:
+    """Node count and leaf node classes of ``df``'s analyzed plan."""
+    nodes, leaves = 0, set()
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        nodes += 1
+        kids = node.children()
+        if kids.size() == 0:
+            leaves.add(node.getClass().getSimpleName())
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes, leaves
+
+
+@pytest.mark.parametrize("algorithm", [pagerank, connected_components, label_propagation])
+def test_superstep_plan_does_not_carry_input_lineage(spark, monkeypatch, algorithm):
+    """The loop's inputs are checkpointed leaves: superstep 2 plans the
+    same few nodes whether the edges come straight from a table or
+    through 60 chained select/filter/union steps, and every leaf of
+    that plan is a checkpoint (``LogicalRDD``)."""
+    from pyspark.sql import functions as F
+
+    states = _record_superstep_states(monkeypatch, algorithm)
+    shallow = edge_df(spark, zipf_random_pairs(n=60))
+    deep = shallow
+    for i in range(20):
+        deep = (
+            deep.select("src", "dst")
+            .filter(F.col("src") >= -i)
+            .union(shallow.filter(F.lit(False)))
+        )
+    results = []
+    for e in (shallow, deep):
+        states.clear()
+        results.append(dict(algorithm(e, max_iterations=2).state.collect()))
+        assert len(states) == 2
+        results.append(_logical_plan(states[1]))
+    shallow_result, shallow_plan, deep_result, deep_plan = results
+    assert deep_plan == shallow_plan and shallow_plan[1] == {"LogicalRDD"}, (shallow_plan, deep_plan)
+    # ranks within 1e-12; integer labels, exactly
+    assert deep_result.keys() == shallow_result.keys()
+    assert all(abs(deep_result[v] - shallow_result[v]) < 1e-12 for v in shallow_result)
 
 
 def test_pagerank_superstep_runs_one_job(spark, monkeypatch):
     """Each in-memory superstep's jobs, counted by job group from the
     status store: the static materialization is the only one (no
-    adaptive stage jobs, no separate convergence action)."""
-    import importlib
-
-    pr = importlib.import_module("simdgraphprocessing_spark.algorithms.pagerank")
+    adaptive stage jobs, no separate convergence action, and with
+    dangling vertices no dangling-mass action: the mass is observed
+    on the previous superstep's job, or known from the plan for the
+    first)."""
     sc = spark.sparkContext
-    real = pr.run_supersteps
+    graphs = {
+        "symmetric": edge_df(spark, zipf_random_pairs(n=60)),
+        "dangling": _directed_with_dangling(spark),
+    }
+    for graph, e in graphs.items():
 
-    def grouped(spark_, init, step, **kwargs):
-        def step_in_group(state, k):
-            sc.setJobGroup(f"superstep-jobs-{k}", "superstep")
-            return step(state, k)
+        def wrap(step, graph=graph):
+            def step_in_group(state, k):
+                sc.setJobGroup(f"superstep-jobs-{graph}-{k}", "superstep")
+                return step(state, k)
 
-        return real(spark_, init, step_in_group, **kwargs)
+            return step_in_group
 
-    monkeypatch.setattr(pr, "run_supersteps", grouped)
-    e = edge_df(spark, zipf_random_pairs(n=60))
-    try:
-        res = pagerank(e, max_iterations=4, tol=1e-12)
-    finally:
-        sc._jsc.clearJobGroup()
-    assert res.iterations == 4
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = [len(sc.statusTracker().getJobIdsForGroup(f"superstep-jobs-{k}")) for k in range(4)]
-    assert jobs == [1, 1, 1, 1], jobs
+        _wrap_step(monkeypatch, pagerank, wrap)
+        try:
+            res = pagerank(e, max_iterations=4, tol=1e-12)
+        finally:
+            sc._jsc.clearJobGroup()
+            monkeypatch.undo()
+        assert res.iterations == 4
+        assert all((m["dangling_mass"] > 0) == (graph == "dangling") for m in res.metrics)
+        jobs = [_jobs_in_group(spark, f"superstep-jobs-{graph}-{k}") for k in range(4)]
+        assert jobs == [1, 1, 1, 1], (graph, jobs)
+
+
+def test_pagerank_resume_with_dangling_vertices(spark, tmp_path):
+    """A resumed run has no observed dangling mass for its first
+    superstep and computes it from the resumed state: ranks and the
+    per-superstep dangling mass equal those of an uninterrupted run."""
+    e = _directed_with_dangling(spark)
+    ck = str(tmp_path / "ck")
+    pagerank(e, max_iterations=3, tol=1e-12, checkpoint_dir=ck)
+    res = pagerank(e, max_iterations=6, tol=1e-12, checkpoint_dir=ck)
+    clean = pagerank(e, max_iterations=6, tol=1e-12)
+    assert res.resumed_from == 3 and res.iterations == clean.iterations == 6
+    got, want = dict(res.state.collect()), dict(clean.state.collect())
+    assert got.keys() == want.keys()
+    assert all(abs(got[v] - want[v]) < 1e-12 for v in want)
+    masses = [m["dangling_mass"] for m in res.metrics]
+    assert masses[0] > 0
+    assert np.allclose(masses, [m["dangling_mass"] for m in clean.metrics], rtol=1e-12, atol=0)
+
+
+# ---- crash injection: kill a checkpointed run, resume it ----
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _crash_once_in_superstep(monkeypatch, algorithm, superstep: int) -> None:
+    """The first time superstep ``superstep`` (1-based) runs, its step
+    builds the new state and then raises, as a driver killed mid-step."""
+    crashed = []
+
+    def wrap(step):
+        def crashing(state, k):
+            out = step(state, k)
+            if k + 1 == superstep and not crashed:
+                crashed.append(k)
+                raise _Crash(f"killed in superstep {superstep}")
+            return out
+
+        return crashing
+
+    _wrap_step(monkeypatch, algorithm, wrap)
+
+
+def _history(res) -> list[dict]:
+    """Per-superstep metrics minus what differs between two correct
+    runs (wall time, part-file names)."""
+    return [
+        {k: v for k, v in m.items() if k not in ("wall_sec", "partition_lineage")}
+        for m in res.metrics
+    ]
+
+
+@pytest.mark.parametrize(
+    "algorithm",
+    [
+        pytest.param(functools.partial(pagerank, tol=1e-12), id="pagerank"),
+        connected_components,
+        label_propagation,
+    ],
+)
+@pytest.mark.parametrize("crash", ["raise_in_step", "lose_metrics"])
+def test_resume_after_crash(spark, tmp_path, monkeypatch, algorithm, crash):
+    """Kill a ``checkpoint_every=1`` run at superstep 3, by raising
+    inside the step or by losing only ``superstep=3/_metrics.json``
+    (the driver died between the parquet commit and the metrics
+    write), then rerun: it resumes from superstep 2, and its result
+    and per-superstep history equal an uninterrupted run's."""
+    k = 3
+    e = edge_df(spark, [(i, i + 1) for i in range(11)])  # 12-vertex path
+    clean = algorithm(e, max_iterations=6, checkpoint_dir=str(tmp_path / "clean"), checkpoint_every=1)
+    ck = tmp_path / "ck"
+    if crash == "raise_in_step":
+        _crash_once_in_superstep(monkeypatch, algorithm, k)
+        with pytest.raises(_Crash):
+            algorithm(e, max_iterations=6, checkpoint_dir=str(ck), checkpoint_every=1)
+        assert not (ck / f"superstep={k}").exists()
+    else:
+        algorithm(e, max_iterations=k, checkpoint_dir=str(ck), checkpoint_every=1)
+        os.remove(ck / f"superstep={k}" / "_metrics.json")
+    res = algorithm(e, max_iterations=6, checkpoint_dir=str(ck), checkpoint_every=1)
+    assert clean.iterations >= 4
+    assert res.resumed_from == k - 1 and res.iterations == clean.iterations
+    got_history, want_history = _history(res), _history(clean)
+    assert [m.keys() for m in got_history] == [m.keys() for m in want_history]
+    for got_m, want_m in zip(got_history, want_history):
+        assert got_m == pytest.approx(want_m, rel=1e-9, abs=1e-15), (got_m, want_m)
+    got, want = dict(res.state.collect()), dict(clean.state.collect())
+    # ranks within 1e-12; integer labels, exactly
+    assert got.keys() == want.keys()
+    assert all(abs(got[v] - want[v]) < 1e-12 for v in want)
 
 
 def test_supersteps_restore_adaptive_setting(spark):

@@ -127,9 +127,9 @@ def _q_tri_csr(spark, sf_dir):
 
 
 def _q_tri_auto(spark, sf_dir):
-    # default path: size-probe cutover (broadcast-CSR kernel under the
-    # cap, relational join above it) — the plan a user gets when they
-    # don't pick a method; driver-verified against the same oracle
+    # default path (the relational join plan) — the plan a user gets
+    # when they don't pick a method; driver-verified against the same
+    # oracle
     from simdgraphprocessing_spark.operators import triangle_count
 
     return triangle_count(_sym_parts(spark, sf_dir), method="auto")

@@ -150,21 +150,31 @@ def _metrics_path(checkpoint_dir: str, k: int) -> str:
     return os.path.join(_ckpt_path(checkpoint_dir, k), "_metrics.json")
 
 
+def _read_metrics(checkpoint_dir: str, k: int) -> dict | None:
+    """Superstep K's ``_metrics.json``, or None when it is missing or
+    does not parse (torn by a kill mid-write)."""
+    try:
+        with open(_metrics_path(checkpoint_dir, k)) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
+
+
 def last_complete_superstep(checkpoint_dir: str) -> int | None:
-    """Largest K with both a parquet _SUCCESS marker and metrics."""
+    """Largest K with both a parquet _SUCCESS marker and metrics that
+    parse."""
     if not checkpoint_dir or not os.path.isdir(checkpoint_dir):
         return None
-    best = None
-    for name in os.listdir(checkpoint_dir):
-        if not name.startswith("superstep="):
-            continue
-        k = int(name.split("=", 1)[1])
-        d = os.path.join(checkpoint_dir, name)
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and os.path.exists(
-            os.path.join(d, "_metrics.json")
-        ):
-            best = k if best is None else max(best, k)
-    return best
+    written = [
+        int(name.split("=", 1)[1])
+        for name in os.listdir(checkpoint_dir)
+        if name.startswith("superstep=")
+    ]
+    for k in sorted(written, reverse=True):
+        committed = os.path.exists(os.path.join(_ckpt_path(checkpoint_dir, k), "_SUCCESS"))
+        if committed and _read_metrics(checkpoint_dir, k) is not None:
+            return k
+    return None
 
 
 def run_supersteps(
@@ -175,7 +185,6 @@ def run_supersteps(
     converged: Callable[[dict], bool] | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
-    state_partitions: int | None = None,
 ) -> IterationResult:
     """Run ``step`` until convergence / max_iterations, checkpointing.
 
@@ -198,8 +207,7 @@ def run_supersteps(
         last = last_complete_superstep(checkpoint_dir)
         if last is not None:
             state = spark.read.parquet(_ckpt_path(checkpoint_dir, last))
-            with open(_metrics_path(checkpoint_dir, last)) as fh:
-                metrics_log = json.load(fh).get("history", [])
+            metrics_log = _read_metrics(checkpoint_dir, last).get("history", [])
             start_k = last
             resumed_from = last
             if metrics_log and converged and converged(metrics_log[-1]):
@@ -220,10 +228,7 @@ def run_supersteps(
         durable = checkpoint_dir and (k % checkpoint_every == 0 or k == max_iterations)
         if durable:
             path = _ckpt_path(checkpoint_dir, k)
-            writer = new_state.write.mode("overwrite")
-            if state_partitions:
-                writer = new_state.repartition(state_partitions).write.mode("overwrite")
-            writer.parquet(path)  # the materializing action
+            new_state.write.mode("overwrite").parquet(path)  # the materializing action
             state.unpersist()
             if state_ckpt_jrdd is not None:
                 state_ckpt_jrdd.unpersist(False)
@@ -276,8 +281,12 @@ def run_supersteps(
             m["partition_lineage"] = partition_lineage
         metrics_log.append(m)
         if durable:
-            with open(_metrics_path(checkpoint_dir, k), "w") as fh:
+            # write-then-rename: a kill mid-write leaves a temp file,
+            # never a torn _metrics.json
+            final = _metrics_path(checkpoint_dir, k)
+            with open(final + ".tmp", "w") as fh:
                 json.dump({"superstep": k, "history": metrics_log}, fh)
+            os.replace(final + ".tmp", final)
 
         state = new_state
         if converged and converged(m):

@@ -9,34 +9,44 @@ Two physical strategies:
   the same candidate-set shrinking as C_d = C_{d-1} ∩ N(v_d),
   expressed as joins Catalyst can reorder/broadcast; AQE splits skewed
   hubs. Works at any scale (nothing is broadcast) but re-joins the
-  oriented edge table at every depth — measurably slower than the CSR
-  kernel wherever the broadcast fits (round-4 driver bench: join plan
-  52.3 s in round 3 vs 9.1 s for the CSR default in round 4 on the
-  same sf0.1 graph), so it is the above-the-cap fallback, not the
-  default.
+  oriented edge table at every depth. At k = 3 this is the triangle
+  operator's join plan.
 
-* ``method="csr"`` (default via ``"auto"`` when the oriented adjacency
-  fits the broadcast cap): the reference's literal execution shape.
-  The oriented CSR broadcasts once (shared with the triangle CSR
-  path), the oriented edge stream maps through an Arrow batch kernel,
-  and each batch (1) prefilters edges with a VECTORIZED common-
-  neighbor count — only edges that can seat the remaining k−2 clique
-  vertices enter the recursion, i.e. the triangle-closing edges, not
-  the E-sized stream — then (2) runs the reference's recursion
-  C_d = C_{d−1} ∩ N⁺(v_d) (``apps/n_clique.cpp:30-50``) with
-  per-step density re-encoding via :func:`kernels.intersect_chain` /
+* ``method="csr"``: the reference's literal execution shape. The
+  oriented CSR broadcasts once (the triangle operator's
+  :func:`~simdgraphprocessing_spark.operators.triangles.csr_count`),
+  the oriented edge stream maps through an Arrow batch kernel, and
+  each batch (1) prefilters edges with a VECTORIZED common-neighbor
+  count — only edges that can seat the remaining k−2 clique vertices
+  enter the recursion, i.e. the triangle-closing edges, not the
+  E-sized stream — then (2) runs the reference's recursion
+  C_d = C_{d−1} ∩ N⁺(v_d) (``apps/n_clique.cpp:30-50``) with per-step
+  density re-encoding via :func:`kernels.intersect_chain` /
   ``repackage`` (``src/set/ops/repackage.hpp:6-79``): the running
   candidate set flips to a packed bitmap while dense and back to a
   sorted array once it thins. No join at any depth; nothing E-sized
-  shuffles.
+  shuffles. The count is eager: the broadcast is destroyed before the
+  call returns a one-row DataFrame of the total.
+
+``method="auto"`` (default) runs the CSR plan when the oriented
+adjacency fits the broadcast cap and the join plan otherwise. Neither
+plan wins everywhere, so both stay: on ego-Facebook 4-cliques the CSR
+plan took 9.1 s against the join plan's 52.3 s (sf0.1 driver bench,
+rounds 3/4), while on the 2,000- and 20,000-file corpus graphs
+(``local[4]``) the join plan was faster, 0.83 vs 0.90 s and 1.23 vs
+1.65 s.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from simdgraphprocessing_spark import kernels
+from simdgraphprocessing_spark.graph import orient_by_degree
 
 
 def cliques(edges: DataFrame, k: int = 4) -> DataFrame:
@@ -47,7 +57,7 @@ def cliques(edges: DataFrame, k: int = 4) -> DataFrame:
     plan; the CSR path only counts."""
     if k < 2:
         raise ValueError("k >= 2")
-    e = edges.filter(F.col("src") < F.col("dst"))
+    e = orient_by_degree(edges)
     cur = e.select(F.col("src").alias("v1"), F.col("dst").alias("v2"))
     for depth in range(3, k + 1):
         prev_last = f"v{depth - 1}"
@@ -76,7 +86,7 @@ def _extend_count(C: np.ndarray, remaining: int, nbr_slice) -> int:
     still to place; at 1 every candidate completes a clique.
 
     Per-candidate PYTHON recursion — acceptable because the vectorized
-    common-neighbor prefilter in ``_clique_count_csr`` admits only
+    common-neighbor prefilter in ``_clique_batch`` admits only
     triangle-closing edges (a vanishing fraction of a power-law edge
     stream), so the interpreter loop runs over candidate sets, not E.
     Known limit: k ≥ 5 on DENSE graphs multiplies candidates per level
@@ -86,8 +96,6 @@ def _extend_count(C: np.ndarray, remaining: int, nbr_slice) -> int:
     remains available via ``method="join"``."""
     if remaining == 1:
         return len(C)
-    from simdgraphprocessing_spark import kernels
-
     total = 0
     for i in range(len(C) - remaining + 1):
         sub = kernels.intersect(C[i + 1 :], nbr_slice(int(C[i])))
@@ -96,85 +104,55 @@ def _extend_count(C: np.ndarray, remaining: int, nbr_slice) -> int:
     return total
 
 
-def _clique_count_csr(edges: DataFrame, k: int) -> DataFrame | None:
-    """Broadcast-CSR clique count; None when the oriented adjacency
-    exceeds the broadcast cap (caller falls back to the join plan)."""
-    from simdgraphprocessing_spark.operators.triangles import (
-        _oriented,
-        broadcast_oriented_csr,
-    )
+def _clique_batch(depth: int, sv: np.ndarray, dv: np.ndarray, csr: tuple) -> int:
+    """k-cliques seeded by one batch of oriented edges (a, b) over the
+    shared CSR; ``depth`` = k − 2 vertices beyond the seed edge."""
+    from simdgraphprocessing_spark.operators.triangles import csr_row_bounds
 
-    e = _oriented(edges)
-    bc = broadcast_oriented_csr(e)
-    if bc is None:
-        return None
-    depth = k - 2  # vertices beyond the seed edge (a, b)
-    out_schema = "cliques long"
+    ids, offsets, values, universe = csr
 
-    def count_batches(batches):
-        from simdgraphprocessing_spark import kernels
+    def nbr_slice(c: int) -> np.ndarray:
+        i = int(np.searchsorted(ids, c))
+        if i >= len(ids) or ids[i] != c:
+            return values[:0]
+        return values[offsets[i] : offsets[i + 1]]
 
-        b_ids, b_off, b_val, universe = bc.value
-        nv = len(b_ids)
-
-        def row_offsets(v: np.ndarray):
-            i = np.searchsorted(b_ids, v)
-            i_c = np.minimum(i, nv - 1) if nv else i
-            ok = (i < nv) & (b_ids[i_c] == v) if nv else np.zeros(len(v), bool)
-            return np.where(ok, b_off[i_c], 0), np.where(
-                ok, b_off[np.minimum(i_c + 1, nv)], 0
-            )
-
-        def nbr_slice(c: int) -> np.ndarray:
-            i = int(np.searchsorted(b_ids, c))
-            if i >= nv or b_ids[i] != c:
-                return b_val[:0]
-            return b_val[b_off[i] : b_off[i + 1]]
-
-        for batch in batches:
-            sv = batch.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
-            dv = batch.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
-            sa, ea = row_offsets(sv)
-            sb, eb = row_offsets(dv)
-            # vectorized prefilter: one batched intersect pass gives
-            # |N⁺(a)∩N⁺(b)| per edge; only edges able to seat the
-            # remaining k−2 vertices enter the Python recursion — on
-            # power-law graphs that's the triangle-closing edges, a
-            # vanishing fraction of the stream
-            counts = kernels.intersect_count_pairs(sa, ea, sb, eb, b_val)
-            total = 0
-            for i in np.nonzero(counts >= depth)[0]:
-                cands = kernels.intersect_chain(
-                    [b_val[sa[i] : ea[i]], b_val[sb[i] : eb[i]]], universe
-                )
-                total += _extend_count(cands, depth, nbr_slice)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([total], pa.int64())], names=["cliques"]
-            )
-
-    per_batch = e.mapInArrow(count_batches, out_schema)
-    return per_batch.agg(F.coalesce(F.sum("cliques"), F.lit(0)).alias("cliques"))
+    sa, ea = csr_row_bounds(ids, offsets, sv)
+    sb, eb = csr_row_bounds(ids, offsets, dv)
+    # vectorized prefilter: one batched intersect pass gives
+    # |N⁺(a)∩N⁺(b)| per edge; only edges able to seat the remaining
+    # k−2 vertices enter the Python recursion — on power-law graphs
+    # that's the triangle-closing edges, a vanishing fraction of the
+    # stream
+    counts = kernels.intersect_count_pairs(sa, ea, sb, eb, values)
+    total = 0
+    for i in np.nonzero(counts >= depth)[0]:
+        cands = kernels.intersect_chain(
+            [values[sa[i] : ea[i]], values[sb[i] : eb[i]]], universe
+        )
+        total += _extend_count(cands, depth, nbr_slice)
+    return total
 
 
 def clique_count(edges: DataFrame, k: int = 4, method: str = "auto") -> DataFrame:
     """Single row ``(cliques bigint)`` (reference golden: 30,004,668
     4-cliques on ego-Facebook).
 
-    ``method="auto"``: CSR kernel when the oriented adjacency fits the
-    broadcast cap (the reference's recursive-intersection shape, no
-    per-depth join), relational join plan otherwise — the same cutover
-    the triangle operator makes."""
+    ``method="auto"``: the eager CSR count when the oriented adjacency
+    fits the broadcast cap (the reference's recursive-intersection
+    shape, no per-depth join), the lazy relational join plan otherwise;
+    ``method="csr"`` raises ``ValueError`` above the cap (see module
+    docstring)."""
     if k < 2:
         raise ValueError("k >= 2")
     if method not in ("auto", "csr", "join"):
         raise ValueError("method must be auto, csr or join")
     if method in ("auto", "csr") and k >= 3:
-        res = _clique_count_csr(edges, k)
+        from simdgraphprocessing_spark.operators.triangles import CSR_OVER_CAP, csr_count
+
+        res = csr_count(edges, partial(_clique_batch, k - 2), "cliques")
         if res is not None:
             return res
         if method == "csr":
-            raise ValueError(
-                "oriented adjacency exceeds the CSR broadcast cap; "
-                "use method='join' (scale path)"
-            )
+            raise ValueError(CSR_OVER_CAP)
     return cliques(edges, k).agg(F.count("*").alias("cliques"))

@@ -58,27 +58,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from simdgraphprocessing_spark.operators.cliques import cliques
+
 
 def triangles_per_vertex(edges: DataFrame) -> DataFrame:
     """(id, tri) — number of triangles each vertex participates in."""
-    e = edges.filter(F.col("src") < F.col("dst"))
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
-        .join(
-            e3,
-            (F.col("e3.src") == F.col("e1.src")) & (F.col("e3.dst") == F.col("e2.dst")),
-            "left_semi",
-        )
-        .select(
-            F.col("e1.src").alias("a"), F.col("e1.dst").alias("b"), F.col("e2.dst").alias("c")
-        )
-    )
-    verts = (
-        tri.select(F.col("a").alias("id"))
-        .union(tri.select(F.col("b").alias("id")))
-        .union(tri.select(F.col("c").alias("id")))
-    )
+    verts = cliques(edges, 3).select(F.explode(F.array("v1", "v2", "v3")).alias("id"))
     return verts.groupBy("id").agg(F.count("*").alias("tri"))
 
 

@@ -2,48 +2,38 @@
 (``apps/undirected_triangle_counting.cpp``).
 
 Semantics: over a symmetrized, deduped, loop-free edge table, count
-each triangle exactly once by orienting edges (reference
-edge_selection ``nbr < node``, ``:20-23``) and summing
+each triangle exactly once by orienting edges
+(:func:`~simdgraphprocessing_spark.graph.orient_by_degree`, the
+reference's edge_selection ``nbr < node``, ``:20-23``) and summing
 |N⁺(u) ∩ N⁺(v)| over oriented edges (u,v) (core loop ``:45-56``).
 
-Three method values (default ``"auto"``):
+Two plans behind three method values (default ``"auto"``):
 
-* ``method="auto"``: CSR kernel when the oriented adjacency fits the
-  broadcast cap, relational join plan otherwise — the same cutover
-  :func:`~simdgraphprocessing_spark.operators.cliques.clique_count`
-  makes, and the same decision Spark itself makes between
-  broadcast-hash and shuffle joins. Round-4 driver bench under the
-  cap: csr 9.4 s vs join 18.0 s — a join default was the slower plan
-  exactly where most graphs live. Honesty note from round-5 repeat
-  measurements: with warm min-of-2 sampling the two plans land within
-  ~1.5× of each other in either direction (join 5.8 s vs csr 6.6 s in
-  one quiet window, join 5.4 s vs csr 11.2 s in another), so the cap
-  is a structural-safety cutover (never broadcast what doesn't fit),
-  not a guaranteed-fastest pick; callers who care at the margin
-  should measure both on their graph, as `bench.py` does.
+* ``method="auto"`` / ``"join"``: the relational plan,
+  :func:`~simdgraphprocessing_spark.operators.cliques.cliques` at
+  k = 3 — two shuffle joins over the oriented edges (the closing edge
+  as a ``left_semi``) and one aggregate. No Python runs at all (whole-
+  stage codegen end to end) and nothing is broadcast, so it has no
+  size limit. It is the default because it measures faster: on a
+  2,000-file corpus graph (35,768 edge rows, ``local[4]``) a warm call
+  took 0.49 s against the CSR plan's 0.91 s, on a 20,000-file graph
+  (376,544 rows) 0.78 s against 1.03 s, and on the 2M-file graph at
+  ``local[32]`` 11.2 s against 21.2 s. The CSR plan pays the Python
+  boundary, the driver collect and the broadcast; its intersect
+  kernel is a few percent of its wall.
 
-* ``method="join"``: a declarative 3-way self-join that
-  Catalyst plans as two shuffle joins with AQE; this is the
-  worst-case-optimal triangle join expressed relationally. No Python
-  runs at all — whole-stage codegen end to end. The unbounded-scale
-  path (nothing is broadcast).
-
-* ``method="csr"``: the reference-shaped plan. Two physical
-  realizations, picked by adjacency size:
-
-  - **broadcast CSR** (oriented adjacency ≤ ``CSR_BROADCAST_VALUES``
-    values): the whole oriented CSR (ids/offsets/values numpy arrays)
-    broadcasts once, and ``mapInArrow`` streams the oriented EDGE
-    table through the batched intersect kernel — zero per-edge list
-    shipping, no join at all. This is literally the reference's
-    execution model (shared in-memory CSR + streamed edge loop,
-    ``undirected_triangle_counting.cpp:45-56``) realized with
-    Spark broadcast instead of shared memory. A 10⁹-oriented-edge
-    graph's CSR is ~8 GB — beyond broadcast — hence the cap.
-  - **join-shipped CSR** (above the cap): ship each oriented edge
-    with both endpoint lists into the Arrow batch via two joins.
-    Moves Σ deg·|N⁺| values through the exchange — correct at any
-    scale but join method usually beats it there.
+* ``method="csr"``: the reference-shaped plan. The whole oriented CSR
+  (ids/offsets/values numpy arrays) broadcasts once and ``mapInArrow``
+  streams the oriented EDGE table through the batched intersect
+  kernel — no per-edge list shipping, no join. This is the
+  reference's execution model (shared in-memory CSR + streamed edge
+  loop, ``undirected_triangle_counting.cpp:45-56``) with Spark
+  broadcast standing in for shared memory. The count is EAGER: the
+  broadcast is destroyed (executor blocks and the driver's pickle
+  file) before the call returns, so the call runs the job and returns
+  a one-row DataFrame of the total. A 10⁹-oriented-edge graph's CSR
+  is ~8 GB, hence the ``CSR_BROADCAST_VALUES`` cap; above it
+  ``method="csr"`` raises ``ValueError`` rather than switch plans.
 
 Scale: orientation by degree-rank bounds every oriented list by
 O(sqrt(E)) on power-law graphs, so the skew that would otherwise
@@ -53,100 +43,43 @@ reference orients before intersecting.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _check_method(method: str) -> None:
-    if method not in ("auto", "csr", "join"):
-        raise ValueError("method must be auto, csr or join")
-
-
-def _per_edge_csr_if_fits(edges: DataFrame, cap: int | None = None) -> DataFrame | None:
-    """``auto`` cutover probe: the broadcast-CSR per-edge plan when the
-    oriented adjacency fits ``cap`` (default ``CSR_BROADCAST_VALUES``),
-    else None (caller falls back to the relational join — the
-    unbounded-scale plan). The probe's cost is one count on the
-    persisted sorted oriented edges, which the CSR build needs anyway
-    when it fits."""
-    e = _oriented(edges)
-    bc = broadcast_oriented_csr(e, cap=cap if cap is not None else CSR_BROADCAST_VALUES)
-    if bc is None:
-        return None
-    return _per_edge_csr_broadcast(e, bc)
+from simdgraphprocessing_spark import kernels
+from simdgraphprocessing_spark.graph import orient_by_degree
+from simdgraphprocessing_spark.operators.cliques import cliques
 
 
-def _oriented(edges: DataFrame) -> DataFrame:
-    """One row per undirected edge, src < dst (degree-ordered ids →
-    this is the reference's nbr<node orientation after reorder_by_degree)."""
-    return edges.filter(F.col("src") < F.col("dst"))
-
-
-def triangles_per_edge(
-    edges: DataFrame, method: str = "auto", csr_cap: int | None = None
-) -> DataFrame:
-    """(src, dst, tri_cnt): number of triangles closing each oriented edge.
-
-    Only edges closing ≥1 triangle appear (the relational plan's
-    natural output; the csr realizations filter their zero rows to
-    match, so the method choice never changes the result set).
-    ``csr_cap`` overrides the auto-cutover broadcast cap (tests)."""
-    _check_method(method)
-    per_edge = None
-    if method == "csr":
-        per_edge = _per_edge_csr(edges)
-    elif method == "auto":
-        per_edge = _per_edge_csr_if_fits(edges, cap=csr_cap)
-    if per_edge is not None:
-        return per_edge.filter(F.col("tri_cnt") > 0)
-    e = _oriented(edges)
-    e1 = e.alias("e1")  # (a, b)
-    e2 = e.alias("e2")  # (b, c)
-    e3 = e.alias("e3")  # (a, c)
-    tri = (
-        e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
-        .join(
-            e3,
-            (F.col("e3.src") == F.col("e1.src")) & (F.col("e3.dst") == F.col("e2.dst")),
-            "left_semi",
-        )
-        .groupBy(F.col("e1.src").alias("src"), F.col("e1.dst").alias("dst"))
+def triangles_per_edge(edges: DataFrame) -> DataFrame:
+    """(src, dst, tri_cnt): number of triangles closing each oriented
+    edge; only edges closing ≥1 triangle appear."""
+    return (
+        cliques(edges, 3)
+        .groupBy(F.col("v1").alias("src"), F.col("v2").alias("dst"))
         .agg(F.count("*").alias("tri_cnt"))
     )
-    return tri
 
 
-def triangle_count(
-    edges: DataFrame, method: str = "auto", csr_cap: int | None = None
-) -> DataFrame:
+def triangle_count(edges: DataFrame, method: str = "auto") -> DataFrame:
     """Single-row DataFrame ``(triangles bigint)`` — global count.
 
-    ``method="auto"`` (default): broadcast-CSR kernel when the oriented
-    adjacency fits ``CSR_BROADCAST_VALUES`` (override with ``csr_cap``),
-    relational join plan otherwise (see module docstring)."""
-    _check_method(method)
-    per_edge = None
+    ``"auto"`` (default) and ``"join"`` return the lazy relational
+    plan; ``"csr"`` counts eagerly over a broadcast CSR it destroys
+    before returning, and raises ``ValueError`` above the broadcast
+    cap (see module docstring)."""
+    if method not in ("auto", "csr", "join"):
+        raise ValueError("method must be auto, csr or join")
     if method == "csr":
-        per_edge = _per_edge_csr(edges)
-    elif method == "auto":
-        per_edge = _per_edge_csr_if_fits(edges, cap=csr_cap)
-    if per_edge is not None:
-        return per_edge.agg(F.coalesce(F.sum("tri_cnt"), F.lit(0)).alias("triangles"))
-    e = _oriented(edges)
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
-        .join(
-            e3,
-            (F.col("e3.src") == F.col("e1.src")) & (F.col("e3.dst") == F.col("e2.dst")),
-            "left_semi",
-        )
-        .agg(F.count("*").alias("triangles"))
-    )
-    return tri
+        res = csr_count(edges, _triangle_batch, "triangles")
+        if res is None:
+            raise ValueError(CSR_OVER_CAP)
+        return res
+    return cliques(edges, 3).agg(F.count("*").alias("triangles"))
 
 
 def triangles_from_adjacency(adj: DataFrame) -> DataFrame:
@@ -165,13 +98,10 @@ def triangles_from_adjacency(adj: DataFrame) -> DataFrame:
     src list along, ONE hash join on dst for the dst list, Arrow
     intersect kernel, global sum. Returns ``(triangles bigint)``.
 
-    Scale note: like the join-shipped CSR path, this ships each
-    oriented list once per incident oriented edge, so degree-rank the
-    ids first (``Graph.from_edge_list_degree_ordered``) to bound the
+    Scale note: this ships each oriented list once per incident
+    oriented edge, so degree-rank the ids first (``Graph.from_edge_list_degree_ordered``) to bound the
     oriented lists by O(sqrt(E)) on power-law graphs.
     """
-    from simdgraphprocessing_spark import kernels
-
     o = adj.select(
         "id", F.filter("nbrs", lambda n: n > F.col("id")).alias("nbrs")
     ).filter(F.size("nbrs") > 0)
@@ -208,24 +138,15 @@ def triangles_from_adjacency(adj: DataFrame) -> DataFrame:
 
 
 # oriented adjacencies up to this many values broadcast as a shared
-# CSR (8 B/value → 400 MB at the cap); larger graphs join-ship lists.
-# session.py sets spark.driver.maxResultSize=4g to clear the capped
-# Arrow collect with headroom.
+# CSR (8 B/value → 400 MB at the cap). session.py sets
+# spark.driver.maxResultSize=4g to clear the capped Arrow collect with
+# headroom.
 CSR_BROADCAST_VALUES = 50_000_000
 
-# the most recent shared-CSR broadcast: a NEW build unpersists the
-# previous one (drops executor copies; a still-lazy old plan would
-# transparently re-fetch from the driver), so repeated csr calls in
-# one session hold at most one executor-side CSR copy. Call
-# release_csr_broadcast() to drop the last one too.
-_LAST_CSR_BC = None
-
-
-def release_csr_broadcast() -> None:
-    global _LAST_CSR_BC
-    if _LAST_CSR_BC is not None:
-        _LAST_CSR_BC.unpersist()
-        _LAST_CSR_BC = None
+CSR_OVER_CAP = (
+    "oriented adjacency exceeds the CSR broadcast cap; "
+    "use method='join' (scale path)"
+)
 
 
 def _collect_sorted_edges(e: DataFrame, cap: int):
@@ -238,8 +159,6 @@ def _collect_sorted_edges(e: DataFrame, cap: int):
     (checked on the persisted sorted form — a cache-resident count,
     not a second lineage pass).
     """
-    import numpy as np
-
     p = max(e.sparkSession.sparkContext.defaultParallelism, 8)
     se = (
         e.select("src", "dst")
@@ -259,15 +178,12 @@ def _collect_sorted_edges(e: DataFrame, cap: int):
 
 
 def broadcast_oriented_csr(e: DataFrame, cap: int = CSR_BROADCAST_VALUES):
-    """Build + broadcast the oriented CSR from flat pre-sorted edge
-    columns (never from per-row list objects). Returns the broadcast —
-    value ``(ids, offsets, values, universe)`` with ``universe`` = the
-    id-space size for density decisions — or None when the oriented
-    edge count exceeds ``cap``. Shared by the triangle and clique CSR
-    paths; a new build unpersists the previous broadcast."""
-    import numpy as np
-
-    global _LAST_CSR_BC
+    """Build + broadcast the oriented CSR of the ORIENTED edges ``e``
+    from flat pre-sorted edge columns (never from per-row list
+    objects). Returns the broadcast — value ``(ids, offsets, values,
+    universe)`` with ``universe`` = the id-space size for density
+    decisions — or None when the oriented edge count exceeds ``cap``.
+    The caller owns the broadcast and ``destroy()``s it when done."""
     sorted_cols = _collect_sorted_edges(e, cap)
     if sorted_cols is None:
         return None
@@ -278,93 +194,67 @@ def broadcast_oriented_csr(e: DataFrame, cap: int = CSR_BROADCAST_VALUES):
     universe = int(
         max(ids[-1] if len(ids) else -1, values.max() if len(values) else -1)
     ) + 1
-    release_csr_broadcast()
-    bc = e.sparkSession.sparkContext.broadcast((ids, offsets, values, universe))
-    _LAST_CSR_BC = bc
-    return bc
+    return e.sparkSession.sparkContext.broadcast((ids, offsets, values, universe))
 
 
-def _per_edge_csr_broadcast(e: DataFrame, bc) -> DataFrame:
-    """Shared-CSR realization: drive the per-edge loop FROM the
-    broadcast CSR — each task streams its edge batches against the
-    shared arrays. This is the reference's ``par_for`` over CSR rows
-    (``undirected_triangle_counting.cpp:45-56``) with Spark broadcast
-    standing in for shared memory; nothing E-sized shuffles.
-    """
-    import numpy as np
-
-    out_schema = "src long, dst long, tri_cnt long"
-
-    def count_batches(batches):
-        from simdgraphprocessing_spark import kernels
-
-        b_ids, b_off, b_val, _universe = bc.value
-        nv = len(b_ids)
-
-        def row_offsets(v: "np.ndarray"):
-            i = np.searchsorted(b_ids, v)
-            i_c = np.minimum(i, nv - 1) if nv else i
-            ok = (i < nv) & (b_ids[i_c] == v) if nv else np.zeros(len(v), bool)
-            return np.where(ok, b_off[i_c], 0), np.where(
-                ok, b_off[np.minimum(i_c + 1, nv)], 0
-            )
-
-        for batch in batches:
-            # materialize plain int64 — parquet scans may deliver
-            # dictionary-encoded vectors, which must not leak into the
-            # output batch (downstream codegen reads plain longs)
-            sv = batch.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
-            dv = batch.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
-            sa, ea = row_offsets(sv)
-            sb, eb = row_offsets(dv)
-            counts = kernels.intersect_count_pairs(sa, ea, sb, eb, b_val)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(sv, pa.int64()), pa.array(dv, pa.int64()),
-                 pa.array(counts, pa.int64())],
-                names=["src", "dst", "tri_cnt"],
-            )
-
-    return e.mapInArrow(count_batches, out_schema)
+def csr_row_bounds(ids: np.ndarray, offsets: np.ndarray, v: np.ndarray):
+    """``(starts, ends)`` of each vertex's row in a CSR; an empty row
+    for a vertex with no oriented out-edges."""
+    i = np.searchsorted(ids, v)
+    i_c = np.minimum(i, len(ids) - 1)
+    ok = (i < len(ids)) & (ids[i_c] == v)
+    return np.where(ok, offsets[i_c], 0), np.where(ok, offsets[i_c + 1], 0)
 
 
-def _per_edge_csr(edges: DataFrame) -> DataFrame:
-    """Reference-shaped plan: oriented adjacency + Arrow intersect
-    kernel; broadcast-CSR below ``CSR_BROADCAST_VALUES``, join-shipped
-    lists above (see module docstring).
-    """
-    from simdgraphprocessing_spark import kernels
-    from simdgraphprocessing_spark.graph import adjacency
+def csr_count(
+    edges: DataFrame,
+    batch_count: Callable[[np.ndarray, np.ndarray, tuple], int],
+    name: str,
+) -> DataFrame | None:
+    """Eager broadcast-CSR count: orient ``edges``, broadcast their
+    CSR, stream the oriented edges through
+    ``batch_count(src, dst, csr)`` (one partial count per Arrow batch),
+    collect the one total and destroy the broadcast. Returns a one-row
+    ``(<name> bigint)`` DataFrame, or None when the oriented adjacency
+    exceeds ``CSR_BROADCAST_VALUES``. The reference's ``par_for`` over
+    CSR rows (``undirected_triangle_counting.cpp:45-56``); nothing
+    E-sized shuffles.
 
-    e = _oriented(edges)
-    # one distributed sort pass doubles as the size probe (count on
-    # the persisted sorted form) and the CSR source (Arrow collect of
-    # pre-sorted blocks) — no separate strategy-probe scan, no
-    # driver-side O(E) sort, no pandas materialization
-    bc = broadcast_oriented_csr(e)
-    if bc is not None:
-        return _per_edge_csr_broadcast(e, bc)
-    adj = adjacency(e).select("id", "nbrs")
-    pairs = (
-        e.join(adj.withColumnRenamed("id", "src").withColumnRenamed("nbrs", "nbrs_src"), "src")
-        .join(adj.withColumnRenamed("id", "dst").withColumnRenamed("nbrs", "nbrs_dst"), "dst")
-        .select("src", "dst", "nbrs_src", "nbrs_dst")
-    )
-
-    out_schema = "src long, dst long, tri_cnt long"
+    Eager because a lazy plan would still read the broadcast, which
+    therefore could not be destroyed here; ``unpersist`` alone leaves
+    the driver-side pickle file in ``sc._temp_dir`` until the session
+    stops."""
+    e = orient_by_degree(edges)
+    bc = broadcast_oriented_csr(e, CSR_BROADCAST_VALUES)
+    if bc is None:
+        return None
 
     def count_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        csr = bc.value
         for batch in batches:
-            a = batch.column("nbrs_src")
-            b = batch.column("nbrs_dst")
-            counts = kernels.intersect_count_many(
-                a.offsets.to_numpy(),
-                a.values.to_numpy(zero_copy_only=False),
-                b.offsets.to_numpy(),
-                b.values.to_numpy(zero_copy_only=False),
-            )
+            # plain int64 for the kernels — parquet scans may deliver
+            # dictionary-encoded vectors
+            sv = batch.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
+            dv = batch.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
             yield pa.RecordBatch.from_arrays(
-                [batch.column("src"), batch.column("dst"), pa.array(counts, pa.int64())],
-                names=["src", "dst", "tri_cnt"],
+                [pa.array([batch_count(sv, dv, csr)], pa.int64())], names=["n"]
             )
 
-    return pairs.mapInArrow(count_batches, out_schema)
+    try:
+        total = (
+            e.select("src", "dst").mapInArrow(count_batches, "n long")
+            .agg(F.coalesce(F.sum("n"), F.lit(0)))
+            .collect()[0][0]
+        )
+    finally:
+        bc.destroy()
+    return edges.sparkSession.createDataFrame([(total,)], f"{name} long")
+
+
+def _triangle_batch(sv: np.ndarray, dv: np.ndarray, csr: tuple) -> int:
+    """Triangles closed by one batch of oriented edges:
+    Σ |N⁺(src) ∩ N⁺(dst)| over the shared CSR."""
+    ids, offsets, values, _universe = csr
+    sa, ea = csr_row_bounds(ids, offsets, sv)
+    sb, eb = csr_row_bounds(ids, offsets, dv)
+    return int(kernels.intersect_count_pairs(sa, ea, sb, eb, values).sum())

@@ -502,12 +502,13 @@ def _history(res) -> list[dict]:
         label_propagation,
     ],
 )
-@pytest.mark.parametrize("crash", ["raise_in_step", "lose_metrics"])
+@pytest.mark.parametrize("crash", ["raise_in_step", "lose_metrics", "torn_metrics"])
 def test_resume_after_crash(spark, tmp_path, monkeypatch, algorithm, crash):
     """Kill a ``checkpoint_every=1`` run at superstep 3, by raising
-    inside the step or by losing only ``superstep=3/_metrics.json``
-    (the driver died between the parquet commit and the metrics
-    write), then rerun: it resumes from superstep 2, and its result
+    inside the step, by losing only ``superstep=3/_metrics.json`` (the
+    driver died between the parquet commit and the metrics write) or
+    by truncating that file to half its bytes (the driver died during
+    the write), then rerun: it resumes from superstep 2, and its result
     and per-superstep history equal an uninterrupted run's."""
     k = 3
     e = edge_df(spark, [(i, i + 1) for i in range(11)])  # 12-vertex path
@@ -520,7 +521,11 @@ def test_resume_after_crash(spark, tmp_path, monkeypatch, algorithm, crash):
         assert not (ck / f"superstep={k}").exists()
     else:
         algorithm(e, max_iterations=k, checkpoint_dir=str(ck), checkpoint_every=1)
-        os.remove(ck / f"superstep={k}" / "_metrics.json")
+        metrics = ck / f"superstep={k}" / "_metrics.json"
+        if crash == "lose_metrics":
+            os.remove(metrics)
+        else:
+            os.truncate(metrics, os.path.getsize(metrics) // 2)
     res = algorithm(e, max_iterations=6, checkpoint_dir=str(ck), checkpoint_every=1)
     assert clean.iterations >= 4
     assert res.resumed_from == k - 1 and res.iterations == clean.iterations
@@ -586,3 +591,42 @@ def test_observed_metrics_match_across_checkpoint_kinds(spark, tmp_path):
     deltas = [m["l1_delta"] for m in mem.metrics]
     assert all(d > 0 for d in deltas)
     assert np.allclose([m["l1_delta"] for m in ck.metrics], deltas, rtol=1e-9)
+
+
+# K4 on 0-3, triangle 0-1-6, and a separate edge 4-5: five triangles,
+# one 4-clique, two components
+_SEVEN_VERTICES = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3), (0, 6), (1, 6), (4, 5)]
+
+
+@pytest.mark.parametrize(
+    "to_id",
+    [
+        pytest.param(lambda i: i * 7919, id="x7919"),
+        pytest.param(lambda i: i * 7919 + 2**40, id="x7919+2^40"),
+        pytest.param(lambda i: i * 7919 + 2**62, id="x7919+2^62"),
+        pytest.param(lambda i: i * 2**60, id="x2^60"),
+    ],
+)
+def test_non_dense_ids(spark, to_id):
+    """Ids that are sparse, far from zero or spread wider than 2^62 give
+    the dense-id answers under the inverse id map. At ×2^60 the csr
+    intersect kernel's composite keys would overflow int64, so the
+    triangle and clique csr plans take its per-row fallback."""
+    from simdgraphprocessing_spark.operators import clique_count, triangle_count
+
+    A = numpy_graph(_SEVEN_VERTICES)
+    e = edge_df(spark, [(to_id(a), to_id(b)) for a, b in _SEVEN_VERTICES])
+    dense = {to_id(i): i for i in range(7)}
+
+    def by_dense_id(res):
+        return {dense[v]: x for v, x in res.state.collect()}
+
+    ranks = by_dense_id(pagerank(e))
+    assert np.allclose([ranks[i] for i in range(7)], pagerank_oracle(A), atol=1e-6)
+    comp = by_dense_id(connected_components(e))
+    assert {v: dense[c] for v, c in comp.items()} == cc_oracle(_SEVEN_VERTICES, 7)
+    labels = by_dense_id(label_propagation(e, max_iterations=4))
+    assert [dense[labels[i]] for i in range(7)] == list(lpa_oracle(A, 4))
+    for method in ("auto", "csr", "join"):
+        assert triangle_count(e, method=method).collect()[0]["triangles"] == 5
+    assert clique_count(e, k=4).collect()[0]["cliques"] == 1

@@ -3,6 +3,8 @@ the reference's test style (SURVEY §5) with brute-force numpy oracles."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -67,26 +69,60 @@ def test_triangles_zipf_vs_bruteforce(spark, method):
     )
 
 
-def test_triangle_auto_cutover(spark):
-    """method="auto" (the default) picks the broadcast-CSR kernel when
-    the oriented adjacency fits the cap and the relational join plan
-    above it — same cutover as clique_count (round-4 driver bench under
-    the cap: csr 9.4 s vs join 18.0 s, so a static join default was the
-    slower plan exactly where most graphs live)."""
+def test_triangle_auto_cutover(spark, monkeypatch):
+    """method="auto" (the default) runs the relational join plan at any
+    size: no Python kernel in its plan, and the same count as the join
+    plan and the oracle. The broadcast-CSR plan runs only when asked
+    for, and above the broadcast cap it raises rather than switch
+    plans; clique_count(method="auto") falls back to the join plan
+    there."""
+    from simdgraphprocessing_spark.operators import triangles
+
     pairs = zipf_random_pairs()
     e = edge_df(spark, pairs)
     want = tri_oracle(pairs)
 
-    under = triangle_count(e, method="auto")  # default cap: fits
-    assert "MapInArrow" in under._jdf.queryExecution().analyzed().toString()
-    assert under.collect()[0]["triangles"] == want
+    auto = triangle_count(e, method="auto")
+    assert "MapInArrow" not in auto._jdf.queryExecution().analyzed().toString()
+    assert auto.collect()[0]["triangles"] == want
+    assert triangle_count(e, method="join").collect()[0]["triangles"] == want
 
-    over = triangle_count(e, method="auto", csr_cap=1)  # forced above cap
-    assert "MapInArrow" not in over._jdf.queryExecution().analyzed().toString()
-    assert over.collect()[0]["triangles"] == want
+    monkeypatch.setattr(triangles, "CSR_BROADCAST_VALUES", 1)
+    with pytest.raises(ValueError, match="broadcast cap"):
+        triangle_count(e, method="csr")
+    with pytest.raises(ValueError, match="broadcast cap"):
+        clique_count(e, 4, method="csr")
+    fallback = clique_count(e, 4, method="auto")
+    assert "MapInArrow" not in fallback._jdf.queryExecution().analyzed().toString()
 
     with pytest.raises(ValueError):
         triangle_count(e, method="nope")
+
+
+def test_csr_counts_destroy_their_broadcast(spark, monkeypatch):
+    """The csr triangle and clique counts destroy the CSR broadcast
+    they build before returning: its driver-side pickle file is gone,
+    the context's temp dir holds no more files than before, and a
+    second call still counts correctly."""
+    sc = spark.sparkContext
+    made = []
+    real_broadcast = sc.broadcast
+
+    def recording_broadcast(value):
+        made.append(real_broadcast(value))
+        return made[-1]
+
+    pairs = zipf_random_pairs()
+    e = edge_df(spark, pairs)
+    want_cliques = clique_count(e, 4, method="join").collect()[0]["cliques"]
+    before = len(os.listdir(sc._temp_dir))
+    monkeypatch.setattr(sc, "broadcast", recording_broadcast)
+    for _ in range(2):
+        assert triangle_count(e, method="csr").collect()[0]["triangles"] == tri_oracle(pairs)
+        assert clique_count(e, 4, method="csr").collect()[0]["cliques"] == want_cliques
+    assert len(made) == 4
+    assert not [bc._path for bc in made if os.path.exists(bc._path)]
+    assert len(os.listdir(sc._temp_dir)) <= before
 
 
 def test_triangles_invariant_under_degree_relabel(spark):
@@ -294,7 +330,7 @@ def test_clique_csr_join_parity_and_triangle_consistency(spark):
         pytest.param(lambda e: triangle_count(e, method="auto"), id="triangle_count-auto"),
         pytest.param(lambda e: triangle_count(e, method="csr"), id="triangle_count-csr"),
         pytest.param(lambda e: triangle_count(e, method="join"), id="triangle_count-join"),
-        pytest.param(lambda e: triangles_per_edge(e, method="csr"), id="triangles_per_edge-csr"),
+        pytest.param(triangles_per_edge, id="triangles_per_edge"),
         pytest.param(lambda e: clique_count(e, k=4, method="auto"), id="clique4-auto"),
         pytest.param(lambda e: clique_count(e, k=4, method="join"), id="clique4-join"),
         pytest.param(similar_nodes, id="similar_nodes"),

@@ -30,35 +30,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-# Cached range-partitioned inputs, one per global_row_number call with
-# eager=False. The persist is semantically REQUIRED while the result is
-# lazy (it pins the sampled range boundaries so the per-partition
-# counts collected in pass 1 describe the exact partitioning pass 2
-# ranks within). The eager default materializes + releases immediately
-# and never registers here; lazy callers free their blocks with
-# :func:`release_rank_caches`.
-_RANK_CACHES: list[DataFrame] = []
-
-
-def release_rank_caches() -> int:
-    """Unpersist every cached ranking input; returns how many."""
-    n = len(_RANK_CACHES)
-    for cached in _RANK_CACHES:
-        try:
-            cached.unpersist()
-        except Exception:
-            pass
-    _RANK_CACHES.clear()
-    return n
-
-
 def global_row_number(
     df: DataFrame,
     order: list[Column],
     out_col: str = "rank",
     start: int = 0,
     num_partitions: int | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """Add ``out_col`` = 0-based (or ``start``-based) global rank of
     each row under ``order`` (which MUST be a total order — add a
@@ -66,31 +43,24 @@ def global_row_number(
     ``row_number().over(Window.orderBy(*order)) - 1 + start`` but
     scalable: no single-partition exchange.
 
-    ``eager=True`` (default): the ranked result is materialized with
-    ``localCheckpoint`` (cutting its lineage) and the range-partitioned
-    input is unpersisted IMMEDIATELY — nothing accumulates in executor
-    storage across calls, so library callers (reorder_bfs in a loop,
-    long sessions) stay leak-free with no cleanup call. Rankings are
-    V-sized, so the checkpoint cost is one extra V write.
-
-    ``eager=False``: fully lazy; the range-partitioned input stays
-    persisted for the session (boundary stability — see module note)
-    and is registered for :func:`release_rank_caches`. Use when the
-    ranking feeds a larger lazy plan exactly once and the extra
-    materialization matters.
+    The ranked result is materialized with ``localCheckpoint`` (cutting
+    its lineage) and the range-partitioned input is unpersisted
+    IMMEDIATELY — nothing accumulates in executor storage across calls,
+    so library callers (reorder_bfs in a loop, long sessions) stay
+    leak-free with no cleanup call. Rankings are V-sized, so the
+    checkpoint cost is one extra V write.
     """
     spark = df.sparkSession
     p = num_partitions or spark.sparkContext.defaultParallelism
-    # persisted: the counts job below and the caller's consumption both
-    # read it; without the persist the range shuffle (and its upstream,
-    # typically a degree aggregation) would run twice
+    # persisted: the counts job and the checkpoint job below both read
+    # it, and must see the same sampled range boundaries; without the
+    # persist the range shuffle (and its upstream, typically a degree
+    # aggregation) would run twice
     parted = (
         df.repartitionByRange(p, *order)
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    if not eager:
-        _RANK_CACHES.append(parted)
     # one light job over the (already small relative to E) input to
     # learn per-range-partition counts; cumsum on the driver is over
     # at most `p` rows
@@ -107,9 +77,7 @@ def global_row_number(
         .withColumn(out_col, F.row_number().over(w) - 1 + F.col("_off"))
         .drop("_pid", "_off")
     )
-    if eager:
-        # materialize + cut lineage, then free the boundary-pinning
-        # cache right away (see docstring)
-        ranked = ranked.localCheckpoint(eager=True)
-        parted.unpersist()
+    # materialize + cut lineage, then free the cache right away
+    ranked = ranked.localCheckpoint(eager=True)
+    parted.unpersist()
     return ranked

@@ -66,3 +66,17 @@ def numpy_graph(pairs, n=None):
         A[a, b] = 1
         A[b, a] = 1
     return A
+
+
+def logical_plan(df) -> tuple[int, set[str]]:
+    """Node count and leaf node classes of ``df``'s analyzed plan."""
+    nodes, leaves = 0, set()
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        nodes += 1
+        kids = node.children()
+        if kids.size() == 0:
+            leaves.add(node.getClass().getSimpleName())
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes, leaves

@@ -15,7 +15,7 @@ from simdgraphprocessing_spark.algorithms import (
     label_propagation,
     pagerank,
 )
-from tests.conftest import edge_df, numpy_graph, zipf_random_pairs
+from tests.conftest import edge_df, logical_plan, numpy_graph, zipf_random_pairs
 
 
 def pagerank_oracle(A: np.ndarray, d=0.85, iters=20, tol=1e-10):
@@ -365,20 +365,6 @@ def test_cc_lpa_read_state_without_exchange(spark, monkeypatch, algorithm):
     assert scans == 3 and shuffled == 0, (scans, shuffled, exchanges)
 
 
-def _logical_plan(df) -> tuple[int, set[str]]:
-    """Node count and leaf node classes of ``df``'s analyzed plan."""
-    nodes, leaves = 0, set()
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        nodes += 1
-        kids = node.children()
-        if kids.size() == 0:
-            leaves.add(node.getClass().getSimpleName())
-        stack.extend(kids.apply(i) for i in range(kids.size()))
-    return nodes, leaves
-
-
 @pytest.mark.parametrize("algorithm", [pagerank, connected_components, label_propagation])
 def test_superstep_plan_does_not_carry_input_lineage(spark, monkeypatch, algorithm):
     """The loop's inputs are checkpointed leaves: superstep 2 plans the
@@ -401,7 +387,7 @@ def test_superstep_plan_does_not_carry_input_lineage(spark, monkeypatch, algorit
         states.clear()
         results.append(dict(algorithm(e, max_iterations=2).state.collect()))
         assert len(states) == 2
-        results.append(_logical_plan(states[1]))
+        results.append(logical_plan(states[1]))
     shallow_result, shallow_plan, deep_result, deep_plan = results
     assert deep_plan == shallow_plan and shallow_plan[1] == {"LogicalRDD"}, (shallow_plan, deep_plan)
     # ranks within 1e-12; integer labels, exactly

@@ -4,6 +4,7 @@ the reference's test style (SURVEY §5) with brute-force numpy oracles."""
 from __future__ import annotations
 
 import os
+import re
 
 import numpy as np
 import pytest
@@ -36,6 +37,7 @@ from simdgraphprocessing_spark.operators.motifs import (
 from tests.conftest import (
     edge_df,
     k5_pairs,
+    logical_plan,
     numpy_graph,
     two_triangles_bridge_pairs,
     zipf_random_pairs,
@@ -352,3 +354,74 @@ def test_counting_operators_on_degenerate_inputs(spark, op, pairs):
     counting operator returns a single zero or no rows, never an error."""
     rows = op(spark.createDataFrame(pairs, "src long, dst long")).collect()
     assert [tuple(r) for r in rows] in ([], [(0,)])
+
+
+@pytest.fixture(scope="module")
+def corpus_graph(spark):
+    """The corpus graph as built (lazy, lineage and all) and persisted."""
+    from simdgraphprocessing_spark.corpus import extract_edges, make_corpus
+
+    built = Graph.from_edge_list_degree_ordered(
+        extract_edges(make_corpus(spark, n_files=200, seed=42))
+    )
+    frozen = built.persist()
+    yield built, frozen
+    frozen.unpersist()
+
+
+def test_persisted_graph_is_a_src_partitioned_leaf(spark, corpus_graph):
+    """``Graph.persist()`` edges are one checkpoint leaf, hash-partitioned
+    on ``src``: a triangle or clique query over them plans only
+    ``LogicalRDD`` leaves and as many nodes as over an in-memory table
+    of the same rows, not the corpus build, and counts the same as over
+    the unpersisted graph; PageRank ranks agree too. The leaf carries
+    the measured size of the rows, so the small triangle query
+    broadcasts its joins from the start instead of sort-merging."""
+    from simdgraphprocessing_spark.algorithms import pagerank
+
+    built, frozen = corpus_graph
+    qe = frozen.edges._jdf.queryExecution()
+    assert qe.analyzed().getClass().getSimpleName() == "LogicalRDD"
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    partitioning = qe.executedPlan().outputPartitioning().toString()
+    assert re.fullmatch(rf"hashpartitioning\(src#\d+L?, {n}\)", partitioning), partitioning
+
+    physical = triangle_count(frozen.edges)._jdf.queryExecution().sparkPlan().toString()
+    assert "BroadcastHashJoin" in physical and "SortMergeJoin" not in physical, physical
+
+    table = spark.createDataFrame(frozen.edges.collect(), frozen.edges.schema)
+    queries = {
+        "triangles": triangle_count,
+        "cliques": lambda e: clique_count(e, 4, method="join"),
+    }
+    for name, query in queries.items():
+        nodes, leaves = logical_plan(query(frozen.edges))
+        assert leaves == {"LogicalRDD"}, (name, leaves)
+        assert nodes == logical_plan(query(table))[0], name
+        assert query(frozen.edges).collect() == query(built.edges).collect(), name
+
+    ranks = [
+        dict(pagerank(g.edges, max_iterations=3).state.collect()) for g in (built, frozen)
+    ]
+    assert ranks[0].keys() == ranks[1].keys()
+    assert np.allclose(
+        [ranks[0][v] for v in ranks[0]], [ranks[1][v] for v in ranks[0]], rtol=0, atol=1e-6
+    )
+
+
+def test_graph_unpersist_frees_the_leaf(spark):
+    """``unpersist`` drops exactly the persisted edges' checkpoint RDD
+    (relative count: the session is shared). A build the caller cached
+    stays cached through ``persist``."""
+    from pyspark import StorageLevel
+
+    built = edge_df(spark, k5_pairs()).persist()
+    g = Graph(built).persist()
+    assert built.storageLevel != StorageLevel.NONE
+    leaf_id = g.edges._jdf.queryExecution().analyzed().rdd().id()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    held = rdds().size()
+    assert rdds().containsKey(leaf_id)
+    g.unpersist()
+    assert rdds().size() == held - 1 and not rdds().containsKey(leaf_id)
+    built.unpersist()

@@ -1,5 +1,6 @@
 """The package holds no module-global mutable state: no function
-rebinds a module-level name with a ``global`` statement."""
+rebinds a module-level name with a ``global`` statement, and no
+function mutates the object a module-level name holds."""
 
 from __future__ import annotations
 
@@ -9,13 +10,68 @@ import pathlib
 import simdgraphprocessing_spark
 
 PACKAGE = pathlib.Path(simdgraphprocessing_spark.__file__).parent
+MUTATORS = {"append", "extend", "insert", "update", "add", "setdefault", "pop", "remove", "clear"}
+
+
+def _modules():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        yield path.relative_to(PACKAGE.parent), ast.parse(path.read_text(), str(path))
 
 
 def test_package_has_no_global_statements():
     found = [
-        f"{path.relative_to(PACKAGE.parent)}:{node.lineno}: global {', '.join(node.names)}"
-        for path in sorted(PACKAGE.rglob("*.py"))
-        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        f"{name}:{node.lineno}: global {', '.join(node.names)}"
+        for name, tree in _modules()
+        for node in ast.walk(tree)
         if isinstance(node, ast.Global)
     ]
+    assert found == []
+
+
+def _assigned_names(nodes) -> set[str]:
+    """Names bound by assignment (or as arguments) among ``nodes``."""
+    names = set()
+    for node in nodes:
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+            names.add(node.id)
+        elif isinstance(node, ast.arg):
+            names.add(node.arg)
+    return names
+
+
+def _mutated_name(node) -> ast.Name | None:
+    """The bare name ``node`` mutates in place: ``x.append(...)`` and the
+    other container mutators, or ``x[k] = ...``."""
+    if (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in MUTATORS
+    ):
+        target = node.func.value
+    elif isinstance(node, (ast.Assign, ast.AugAssign)):
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        subscripts = [t.value for t in targets if isinstance(t, ast.Subscript)]
+        target = subscripts[0] if subscripts else None
+    else:
+        return None
+    return target if isinstance(target, ast.Name) else None
+
+
+def test_no_function_mutates_a_module_level_name():
+    found = []
+    for name, tree in _modules():
+        module_names = _assigned_names(
+            target
+            for stmt in tree.body
+            if isinstance(stmt, (ast.Assign, ast.AnnAssign))
+            for target in ast.walk(stmt)
+        )
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            local = _assigned_names(ast.walk(fn))
+            for node in ast.walk(fn):
+                target = _mutated_name(node)
+                if target is not None and target.id in module_names - local:
+                    found.append(f"{name}:{node.lineno}: {fn.name} mutates {target.id}")
     assert found == []

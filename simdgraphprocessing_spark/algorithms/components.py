@@ -8,13 +8,14 @@ edge table; each superstep is one join + one groupBy(dst) shuffle, and
 one Spark job.
 
 Loop inputs are leaves (see :mod:`simdgraphprocessing_spark.iteration`):
-the edges are checkpointed once, hash-partitioned by src, and so is the
-initial ``(id, id)`` state, hash-partitioned by id — one job each, so a
-call runs supersteps + 2 jobs, and neither side of the edges ⋈ state
-join shuffles. Fault model: those leaves, like every in-memory
-superstep's state, are executor-cached blocks lost with an executor;
-only a ``checkpoint_dir`` run survives that, and its resume rebuilds
-the leaves from ``edges``.
+the edges are checkpointed once, partitioned by src, and so is the
+initial ``(id, id)`` state, partitioned by id to the same ``P`` — one
+job each, so a call runs supersteps + 2 jobs, and neither side of the
+edges ⋈ state join shuffles. Edges persisted by ``Graph.persist()``
+are read in place: supersteps + 1 jobs. Fault model: those leaves,
+like every in-memory superstep's state, are executor-cached blocks
+lost with an executor; only a ``checkpoint_dir`` run survives that,
+and its resume rebuilds the leaves from ``edges``.
 
 Scale note: on huge, high-diameter graphs the large-star/small-star
 algorithm (Kiveris et al., "Connected Components in MapReduce") cuts
@@ -49,7 +50,7 @@ def connected_components(
     :func:`simdgraphprocessing_spark.graph.normalize_edges` produces.
     """
     spark = edges.sparkSession
-    edges, vertices = edge_leaf(edges)
+    edges, vertices, layout = edge_leaf(edges)
     init = vertices.select("id", F.col("id").alias("component"))
 
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
@@ -85,6 +86,8 @@ def connected_components(
             converged=lambda m: m.get("changed", 1) == 0,
             checkpoint_dir=checkpoint_dir,
             checkpoint_every=checkpoint_every,
+            layout=layout,
         )
     finally:
-        free_leaf(edges)
+        if not layout.borrowed:
+            free_leaf(edges)

@@ -11,18 +11,21 @@ with d = 0.85, r_0 = 1/N, dangling mass redistributed uniformly.
 
 Loop inputs are leaves (see :mod:`simdgraphprocessing_spark.iteration`):
 :func:`build_shuffle_plan` checkpoints the ``src``-partitioned edges
+(unless they already are ``Graph.persist()``'s leaf, read in place)
 and the ``(id, outdeg)`` vertex table once, observing V and the
-dangling count while the vertex table is materialized (2 jobs), and
-the initial state is checkpointed once more (1 job). No superstep plan
-carries the caller's lineage.
+dangling count while the vertex table is materialized (2 jobs, or 1),
+and the initial state is checkpointed once more (1 job). No superstep
+plan carries the caller's lineage.
 
 Plan per superstep (all JVM-side, zero Python in the loop), one
-exchange and one Spark job, so ``pagerank(10)`` runs 13 jobs:
-  contribs = edges ⋈ state on src (the edge leaf is hash-partitioned
-    by src; the state, materialized by a static plan, stays
-    hash-partitioned by id with the same partition count, so neither
-    side shuffles)
-  → groupBy(dst).sum (THE exchange; map-side partial agg halves it)
+exchange and one Spark job, so ``pagerank(10)`` runs 13 jobs (12 over
+persisted edges):
+  contribs = edges ⋈ state on src (the edge leaf is partitioned by
+    src; the state, materialized by a static plan, stays partitioned
+    by id to the same partition count ``P``, so neither side shuffles)
+  → groupBy(dst).sum (THE exchange; map-side partial agg halves it.
+    At ``P = 1`` — a graph under 1 MiB — every side is one partition
+    and the superstep plans no exchange at all)
   → state ⋈ contribs on id (co-partitioned: contribs is hashed on
     dst = id), a left join so zero-indegree vertices keep their row.
 
@@ -42,13 +45,14 @@ the leaves from ``edges``.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from simdgraphprocessing_spark.iteration import (
     IterationResult,
+    Layout,
     _static_local_checkpoint,
     edge_leaf,
     free_leaf,
@@ -59,29 +63,34 @@ from simdgraphprocessing_spark.iteration import (
 @dataclass
 class ShufflePlanContext:
     """The shuffle plan's one-time layout: the src-partitioned edge
-    leaf, the checkpointed (id, outdeg) vertex table, V, and the
-    number of dangling vertices. Building it costs two jobs (the two
-    checkpoints; V and the dangling count are observed on the second).
+    leaf, the checkpointed (id, outdeg) vertex table, V, the number of
+    dangling vertices, and the partition count both leaves share
+    (:class:`~simdgraphprocessing_spark.iteration.Layout`). Building it
+    costs two jobs (the two checkpoints; V and the dangling count are
+    observed on the second), one when the edges are a borrowed leaf.
     Callers that time the layout build apart from the supersteps build
     it themselves and pass it to :func:`pagerank` — the supersteps are
-    the same either way. :meth:`close` frees both leaves."""
+    the same either way. :meth:`close` frees the leaves the plan built,
+    never a borrowed edge leaf."""
 
     edges: DataFrame
     vtab: DataFrame
     n: int
     n_dangling: int
+    layout: Layout
 
     @property
     def has_dangling(self) -> bool:
         return self.n_dangling > 0
 
     def close(self) -> None:
-        free_leaf(self.edges)
+        if not self.layout.borrowed:
+            free_leaf(self.edges)
         free_leaf(self.vtab)
 
 
 def build_shuffle_plan(edges: DataFrame) -> ShufflePlanContext:
-    edges, vertices = edge_leaf(edges)
+    edges, vertices, layout = edge_leaf(edges)
     out_deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("outdeg")
     )
@@ -99,9 +108,10 @@ def build_shuffle_plan(edges: DataFrame) -> ShufflePlanContext:
             F.count("*").alias("n"),
             F.count_if(F.col("outdeg").isNull()).alias("dangling"),
         ),
+        layout.partitions,
     )
     n, dangling = stats.get["n"], stats.get["dangling"]
-    return ShufflePlanContext(edges, vtab, n, dangling)
+    return ShufflePlanContext(edges, vtab, n, dangling, layout)
 
 
 def pagerank(
@@ -143,7 +153,9 @@ def _run(spark, plan, damping, max_iterations, tol, checkpoint_dir, checkpoint_e
     if n == 0:
         # no vertices: nothing to iterate, and 1/N is undefined. The
         # state must not read plan.vtab, whose blocks close() frees
-        return IterationResult(spark.createDataFrame([], "id long, rank double"), 0)
+        return IterationResult(
+            spark.createDataFrame([], "id long, rank double"), 0, layout=asdict(plan.layout)
+        )
 
     # outdeg rides inside the state so the superstep needs no extra
     # vertex-table join to compute rank/outdeg
@@ -208,4 +220,5 @@ def _run(spark, plan, damping, max_iterations, tol, checkpoint_dir, checkpoint_e
         converged=lambda m: m.get("l1_delta", 1.0) < tol,
         checkpoint_dir=checkpoint_dir,
         checkpoint_every=checkpoint_every,
+        layout=plan.layout,
     )

@@ -11,10 +11,11 @@ push filters into the parquet scan and prune columns for free.
 Scale notes (100 TB design):
 * Vertex-id assignment uses a degree-descending ``row_number`` over the
   (comparatively tiny) vertex set — one shuffle over V, not E.
-* :meth:`Graph.persist` hash-partitions the canonical edge table by
-  ``src`` once and materializes it as a lineage-free leaf (the
-  reference's immutable CSR, ``SparseMatrix.hpp:12-68``, built once and
-  read by every query); every downstream join on ``src`` reuses that
+* :meth:`Graph.persist` partitions the canonical edge table by
+  ``src`` once, into as many partitions as its measured bytes need,
+  and materializes it as a lineage-free leaf (the reference's
+  immutable CSR, ``SparseMatrix.hpp:12-68``, built once and read by
+  every query); every downstream join on ``src`` reuses that
   exchange, and no query re-plans the build.
 * Skew: degree ordering puts hubs at low ids; AQE skew-join splitting
   plus the optional salted hub replication in :func:`salt_hubs`
@@ -30,7 +31,11 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from simdgraphprocessing_spark.iteration import _static_local_checkpoint, free_leaf
+from simdgraphprocessing_spark.iteration import (
+    _static_local_checkpoint,
+    free_leaf,
+    partition_layout,
+)
 
 
 def normalize_edges(
@@ -281,34 +286,44 @@ class Graph:
     def persist(self) -> "Graph":
         """This graph with its edges frozen into a lineage-free leaf.
 
-        The edges are ``repartition("src")``-ed and materialized now as
-        a static (AQE-off) eager ``localCheckpoint``, the same leaf
+        The edges are ``repartition(P, "src")``-ed and materialized now
+        as a static (AQE-off) eager ``localCheckpoint``, the same leaf
         :func:`~simdgraphprocessing_spark.iteration.edge_leaf` gives a
-        loop. The new graph's ``edges`` analyzes to one ``LogicalRDD``
-        that reports ``hashpartitioning(src, spark.sql.shuffle.partitions)``,
-        so every query over it plans a ``Scan ExistingRDD`` leaf instead
-        of the build (corpus, extraction, dedup, degree ranking, id
-        reassignment), and a join or aggregate keyed on ``src`` needs no
-        exchange. On the benchmark's corpus graph ``triangle_count``'s
-        analyzed plan is 15 lines over this leaf and 453 over a cached
-        build.
+        loop. ``P`` is the graph's partition count: its measured bytes
+        over ``spark.sql.adaptive.coalescePartitions.minPartitionSize``,
+        rounded up and capped at ``spark.sql.shuffle.partitions`` (see
+        :mod:`simdgraphprocessing_spark.iteration`). The new graph's
+        ``edges`` analyzes to one ``LogicalRDD`` that reports
+        ``hashpartitioning(src, P)``, or ``SinglePartition`` at ``P = 1``
+        (any graph under 1 MiB at Spark's defaults), so every query over
+        it plans a ``Scan ExistingRDD`` leaf instead of the build (corpus,
+        extraction, dedup, degree ranking, id reassignment), a join or
+        aggregate keyed on ``src`` needs no exchange, and PageRank, CC and
+        LPA read the leaf in place. On the benchmark's corpus graph
+        ``triangle_count``'s analyzed plan is 15 lines over this leaf and
+        453 over a cached build.
 
         Fault model: the edges are executor-cached checkpoint blocks, lost
         with an executor (local mode has none to lose); recovery means
         rebuilding the graph from its source. Free the blocks with
         :meth:`unpersist`.
         """
-        # the checkpoint reads the build through a cache, which measures
-        # its size: the leaf takes its statistics from that, so joins over
-        # it broadcast where a cached table's would. A checkpoint of the
-        # bare build reports the build's estimate (2.89E+52 B on the
-        # benchmark graph) and plans every join over it as a sort-merge.
+        # the checkpoint reads the build through a cache, materialized
+        # first so its statistics are measured: P comes from them, and the
+        # leaf keeps them, so joins over it broadcast where a cached
+        # table's would. A checkpoint of the bare build reports the
+        # build's estimate (2.89E+52 B on the benchmark graph), which
+        # gives P the cap and plans every join over it as a sort-merge.
         # A build the caller cached is read as is and stays cached.
         e = self.edges
         owned = e.storageLevel == StorageLevel.NONE
         if owned:
             e.persist()
-        leaf = _static_local_checkpoint(e.sparkSession, e.repartition("src"))
+        e.count()
+        partitions = partition_layout(e).partitions
+        leaf = _static_local_checkpoint(
+            e.sparkSession, e.repartition(partitions, "src"), partitions
+        )
         if owned:
             e.unpersist()
         return Graph(edges=leaf, directed=self.directed)

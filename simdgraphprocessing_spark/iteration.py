@@ -11,7 +11,7 @@ convergence measures cost no action of their own.
 
 Loop inputs are leaves. The reference builds its immutable CSR
 (``src/SparseMatrix.hpp:12-68``) once and every query loop reads only
-that; here :func:`edge_leaf` materializes the ``repartition("src")``-ed
+that; here :func:`edge_leaf` materializes the ``repartition(P, "src")``-ed
 edges once, with the same static eager ``localCheckpoint`` every
 superstep's state gets, and :func:`run_supersteps` does the same to the
 initial state. A superstep's plan therefore reads ``Scan ExistingRDD``
@@ -19,30 +19,54 @@ leaves only, whatever lineage built the caller's edges: Spark analyses,
 cache-matches and plans a few nodes per superstep instead of the whole
 build (on the benchmark's corpus graph a PageRank superstep's analyzed
 plan is 12 lines; planned over the edges' build lineage it is 160).
+An edge table that already is such a leaf (``Graph.persist()``'s) is
+read in place, not copied, and the loop does not free it.
+
+Every leaf and every superstep of one loop run is co-partitioned to one
+partition count ``P`` (:class:`Layout`), chosen once per graph the way
+adaptive partition coalescing would size it at Spark's defaults::
+
+    P = clamp(ceil(bytes / spark.sql.adaptive.coalescePartitions.minPartitionSize),
+              1, spark.sql.shuffle.partitions)
+
+``bytes`` is Spark's size statistic for the edges: measured for a
+materialized cache or a checkpoint of one, an estimate otherwise (for
+an input with a long lineage that estimate is huge, so ``P`` is the
+cap). An edge leaf borrowed as it is keeps its own partition count.
+Only this module reads ``spark.sql.shuffle.partitions``. On the
+benchmark's 0.57 MB graph ``P = 1``: from superstep 2 on, a PageRank
+superstep plans no exchange and runs one task; superstep 1, whose
+initial state was hash-partitioned by its own plan, may keep two
+1-partition exchanges.
+
 The driver
 
 * truncates lineage after every superstep (iterative DataFrame plans
   otherwise grow without bound — the classic Spark trap),
 * materializes the initial state and each in-memory superstep with a
-  static (non-adaptive) plan. ``localCheckpoint`` under adaptive
+  static (non-adaptive) plan, ``spark.sql.shuffle.partitions`` pinned
+  to ``P``. ``localCheckpoint`` under adaptive
   execution records ``UnknownPartitioning`` for the new state, so the
   next superstep's ``edges ⋈ state`` join re-shuffles all V state
   rows; planned statically, the state keeps the
-  ``hashpartitioning(id, n)`` its final ``state ⋈ messages`` join (or
+  ``hashpartitioning(id, P)`` its final ``state ⋈ messages`` join (or
   the initial vertex ``distinct``) gives it, and with the edge leaf
-  hash-partitioned on ``src`` to the same ``n`` that join needs no
+  hash-partitioned on ``src`` to the same ``P`` that join needs no
   exchange. AQE has nothing to do in these plans anyway: every join
-  has a checkpointed or co-partitioned side, so neither skew splitting
-  nor partition coalescing can fire, while its per-stage re-planning
-  is most of a small superstep's cost. The session's setting is
-  restored as soon as the state is materialized; durable checkpoints
-  stay adaptive, since a state re-read from parquet has no
-  partitioning to keep,
+  has a checkpointed or co-partitioned side, so skew splitting cannot
+  fire, and ``P`` is the coalescing, done once per graph; its
+  per-stage re-planning is most of a small superstep's cost. The
+  session's settings are restored as soon as the state is
+  materialized. A durable superstep writes its parquet from that
+  checkpoint, which stays the live state. Only a resume reads the
+  parquet back; it has no partitioning to keep, so it is
+  ``repartition(P, "id")``-ed once, before its static checkpoint, and
+  a resumed run plans every superstep as an uninterrupted one does,
 * checkpoints vertex state to a partitioned parquet directory
   (Iceberg-style layout ``checkpoint_dir/superstep=K/``) together
   with per-superstep metrics + lineage JSON (``_metrics.json``:
   iteration number, rows, partitioning, wall seconds, custom
-  convergence measures),
+  convergence measures, and the run's :class:`Layout`),
 * resumes from the last *complete* superstep (one whose parquet
   committed its ``_SUCCESS`` marker and metrics file) after a crash —
   ``run()`` with the same ``checkpoint_dir`` just continues.
@@ -64,7 +88,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -73,12 +97,34 @@ from pyspark.sql import functions as F
 Superstep = Callable[[DataFrame, int], tuple[DataFrame, dict]]
 
 
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+MIN_PARTITION_SIZE = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+ADAPTIVE = "spark.sql.adaptive.enabled"
+
+
+@dataclass(frozen=True)
+class Layout:
+    """One loop run's partition count ``partitions`` (``P``) and the
+    inputs it was chosen from: the size statistic of the rows it was
+    chosen for (``leaf_bytes``) and the two Spark settings of the rule
+    (see module docstring). ``borrowed``: the edges were already a leaf
+    partitioned on ``src`` and are read in place, so ``P`` is that
+    leaf's partition count and the loop does not own (free) it."""
+
+    partitions: int
+    leaf_bytes: int
+    min_partition_bytes: int
+    shuffle_partitions: int
+    borrowed: bool = False
+
+
 @dataclass
 class IterationResult:
     state: DataFrame
     iterations: int
     metrics: list[dict] = field(default_factory=list)
     resumed_from: int | None = None
+    layout: dict | None = None  # the run's Layout, as JSON
 
 
 def _local_ckpt_jrdd(df: DataFrame):
@@ -104,16 +150,56 @@ def _local_ckpt_jrdd(df: DataFrame):
     return None
 
 
-def _static_local_checkpoint(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` of ``df`` planned with AQE off, so the
-    checkpoint keeps ``df``'s hash partitioning (see module docstring)."""
+def _src_leaf_partitions(df: DataFrame) -> int | None:
+    """Partition count of ``df`` when it is a checkpoint leaf
+    partitioned on ``src`` alone (hash, or one partition), else None."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    partitioning = plan.outputPartitioning()
+    kind = partitioning.getClass().getSimpleName()
+    if kind == "SinglePartition$":
+        return 1
+    if kind == "HashPartitioning":
+        keys = partitioning.expressions()
+        if keys.size() == 1 and keys.apply(0).name() == "src":
+            return partitioning.numPartitions()
+    return None
+
+
+def partition_layout(df: DataFrame) -> Layout:
+    """The :class:`Layout` of a loop over ``df``: a ``src``-partitioned
+    checkpoint leaf is borrowed with its own partition count; any other
+    ``df`` gets ``P`` from its size statistic by the module's rule. The
+    statistic is read from a fresh plan of ``df``, so a cache made (and
+    materialized) since ``df`` was planned is matched and measured."""
+    spark = df.sparkSession
     conf = spark.conf
-    aqe = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
+    cap = int(conf.get(SHUFFLE_PARTITIONS))
+    min_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        conf.get(MIN_PARTITION_SIZE)
+    )
+    size = int(df.select("*")._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    held = _src_leaf_partitions(df)
+    if held is not None:
+        return Layout(held, size, min_bytes, cap, borrowed=True)
+    return Layout(max(1, min(cap, -(-size // min_bytes))), size, min_bytes, cap)
+
+
+def _static_local_checkpoint(spark: SparkSession, df: DataFrame, partitions: int) -> DataFrame:
+    """Eager ``localCheckpoint`` of ``df`` planned with AQE off and
+    every exchange it inserts sized to ``partitions``, so the
+    checkpoint keeps ``df``'s hash partitioning, co-partitioned with the
+    run's other leaves (see module docstring)."""
+    conf = spark.conf
+    saved = {key: conf.get(key) for key in (ADAPTIVE, SHUFFLE_PARTITIONS)}
+    conf.set(ADAPTIVE, "false")
+    conf.set(SHUFFLE_PARTITIONS, str(partitions))
     try:
         return df.localCheckpoint(eager=True)
     finally:
-        conf.set("spark.sql.adaptive.enabled", aqe)
+        for key, value in saved.items():
+            conf.set(key, value)
 
 
 def free_leaf(df: DataFrame) -> None:
@@ -125,21 +211,28 @@ def free_leaf(df: DataFrame) -> None:
         jrdd.unpersist(False)
 
 
-def edge_leaf(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The loop's edge input: ``(src, dst)`` hash-partitioned on
-    ``src``, materialized as a static checkpoint so no superstep plan
-    carries the caller's lineage; and the vertex set ``src ∪ dst`` as
-    a plan over that leaf (hash-partitioned on ``id`` once executed).
-    The caller frees the leaf with :func:`free_leaf`."""
-    leaf = _static_local_checkpoint(
-        edges.sparkSession, edges.select("src", "dst").repartition("src")
-    )
+def edge_leaf(edges: DataFrame) -> tuple[DataFrame, DataFrame, Layout]:
+    """The loop's edge input: ``(src, dst)`` partitioned on ``src`` to
+    the run's ``P``, as a checkpoint leaf so no superstep plan carries
+    the caller's lineage; the vertex set ``src ∪ dst`` as a plan over
+    that leaf (hash-partitioned on ``id`` once executed); and the run's
+    :class:`Layout`. ``edges`` that already are such a leaf with exactly
+    these columns are read in place (``Layout.borrowed``); otherwise the
+    leaf is a static checkpoint of ``repartition(P, "src")`` that the
+    caller owns and frees with :func:`free_leaf`."""
+    pairs = edges if edges.columns == ["src", "dst"] else edges.select("src", "dst")
+    layout = partition_layout(pairs)
+    leaf = pairs
+    if not layout.borrowed:
+        leaf = _static_local_checkpoint(
+            edges.sparkSession, pairs.repartition(layout.partitions, "src"), layout.partitions
+        )
     vertices = (
         leaf.select(F.col("src").alias("id"))
         .union(leaf.select(F.col("dst").alias("id")))
         .distinct()
     )
-    return leaf, vertices
+    return leaf, vertices, layout
 
 
 def _ckpt_path(checkpoint_dir: str, k: int) -> str:
@@ -185,6 +278,7 @@ def run_supersteps(
     converged: Callable[[dict], bool] | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
+    layout: Layout | None = None,
 ) -> IterationResult:
     """Run ``step`` until convergence / max_iterations, checkpointing.
 
@@ -192,11 +286,20 @@ def run_supersteps(
     (e.g. ``{"delta": 1e-7}``) — the driver-side convergence test the
     reference does with ``frontier.cardinality == 0``.
 
-    The initial state (or the resumed parquet state) is materialized
-    as a static checkpoint, one job, and freed once the first
-    superstep's state is materialized; each in-memory superstep is then
-    one job.
+    ``layout``: the run's :class:`Layout`, as :func:`edge_leaf` chose it
+    for the edges the step reads; None chooses it from the initial
+    state's size. Every static plan of the run is sized to its ``P``,
+    and its record is attached to the result and to every
+    ``_metrics.json``.
+
+    The initial state (or the resumed parquet state, keyed on ``id``)
+    is materialized as a static checkpoint, one job, and freed once the
+    first superstep's state is materialized; each in-memory superstep is
+    then one job.
     """
+    if layout is None:
+        layout = partition_layout(initial_state)
+    partitions = layout.partitions
     start_k = 0
     resumed_from = None
     state = initial_state
@@ -211,13 +314,16 @@ def run_supersteps(
             start_k = last
             resumed_from = last
             if metrics_log and converged and converged(metrics_log[-1]):
-                return IterationResult(state, last, metrics_log, resumed_from)
+                return IterationResult(state, last, metrics_log, resumed_from, asdict(layout))
+            # parquet keeps no partitioning: shuffle the state on id to
+            # the run's P once, so the first resumed superstep reads it
+            # in place, as an uninterrupted run reads its checkpoint
+            state = state.repartition(partitions, "id")
 
-    state = _static_local_checkpoint(spark, state)
+    state = _static_local_checkpoint(spark, state, partitions)
 
-    # JVM handle of the CURRENT state's localCheckpoint blocks (None
-    # when state is durable parquet); freed as soon as the next state
-    # is materialized
+    # JVM handle of the CURRENT state's localCheckpoint blocks; freed as
+    # soon as the next state is materialized
     state_ckpt_jrdd = _local_ckpt_jrdd(state)
     k = start_k
     while k < max_iterations:
@@ -227,19 +333,31 @@ def run_supersteps(
 
         durable = checkpoint_dir and (k % checkpoint_every == 0 or k == max_iterations)
         if durable:
+            # row count is a durable-checkpoint metric, observed by the
+            # checkpoint's own job
+            rows = Observation()
+            new_state = new_state.observe(rows, F.count("*").alias("rows"))
+        # truncate lineage; the eager localCheckpoint is the single
+        # materializing action
+        new_state = _static_local_checkpoint(spark, new_state, partitions)
+        # the new checkpoint is materialized, so the previous one's
+        # RDD-level blocks (which DataFrame.unpersist cannot reach) are
+        # dead weight — free them NOW instead of waiting for the
+        # ContextCleaner (see _local_ckpt_jrdd)
+        if state_ckpt_jrdd is not None:
+            state_ckpt_jrdd.unpersist(False)
+        state_ckpt_jrdd = _local_ckpt_jrdd(new_state)
+        n_rows = partition_lineage = None
+        if durable:
+            # written from the checkpoint, which stays the live state: a
+            # run reads its parquet back only to resume
             path = _ckpt_path(checkpoint_dir, k)
-            new_state.write.mode("overwrite").parquet(path)  # the materializing action
-            state.unpersist()
-            if state_ckpt_jrdd is not None:
-                state_ckpt_jrdd.unpersist(False)
-            state_ckpt_jrdd = None
-            # re-read: truncates lineage AND pins state to durable storage
-            new_state = spark.read.parquet(path).persist()
-            n_rows = new_state.count()
+            new_state.write.mode("overwrite").parquet(path)
+            n_rows = rows.get["rows"]
             # per-partition lineage: one manifest entry per state
             # partition file (name + bytes) so a resumed run — or an
             # auditor — can tie every partition of superstep K to the
-            # exact files superstep K+1 read
+            # exact files a resume from K reads
             part_files = sorted(
                 f for f in os.listdir(path)
                 if f.startswith("part-") and not f.endswith(".crc")
@@ -248,21 +366,6 @@ def run_supersteps(
                 {"file": f, "bytes": os.path.getsize(os.path.join(path, f))}
                 for f in part_files
             ]
-        else:
-            # truncate lineage in-memory between durable checkpoints;
-            # eager localCheckpoint is the single materializing action
-            # (no extra count job — row count is a durable-ckpt metric)
-            new_state = _static_local_checkpoint(spark, new_state)
-            state.unpersist()
-            # the new checkpoint is materialized, so the previous one's
-            # RDD-level blocks (which DataFrame.unpersist cannot reach)
-            # are dead weight — free them NOW instead of waiting for
-            # the ContextCleaner (see _local_ckpt_jrdd)
-            if state_ckpt_jrdd is not None:
-                state_ckpt_jrdd.unpersist(False)
-            state_ckpt_jrdd = _local_ckpt_jrdd(new_state)
-            n_rows = None
-            partition_lineage = None
 
         wall = time.time() - t0
         m = {
@@ -285,11 +388,11 @@ def run_supersteps(
             # never a torn _metrics.json
             final = _metrics_path(checkpoint_dir, k)
             with open(final + ".tmp", "w") as fh:
-                json.dump({"superstep": k, "history": metrics_log}, fh)
+                json.dump({"superstep": k, "history": metrics_log, "layout": asdict(layout)}, fh)
             os.replace(final + ".tmp", final)
 
         state = new_state
         if converged and converged(m):
             break
 
-    return IterationResult(state, k, metrics_log, resumed_from)
+    return IterationResult(state, k, metrics_log, resumed_from, asdict(layout))

@@ -17,6 +17,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def partitions_at_cap(spark):
+    """A 1-byte ``minPartitionSize`` for the test: every graph's
+    partition count ``P`` is then ``spark.sql.shuffle.partitions``, the
+    layout from before ``P`` was sized to a graph's bytes."""
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    yield
+    spark.conf.set(key, before)
+
+
 def edge_df(spark, pairs):
     """Undirected edge list (list of (u,v)) → normalized symmetric DF."""
     from simdgraphprocessing_spark.graph import normalize_edges

@@ -15,6 +15,7 @@ from simdgraphprocessing_spark.algorithms import (
     label_propagation,
     pagerank,
 )
+from simdgraphprocessing_spark.graph import Graph
 from tests.conftest import edge_df, logical_plan, numpy_graph, zipf_random_pairs
 
 
@@ -239,6 +240,25 @@ def _jobs_in_group(spark, group: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _tasks_in_group(spark, group: str) -> int:
+    """Tasks the jobs of ``group`` ran (skipped stages run none)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return sum(
+        tracker.getStageInfo(stage).numCompletedTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+
+
+def _persisted(spark, pairs) -> Graph:
+    """``pairs``' graph frozen by ``Graph.persist()``: a checkpoint leaf
+    with its measured bytes, a few KB, so ``P = 1`` at Spark's default
+    1 MiB ``minPartitionSize``."""
+    return Graph(edge_df(spark, pairs)).persist()
+
+
 def _directed_with_dangling(spark):
     """The zipf graph with low → high edges only: the high ids dangle."""
     pairs = zipf_random_pairs(n=60)
@@ -300,44 +320,50 @@ def test_build_shuffle_plan_runs_at_most_three_jobs(spark):
 # ---- superstep plan shape: static, co-partitioned materialization ----
 
 
+def _children(node) -> list:
+    """A physical plan node's children; adaptive plans are walked
+    through their final plan and stages."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if cls.endswith("QueryStageExec"):
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _plan_nodes(df):
+    """Every node of the physical plan that materialized ``df``."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        yield node
+        stack.extend(reversed(_children(node)))
+
+
 def _exchanges(df) -> tuple[list[str], int, int]:
     """Walk the plan that materialized ``df``. Returns every exchange
     node (as its one-line description), the number of scans of a
     checkpointed leaf (``Scan ExistingRDD``), and how many exchanges
-    shuffle such a scan (reach it through single-child nodes only).
-    Adaptive plans are walked through their final plan and stages."""
+    shuffle such a scan (reach it through single-child nodes only)."""
     exchanges: list[str] = []
     scans = shuffled = 0
 
-    def children(node):
-        cls = node.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            return [node.executedPlan()]
-        if cls.endswith("QueryStageExec"):
-            return [node.plan()]
-        kids = node.children()
-        return [kids.apply(i) for i in range(kids.size())]
-
     def shuffles_state(node) -> bool:
-        while len(kids := children(node)) == 1:
+        while len(kids := _children(node)) == 1:
             node = kids[0]
         return node.nodeName() == "Scan ExistingRDD"
 
-    def walk(node):
-        nonlocal scans, shuffled
+    for node in _plan_nodes(df):
         name = node.nodeName()
         if "Exchange" in name:
             exchanges.append(node.simpleString(200))
             shuffled += shuffles_state(node)
         scans += name == "Scan ExistingRDD"
-        for child in children(node):
-            walk(child)
-
-    walk(df._jdf.queryExecution().executedPlan())
     return exchanges, scans, shuffled
 
 
-def test_pagerank_superstep_plan_has_one_exchange(spark, monkeypatch):
+def test_pagerank_superstep_plan_has_one_exchange(spark, monkeypatch, partitions_at_cap):
     """Superstep 2 reads the superstep-1 checkpoint and the edge leaf.
     Both are hash-partitioned (the state by id, the edges by src, to
     the same count), so the superstep's only exchange is the contribs
@@ -354,7 +380,7 @@ def test_pagerank_superstep_plan_has_one_exchange(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("algorithm", [connected_components, label_propagation])
-def test_cc_lpa_read_state_without_exchange(spark, monkeypatch, algorithm):
+def test_cc_lpa_read_state_without_exchange(spark, monkeypatch, algorithm, partitions_at_cap):
     """Superstep 2 scans the edge leaf once and the state twice, and
     shuffles none of them."""
     states = _record_superstep_states(monkeypatch, algorithm)
@@ -426,6 +452,128 @@ def test_pagerank_superstep_runs_one_job(spark, monkeypatch):
         assert all((m["dangling_mass"] > 0) == (graph == "dangling") for m in res.metrics)
         jobs = [_jobs_in_group(spark, f"superstep-jobs-{graph}-{k}") for k in range(4)]
         assert jobs == [1, 1, 1, 1], (graph, jobs)
+
+
+_ALGORITHMS = [
+    pytest.param(functools.partial(pagerank, tol=0.0), id="pagerank"),
+    connected_components,
+    label_propagation,
+]
+
+
+@pytest.mark.parametrize("algorithm", _ALGORITHMS)
+def test_sub_mib_graph_supersteps_run_in_one_partition(spark, monkeypatch, algorithm):
+    """At the default ``minPartitionSize`` a persisted graph of a few KB
+    runs in one partition: every exchange of superstep 2 onwards has
+    ``P = 1`` partitions, none shuffles a state leaf, and an in-memory
+    superstep runs at most 2 tasks, counted by job group from the
+    status store. Sized to ``spark.sql.shuffle.partitions = 8`` instead,
+    the same supersteps run 16 tasks (24 for LPA's two exchanges)."""
+    sc = spark.sparkContext
+    name = getattr(algorithm, "func", algorithm).__name__
+    states = []
+
+    def wrap(step):
+        def recorded(state, k):
+            sc.setJobGroup(f"one-partition-{name}-{k}", "superstep")
+            new, m = step(state, k)
+            states.append(new)
+            return new, m
+
+        return recorded
+
+    _wrap_step(monkeypatch, algorithm, wrap)
+    g = _persisted(spark, zipf_random_pairs(n=400, seed=11))
+    try:
+        res = algorithm(g.edges, max_iterations=4)
+    finally:
+        sc._jsc.clearJobGroup()
+        g.unpersist()
+    assert res.layout["partitions"] == 1 and res.layout["borrowed"], res.layout
+    assert res.iterations == len(states) >= 3
+    for k, state in enumerate(states[1:], start=2):
+        partitions = [
+            node.outputPartitioning().numPartitions()
+            for node in _plan_nodes(state)
+            if "Exchange" in node.nodeName()
+        ]
+        _, scans, shuffled = _exchanges(state)
+        assert set(partitions) <= {1} and scans == 3 and shuffled == 0, (k, partitions, scans)
+        assert _tasks_in_group(spark, f"one-partition-{name}-{k - 1}") <= 2, k
+
+
+def test_loops_borrow_the_persisted_leaf(spark):
+    """PageRank, CC and LPA read ``Graph.persist()`` edges in place: the
+    graph's leaf outlives each call (the loop frees only leaves it
+    built), a second call gives the same result, and ``pagerank(10)``
+    runs 12 jobs, one fewer than over edges it has to checkpoint itself
+    (the vertex table, the initial state and the 10 supersteps)."""
+    g = _persisted(spark, zipf_random_pairs(n=120, seed=5))
+    leaf_id = g.edges._jdf.queryExecution().analyzed().rdd().id()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    sc = spark.sparkContext
+    try:
+        for algorithm in (functools.partial(pagerank, tol=0.0), connected_components, label_propagation):
+            first, second = (dict(algorithm(g.edges).state.collect()) for _ in range(2))
+            assert first == second
+            assert rdds().containsKey(leaf_id)
+        table = edge_df(spark, zipf_random_pairs(n=120, seed=5))
+        for graph, edges in (("persisted", g.edges), ("table", table)):
+            sc.setJobGroup(f"pagerank-jobs-{graph}", "pagerank(10)")
+            try:
+                res = pagerank(edges, max_iterations=10, tol=0.0)
+            finally:
+                sc._jsc.clearJobGroup()
+            assert res.iterations == 10
+            jobs = _jobs_in_group(spark, f"pagerank-jobs-{graph}")
+            assert jobs == (12 if graph == "persisted" else 13), (graph, jobs)
+    finally:
+        g.unpersist()
+
+
+@pytest.mark.parametrize("at_cap", [False, True], ids=["default", "at_cap"])
+def test_resumed_state_is_co_partitioned(spark, tmp_path, monkeypatch, request, at_cap):
+    """A state resumed from parquet is repartitioned on ``id`` to the
+    run's ``P`` once, before its static checkpoint: no exchange of the
+    first two resumed supersteps shuffles a state leaf, at either
+    layout."""
+    if at_cap:
+        request.getfixturevalue("partitions_at_cap")
+    e = edge_df(spark, zipf_random_pairs(n=60))
+    ck = str(tmp_path / "ck")
+    pagerank(e, max_iterations=2, tol=0.0, checkpoint_dir=ck)
+    states = _record_superstep_states(monkeypatch, pagerank)
+    # supersteps 3 and 4 run in memory, 5 writes parquet
+    res = pagerank(e, max_iterations=5, tol=0.0, checkpoint_dir=ck, checkpoint_every=5)
+    assert res.resumed_from == 2 and len(states) == 3
+    states = states[:2]
+    for state in states:
+        exchanges, scans, shuffled = _exchanges(state)
+        assert scans == 3 and shuffled == 0, (exchanges, scans, shuffled)
+
+
+def test_layout_is_recorded(spark, tmp_path):
+    """Each run records the partition layout it chose, with the inputs of
+    the choice, on its result and in every ``_metrics.json``. Edges with
+    a build lineage carry Spark's unbounded size estimate, so their
+    ``P`` is the cap."""
+    import json
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    e = edge_df(spark, zipf_random_pairs(n=60))
+    ck = tmp_path / "ck"
+    res = connected_components(e, max_iterations=3, checkpoint_dir=str(ck), checkpoint_every=1)
+    layout = res.layout
+    assert layout == {
+        "partitions": n,
+        "leaf_bytes": layout["leaf_bytes"],
+        "min_partition_bytes": 1 << 20,
+        "shuffle_partitions": n,
+        "borrowed": False,
+    }
+    assert layout["leaf_bytes"] > n << 20, layout
+    for k in range(1, res.iterations + 1):
+        assert json.loads((ck / f"superstep={k}" / "_metrics.json").read_text())["layout"] == layout
 
 
 def test_pagerank_resume_with_dangling_vertices(spark, tmp_path):
@@ -526,9 +674,9 @@ def test_resume_after_crash(spark, tmp_path, monkeypatch, algorithm, crash):
 
 
 def test_supersteps_restore_adaptive_setting(spark):
-    """The static materialization never leaks into the session: AQE
-    reads as before after a run, after a step that raises, and after a
-    state whose materialization fails."""
+    """The static materialization never leaks into the session: AQE and
+    the shuffle partition count read as before after a run, after a step
+    that raises, and after a state whose materialization fails."""
     from pyspark.errors import PySparkException
     from pyspark.sql import functions as F
 
@@ -536,6 +684,7 @@ def test_supersteps_restore_adaptive_setting(spark):
 
     key = "spark.sql.adaptive.enabled"
     before = spark.conf.get(key)
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
     init = spark.range(8)
 
     def ok(state, k):
@@ -552,11 +701,14 @@ def test_supersteps_restore_adaptive_setting(spark):
             spark.conf.set(key, value)
             res = run_supersteps(spark, init, ok, max_iterations=2)
             assert sorted(r["id"] for r in res.state.collect()) == list(range(2, 10))
+            assert res.layout["partitions"] == 1
             assert spark.conf.get(key) == value
+            assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
             for step, error in ((raises, RuntimeError), (fails_in_materialization, PySparkException)):
                 with pytest.raises(error):
                     run_supersteps(spark, init, step, max_iterations=2)
                 assert spark.conf.get(key) == value
+                assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
     finally:
         spark.conf.set(key, before)
 

@@ -370,8 +370,10 @@ def corpus_graph(spark):
 
 
 def test_persisted_graph_is_a_src_partitioned_leaf(spark, corpus_graph):
-    """``Graph.persist()`` edges are one checkpoint leaf, hash-partitioned
-    on ``src``: a triangle or clique query over them plans only
+    """``Graph.persist()`` edges are one checkpoint leaf, partitioned on
+    ``src`` into ``P`` partitions, ``P`` sized to the measured bytes of
+    the rows: one partition for this sub-MiB graph, which Spark plans as
+    ``SinglePartition``. A triangle or clique query over them plans only
     ``LogicalRDD`` leaves and as many nodes as over an in-memory table
     of the same rows, not the corpus build, and counts the same as over
     the unpersisted graph; PageRank ranks agree too. The leaf carries
@@ -382,9 +384,9 @@ def test_persisted_graph_is_a_src_partitioned_leaf(spark, corpus_graph):
     built, frozen = corpus_graph
     qe = frozen.edges._jdf.queryExecution()
     assert qe.analyzed().getClass().getSimpleName() == "LogicalRDD"
-    n = spark.conf.get("spark.sql.shuffle.partitions")
+    assert 0 < qe.optimizedPlan().stats().sizeInBytes() < 1 << 20
     partitioning = qe.executedPlan().outputPartitioning().toString()
-    assert re.fullmatch(rf"hashpartitioning\(src#\d+L?, {n}\)", partitioning), partitioning
+    assert partitioning == "SinglePartition", partitioning
 
     physical = triangle_count(frozen.edges)._jdf.queryExecution().sparkPlan().toString()
     assert "BroadcastHashJoin" in physical and "SortMergeJoin" not in physical, physical
@@ -407,6 +409,18 @@ def test_persisted_graph_is_a_src_partitioned_leaf(spark, corpus_graph):
     assert np.allclose(
         [ranks[0][v] for v in ranks[0]], [ranks[1][v] for v in ranks[0]], rtol=0, atol=1e-6
     )
+
+
+def test_persisted_graph_at_the_cap_is_hash_partitioned_on_src(spark, corpus_graph, partitions_at_cap):
+    """With a 1-byte ``minPartitionSize`` the rule's ``P`` is the cap:
+    the persisted leaf is ``hashpartitioning(src, spark.sql.shuffle.partitions)``."""
+    frozen = corpus_graph[0].persist()
+    try:
+        n = spark.conf.get("spark.sql.shuffle.partitions")
+        partitioning = frozen.edges._jdf.queryExecution().executedPlan().outputPartitioning().toString()
+        assert re.fullmatch(rf"hashpartitioning\(src#\d+L?, {n}\)", partitioning), partitioning
+    finally:
+        frozen.unpersist()
 
 
 def test_graph_unpersist_frees_the_leaf(spark):

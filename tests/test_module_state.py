@@ -75,3 +75,33 @@ def test_no_function_mutates_a_module_level_name():
                 if target is not None and target.id in module_names - local:
                     found.append(f"{name}:{node.lineno}: {fn.name} mutates {target.id}")
     assert found == []
+
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+LAYOUT_HELPER = pathlib.Path("simdgraphprocessing_spark/iteration.py")
+
+
+def test_one_source_for_the_partition_count():
+    """Only the layout helper (``iteration``) reads
+    ``spark.sql.shuffle.partitions``; every other engine module gets its
+    partition count from a ``Layout``, so a new operator cannot fall out
+    of co-partitioning by sizing its exchanges from the session. The
+    session builder's ``.config(...)``, which sets the cap, is a write."""
+    found = []
+    for name, tree in _modules():
+        if name == LAYOUT_HELPER:
+            continue
+        writes = {
+            id(arg)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "config"
+            for arg in node.args[:1]
+        }
+        for node in ast.walk(tree):
+            reads_conf = isinstance(node, ast.Constant) and node.value == SHUFFLE_PARTITIONS
+            reads_jvm = isinstance(node, ast.Attribute) and node.attr == "numShufflePartitions"
+            if (reads_conf and id(node) not in writes) or reads_jvm:
+                found.append(f"{name}:{node.lineno}")
+    assert found == []

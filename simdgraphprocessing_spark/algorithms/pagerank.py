@@ -154,7 +154,7 @@ def _run(spark, plan, damping, max_iterations, tol, checkpoint_dir, checkpoint_e
         # no vertices: nothing to iterate, and 1/N is undefined. The
         # state must not read plan.vtab, whose blocks close() frees
         return IterationResult(
-            spark.createDataFrame([], "id long, rank double"), 0, layout=asdict(plan.layout)
+            spark.range(0).select("id", F.lit(0.0).alias("rank")), 0, layout=asdict(plan.layout)
         )
 
     # outdeg rides inside the state so the superstep needs no extra

@@ -7,11 +7,17 @@ global ``row_number``-equivalent ranks with bounded per-task work:
 1. ``repartitionByRange`` on the full ordering key (RangePartitioner
    samples boundaries; partition p holds a contiguous key range, and
    partition ids are ordered with the ranges);
-2. rank *within* each partition (parallel window, keyed by the range
-   partition id);
-3. offset each partition's ranks by the cumulative row count of the
-   partitions before it (one tiny driver-side cumsum over ≤P counts,
-   broadcast-joined back).
+2. rank *within* each partition: ``sortWithinPartitions`` on the key,
+   then ``monotonically_increasing_id``, whose low 33 bits are the
+   row's position in its partition (no exchange, no window);
+3. add each partition's offset, the cumulative row count of the
+   partitions before it: one tiny driver-side cumsum over ≤P counts,
+   planned back in as a literal array indexed by the partition id
+   (:func:`partition_offsets`), so no table of offsets is built and
+   nothing is joined.
+
+Step 2 limits a range partition to 2^33 rows (8.6 × 10^9): the bits of
+``monotonically_increasing_id`` above those 33 hold the partition id.
 
 The output is deterministic for any total ordering (include a
 tie-break key such as the id) even though the sampled range boundaries
@@ -26,8 +32,28 @@ order, expressed as a range shuffle + per-partition sort that a
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# monotonically_increasing_id() = partition id << 33 | position in partition
+_POSITION_MASK = (1 << 33) - 1
+
+
+def partition_offsets(
+    parted: DataFrame, partitions: int, weight: Column, start: int = 0
+) -> Column:
+    """Each row's partition offset: ``start`` plus the sum of ``weight``
+    (an aggregate, e.g. ``count("*")``) over all partitions before the
+    row's own. ``parted`` has ``partitions`` partitions and carries its
+    partition id in ``_pid``. The per-partition sums are collected by
+    one small job and planned back in as a literal array, so the
+    offsets need no table, no join and no Python worker."""
+    sums = dict(parted.groupBy("_pid").agg(weight.alias("w")).collect())
+    offsets, acc = [], start
+    for pid in range(partitions):
+        offsets.append(F.lit(acc).cast("long"))
+        acc += sums.get(pid, 0)
+    return F.element_at(F.array(*offsets), F.col("_pid") + 1)
 
 
 def global_row_number(
@@ -35,7 +61,6 @@ def global_row_number(
     order: list[Column],
     out_col: str = "rank",
     start: int = 0,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add ``out_col`` = 0-based (or ``start``-based) global rank of
     each row under ``order`` (which MUST be a total order — add a
@@ -50,8 +75,7 @@ def global_row_number(
     leak-free with no cleanup call. Rankings are V-sized, so the
     checkpoint cost is one extra V write.
     """
-    spark = df.sparkSession
-    p = num_partitions or spark.sparkContext.defaultParallelism
+    p = df.sparkSession.sparkContext.defaultParallelism
     # persisted: the counts job and the checkpoint job below both read
     # it, and must see the same sampled range boundaries; without the
     # persist the range shuffle (and its upstream, typically a degree
@@ -61,21 +85,12 @@ def global_row_number(
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    # one light job over the (already small relative to E) input to
-    # learn per-range-partition counts; cumsum on the driver is over
-    # at most `p` rows
-    counts = {r["_pid"]: r["cnt"] for r in
-              parted.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = [], start
-    for pid in range(p):
-        offsets.append((pid, acc))
-        acc += counts.get(pid, 0)
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy(*order)
+    offset = partition_offsets(parted, p, F.count("*"), start)
+    position = F.monotonically_increasing_id().bitwiseAND(F.lit(_POSITION_MASK))
     ranked = (
-        parted.join(F.broadcast(off_df), "_pid")
-        .withColumn(out_col, F.row_number().over(w) - 1 + F.col("_off"))
-        .drop("_pid", "_off")
+        parted.sortWithinPartitions(*order)
+        .withColumn(out_col, position + offset)
+        .drop("_pid")
     )
     # materialize + cut lineage, then free the cache right away
     ranked = ranked.localCheckpoint(eager=True)

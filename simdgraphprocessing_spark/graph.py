@@ -27,15 +27,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from simdgraphprocessing_spark.iteration import (
-    _static_local_checkpoint,
-    free_leaf,
-    partition_layout,
-)
+from simdgraphprocessing_spark.iteration import free_leaf, freeze_edges
 
 
 def normalize_edges(
@@ -83,7 +78,10 @@ def degree_rank_ids(edges: DataFrame) -> DataFrame:
     Ranking is the scalable two-pass range-partition scheme
     (:func:`~simdgraphprocessing_spark.functions.ranking.global_row_number`)
     — never a single-partition window — so it holds at 10^10 vertices.
-    It touches only V rows, never E.
+    It touches only V rows, never E: one range shuffle of the degrees,
+    a per-partition sort numbered by ``monotonically_increasing_id``,
+    and per-partition offsets planned in as a literal. No job runs
+    Python code, and no Python worker starts.
     """
     from simdgraphprocessing_spark.functions.ranking import global_row_number
 
@@ -287,9 +285,10 @@ class Graph:
         """This graph with its edges frozen into a lineage-free leaf.
 
         The edges are ``repartition(P, "src")``-ed and materialized now
-        as a static (AQE-off) eager ``localCheckpoint``, the same leaf
-        :func:`~simdgraphprocessing_spark.iteration.edge_leaf` gives a
-        loop. ``P`` is the graph's partition count: its measured bytes
+        as a static (AQE-off) eager ``localCheckpoint`` by
+        :func:`~simdgraphprocessing_spark.iteration.freeze_edges`, the
+        same leaf a loop over unfrozen edges builds. ``P`` is the
+        graph's partition count: its measured bytes
         over ``spark.sql.adaptive.coalescePartitions.minPartitionSize``,
         rounded up and capped at ``spark.sql.shuffle.partitions`` (see
         :mod:`simdgraphprocessing_spark.iteration`). The new graph's
@@ -308,24 +307,7 @@ class Graph:
         rebuilding the graph from its source. Free the blocks with
         :meth:`unpersist`.
         """
-        # the checkpoint reads the build through a cache, materialized
-        # first so its statistics are measured: P comes from them, and the
-        # leaf keeps them, so joins over it broadcast where a cached
-        # table's would. A checkpoint of the bare build reports the
-        # build's estimate (2.89E+52 B on the benchmark graph), which
-        # gives P the cap and plans every join over it as a sort-merge.
-        # A build the caller cached is read as is and stays cached.
-        e = self.edges
-        owned = e.storageLevel == StorageLevel.NONE
-        if owned:
-            e.persist()
-        e.count()
-        partitions = partition_layout(e).partitions
-        leaf = _static_local_checkpoint(
-            e.sparkSession, e.repartition(partitions, "src"), partitions
-        )
-        if owned:
-            e.unpersist()
+        leaf, _ = freeze_edges(self.edges)
         return Graph(edges=leaf, directed=self.directed)
 
     def unpersist(self) -> None:

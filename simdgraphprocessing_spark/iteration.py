@@ -29,10 +29,10 @@ adaptive partition coalescing would size it at Spark's defaults::
     P = clamp(ceil(bytes / spark.sql.adaptive.coalescePartitions.minPartitionSize),
               1, spark.sql.shuffle.partitions)
 
-``bytes`` is Spark's size statistic for the edges: measured for a
-materialized cache or a checkpoint of one, an estimate otherwise (for
-an input with a long lineage that estimate is huge, so ``P`` is the
-cap). An edge leaf borrowed as it is keeps its own partition count.
+``bytes`` is the edges' size as measured on a materialized cache of
+them (:func:`freeze_edges`); Spark's estimate for an unmaterialized
+plan is far too large (the cap for a 100-row table). An edge leaf
+borrowed as it is keeps its own partition count.
 Only this module reads ``spark.sql.shuffle.partitions``. On the
 benchmark's 0.57 MB graph ``P = 1``: from superstep 2 on, a PageRank
 superstep plans no exchange and runs one task; superstep 1, whose
@@ -59,8 +59,9 @@ The driver
   session's settings are restored as soon as the state is
   materialized. A durable superstep writes its parquet from that
   checkpoint, which stays the live state. Only a resume reads the
-  parquet back; it has no partitioning to keep, so it is
-  ``repartition(P, "id")``-ed once, before its static checkpoint, and
+  parquet back; it has no partitioning to keep, so it is shuffled on
+  ``id`` to ``P`` once (a ``dropDuplicates(["id"])``, which drops
+  nothing), before its static checkpoint, and
   a resumed run plans every superstep as an uninterrupted one does,
 * checkpoints vertex state to a partitioned parquet directory
   (Iceberg-style layout ``checkpoint_dir/superstep=K/``) together
@@ -88,9 +89,11 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
-from typing import Callable
+from typing import Callable, Iterator
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -186,20 +189,32 @@ def partition_layout(df: DataFrame) -> Layout:
     return Layout(max(1, min(cap, -(-size // min_bytes))), size, min_bytes, cap)
 
 
+@contextmanager
+def _static_plans(spark: SparkSession, partitions: int | None = None) -> Iterator[None]:
+    """Plan with AQE off inside, and every exchange a plan inserts sized
+    to ``partitions`` when it is given; the session's settings are
+    restored on exit."""
+    conf = spark.conf
+    pinned = {ADAPTIVE: "false"}
+    if partitions is not None:
+        pinned[SHUFFLE_PARTITIONS] = str(partitions)
+    saved = {key: conf.get(key) for key in pinned}
+    for key, value in pinned.items():
+        conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in saved.items():
+            conf.set(key, value)
+
+
 def _static_local_checkpoint(spark: SparkSession, df: DataFrame, partitions: int) -> DataFrame:
     """Eager ``localCheckpoint`` of ``df`` planned with AQE off and
     every exchange it inserts sized to ``partitions``, so the
     checkpoint keeps ``df``'s hash partitioning, co-partitioned with the
     run's other leaves (see module docstring)."""
-    conf = spark.conf
-    saved = {key: conf.get(key) for key in (ADAPTIVE, SHUFFLE_PARTITIONS)}
-    conf.set(ADAPTIVE, "false")
-    conf.set(SHUFFLE_PARTITIONS, str(partitions))
-    try:
+    with _static_plans(spark, partitions):
         return df.localCheckpoint(eager=True)
-    finally:
-        for key, value in saved.items():
-            conf.set(key, value)
 
 
 def free_leaf(df: DataFrame) -> None:
@@ -211,6 +226,38 @@ def free_leaf(df: DataFrame) -> None:
         jrdd.unpersist(False)
 
 
+def freeze_edges(edges: DataFrame) -> tuple[DataFrame, Layout]:
+    """``edges`` frozen into a leaf: a static checkpoint of
+    ``repartition(P, "src")``, and the :class:`Layout` that chose ``P``.
+
+    The checkpoint reads ``edges`` through a cache, planned statically
+    and materialized first by one ``count()`` job, so its statistics are
+    measured: ``P`` comes from them, and the leaf keeps them, so joins
+    over it broadcast where a cached table's would. The bare build reports an estimate instead
+    (2.89E+52 B for the benchmark's corpus graph, 18446744073709551614 B
+    for a 100-row ``createDataFrame``), which gives ``P`` the cap and
+    plans every join over it as a sort-merge. ``edges`` the caller
+    cached are read as they are and stay cached; a cache made here is
+    freed once the checkpoint exists."""
+    spark = edges.sparkSession
+    owned = edges.storageLevel == StorageLevel.NONE
+    try:
+        # planned statically, the cache is built by the count's own job;
+        # adaptive, the cache and the count's shuffle are jobs of their own
+        with _static_plans(spark):
+            if owned:
+                edges.persist()
+            edges.count()
+        layout = partition_layout(edges)
+        leaf = _static_local_checkpoint(
+            spark, edges.repartition(layout.partitions, "src"), layout.partitions
+        )
+    finally:
+        if owned:
+            edges.unpersist()
+    return leaf, layout
+
+
 def edge_leaf(edges: DataFrame) -> tuple[DataFrame, DataFrame, Layout]:
     """The loop's edge input: ``(src, dst)`` partitioned on ``src`` to
     the run's ``P``, as a checkpoint leaf so no superstep plan carries
@@ -218,15 +265,13 @@ def edge_leaf(edges: DataFrame) -> tuple[DataFrame, DataFrame, Layout]:
     that leaf (hash-partitioned on ``id`` once executed); and the run's
     :class:`Layout`. ``edges`` that already are such a leaf with exactly
     these columns are read in place (``Layout.borrowed``); otherwise the
-    leaf is a static checkpoint of ``repartition(P, "src")`` that the
-    caller owns and frees with :func:`free_leaf`."""
+    leaf is :func:`freeze_edges`'s, which the caller owns and frees with
+    :func:`free_leaf`."""
     pairs = edges if edges.columns == ["src", "dst"] else edges.select("src", "dst")
-    layout = partition_layout(pairs)
-    leaf = pairs
-    if not layout.borrowed:
-        leaf = _static_local_checkpoint(
-            edges.sparkSession, pairs.repartition(layout.partitions, "src"), layout.partitions
-        )
+    if _src_leaf_partitions(pairs) is None:
+        leaf, layout = freeze_edges(pairs)
+    else:
+        leaf, layout = pairs, partition_layout(pairs)
     vertices = (
         leaf.select(F.col("src").alias("id"))
         .union(leaf.select(F.col("dst").alias("id")))
@@ -317,8 +362,12 @@ def run_supersteps(
                 return IterationResult(state, last, metrics_log, resumed_from, asdict(layout))
             # parquet keeps no partitioning: shuffle the state on id to
             # the run's P once, so the first resumed superstep reads it
-            # in place, as an uninterrupted run reads its checkpoint
-            state = state.repartition(partitions, "id")
+            # in place, as an uninterrupted run reads its checkpoint. Ids
+            # are unique, so the dedup drops no row; it is planned as a
+            # hashpartitioning(id, P) exchange at every P, where
+            # repartition(1, "id") is SinglePartition, which no join
+            # co-partitions with (both of its sides get shuffled)
+            state = state.dropDuplicates(["id"])
 
     state = _static_local_checkpoint(spark, state, partitions)
 

@@ -275,8 +275,7 @@ def _fish_factorized(edges: DataFrame) -> DataFrame:
         pe.unpersist()
         p.unpersist()
     fishes = int(row["m"]) - int(row["c1"]) + int(row["t3"])
-    spark = edges.sparkSession
-    return spark.createDataFrame([(fishes,)], "fishes long")
+    return edges.sparkSession.range(1).select(F.lit(fishes).cast("long").alias("fishes"))
 
 
 def lollipop_count(edges: DataFrame) -> DataFrame:

@@ -42,7 +42,7 @@ def bfs_levels(
     else:
         if start is None:
             start = max_degree_vertex(edges).collect()[0]["id"]
-        frontier = spark.createDataFrame([(int(start),)], "id long")
+        frontier = spark.range(int(start), int(start) + 1)
     visited = frontier.withColumn("level", F.lit(0))
     level = 0
     frontiers = []

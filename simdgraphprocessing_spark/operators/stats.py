@@ -120,14 +120,12 @@ def degree_stats_full(edges: DataFrame) -> DataFrame:
         "skew1_pearson": 3.0 * (avg_d - mode_v) / sd,
         "skew2_pearson": 3.0 * (avg_d - median) / sd,
     }
-    schema = (
-        "num_vertices long, num_directed_edges long, avg_degree_micros long, "
-        "max_degree long, min_degree long, median_degree long, mode_degree long, "
-        "var_degree_micros long, avg_range_micros long, max_range long, "
-        "avg_density_micros long, median_density_micros long, "
-        "skew1_pearson double, skew2_pearson double"
+    return spark.range(1).select(
+        *[
+            F.lit(value).cast("double" if name.startswith("skew") else "long").alias(name)
+            for name, value in row.items()
+        ]
     )
-    return spark.createDataFrame([tuple(row.values())], schema)
 
 
 def degree_stats(edges: DataFrame) -> DataFrame:

@@ -248,7 +248,7 @@ def csr_count(
         )
     finally:
         bc.destroy()
-    return edges.sparkSession.createDataFrame([(total,)], f"{name} long")
+    return edges.sparkSession.range(1).select(F.lit(total).cast("long").alias(name))
 
 
 def _triangle_batch(sv: np.ndarray, dv: np.ndarray, csr: tuple) -> int:

@@ -50,8 +50,9 @@ def write_ligra_text(edges: DataFrame, path: str) -> None:
     in (vertex, neighbor) sort order.
 
     Distributed plan: degrees for the dense id range [0, n) → the
-    two-pass range-partition prefix sum (same scheme as
-    ``functions.ranking`` — no single-partition window) → offsets and
+    two-pass range-partition prefix sum (each partition's offset from
+    ``functions.ranking.partition_offsets`` — no single-partition
+    window) → offsets and
     the sorted edge stream are written as ordered text part-files; the
     driver only concatenates files (IO, not compute).
     """
@@ -60,6 +61,8 @@ def write_ligra_text(edges: DataFrame, path: str) -> None:
     import shutil
 
     from pyspark.sql import Window
+
+    from simdgraphprocessing_spark.functions.ranking import partition_offsets
 
     spark = edges.sparkSession
     e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
@@ -83,24 +86,15 @@ def write_ligra_text(edges: DataFrame, path: str) -> None:
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    sums = {
-        r["_pid"]: r["s"]
-        for r in parted.groupBy("_pid").agg(F.sum("d").alias("s")).collect()
-    }
-    offs, acc = [], 0
-    for pid in range(p):
-        offs.append((pid, acc))
-        acc += sums.get(pid, 0)
-    off_df = spark.createDataFrame(offs, "_pid int, _off long")
+    part_offset = partition_offsets(parted, p, F.sum("d"))
     w = (
         Window.partitionBy("_pid")
         .orderBy(F.col("src").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = (
-        parted.join(F.broadcast(off_df), "_pid")
-        .withColumn(
-            "offset", F.coalesce(F.sum("d").over(w), F.lit(0)) + F.col("_off")
+        parted.withColumn(
+            "offset", F.coalesce(F.sum("d").over(w), F.lit(0)) + part_offset
         )
         .orderBy("src")
         .select(F.col("offset").cast("string").alias("value"))

@@ -461,6 +461,52 @@ _ALGORITHMS = [
 ]
 
 
+def _grouped_supersteps(spark, monkeypatch, algorithm, edges, tag, **kwargs):
+    """Run ``algorithm(edges, max_iterations=4, **kwargs)`` with
+    superstep k+1's jobs in job group ``f"{tag}-{k}"``; returns the
+    result and the new state each superstep materialized."""
+    sc = spark.sparkContext
+    states = []
+
+    def wrap(step):
+        def recorded(state, k):
+            sc.setJobGroup(f"{tag}-{k}", "superstep")
+            new, m = step(state, k)
+            states.append(new)
+            return new, m
+
+        return recorded
+
+    _wrap_step(monkeypatch, algorithm, wrap)
+    kwargs.setdefault("max_iterations", 4)
+    try:
+        res = algorithm(edges, **kwargs)
+    finally:
+        sc._jsc.clearJobGroup()
+        monkeypatch.undo()
+    assert res.iterations == len(states) >= 3
+    return res, states
+
+
+@pytest.mark.parametrize("algorithm", _ALGORITHMS)
+def test_durable_superstep_runs_two_jobs(spark, monkeypatch, tmp_path, algorithm):
+    """A ``checkpoint_every=1`` superstep runs exactly two jobs, counted
+    by job group: its static checkpoint and the parquet write from that
+    checkpoint (the row count is observed by the first; the parquet is
+    not read back)."""
+    name = getattr(algorithm, "func", algorithm).__name__
+    e = edge_df(spark, zipf_random_pairs(n=60))
+    ck = str(tmp_path / "ck")
+    res, _ = _grouped_supersteps(
+        spark, monkeypatch, algorithm, e, f"durable-jobs-{name}",
+        max_iterations=3, checkpoint_dir=ck, checkpoint_every=1,
+    )
+    rows = res.state.count()
+    assert res.iterations == 3 and all(m["rows"] == rows for m in res.metrics), res.metrics
+    jobs = [_jobs_in_group(spark, f"durable-jobs-{name}-{k}") for k in range(3)]
+    assert jobs == [2, 2, 2], jobs
+
+
 @pytest.mark.parametrize("algorithm", _ALGORITHMS)
 def test_sub_mib_graph_supersteps_run_in_one_partition(spark, monkeypatch, algorithm):
     """At the default ``minPartitionSize`` a persisted graph of a few KB
@@ -469,28 +515,13 @@ def test_sub_mib_graph_supersteps_run_in_one_partition(spark, monkeypatch, algor
     superstep runs at most 2 tasks, counted by job group from the
     status store. Sized to ``spark.sql.shuffle.partitions = 8`` instead,
     the same supersteps run 16 tasks (24 for LPA's two exchanges)."""
-    sc = spark.sparkContext
     name = getattr(algorithm, "func", algorithm).__name__
-    states = []
-
-    def wrap(step):
-        def recorded(state, k):
-            sc.setJobGroup(f"one-partition-{name}-{k}", "superstep")
-            new, m = step(state, k)
-            states.append(new)
-            return new, m
-
-        return recorded
-
-    _wrap_step(monkeypatch, algorithm, wrap)
     g = _persisted(spark, zipf_random_pairs(n=400, seed=11))
     try:
-        res = algorithm(g.edges, max_iterations=4)
+        res, states = _grouped_supersteps(spark, monkeypatch, algorithm, g.edges, f"one-partition-{name}")
     finally:
-        sc._jsc.clearJobGroup()
         g.unpersist()
     assert res.layout["partitions"] == 1 and res.layout["borrowed"], res.layout
-    assert res.iterations == len(states) >= 3
     for k, state in enumerate(states[1:], start=2):
         partitions = [
             node.outputPartitioning().numPartitions()
@@ -502,12 +533,27 @@ def test_sub_mib_graph_supersteps_run_in_one_partition(spark, monkeypatch, algor
         assert _tasks_in_group(spark, f"one-partition-{name}-{k - 1}") <= 2, k
 
 
+@pytest.mark.parametrize("algorithm", _ALGORITHMS[:2])
+def test_small_table_supersteps_run_in_one_partition(spark, monkeypatch, algorithm):
+    """Edges that are not persisted are measured too: over a 60-vertex
+    table (Spark's estimate for its plan is unbounded) the loop freezes
+    its own leaf at ``P = 1``, and from superstep 2 on a superstep runs at
+    most 2 tasks, not 16."""
+    name = getattr(algorithm, "func", algorithm).__name__
+    e = edge_df(spark, zipf_random_pairs(n=60))
+    res, _ = _grouped_supersteps(spark, monkeypatch, algorithm, e, f"small-table-{name}")
+    assert res.layout["partitions"] == 1 and not res.layout["borrowed"], res.layout
+    for k in range(1, res.iterations):
+        assert _tasks_in_group(spark, f"small-table-{name}-{k}") <= 2, k
+
+
 def test_loops_borrow_the_persisted_leaf(spark):
     """PageRank, CC and LPA read ``Graph.persist()`` edges in place: the
     graph's leaf outlives each call (the loop frees only leaves it
     built), a second call gives the same result, and ``pagerank(10)``
-    runs 12 jobs, one fewer than over edges it has to checkpoint itself
-    (the vertex table, the initial state and the 10 supersteps)."""
+    runs 12 jobs (the vertex table, the initial state and the 10
+    supersteps), two fewer than over edges it has to freeze itself
+    (the cache count that measures them, and their checkpoint)."""
     g = _persisted(spark, zipf_random_pairs(n=120, seed=5))
     leaf_id = g.edges._jdf.queryExecution().analyzed().rdd().id()
     rdds = spark.sparkContext._jsc.getPersistentRDDs
@@ -526,7 +572,7 @@ def test_loops_borrow_the_persisted_leaf(spark):
                 sc._jsc.clearJobGroup()
             assert res.iterations == 10
             jobs = _jobs_in_group(spark, f"pagerank-jobs-{graph}")
-            assert jobs == (12 if graph == "persisted" else 13), (graph, jobs)
+            assert jobs == (12 if graph == "persisted" else 14), (graph, jobs)
     finally:
         g.unpersist()
 
@@ -555,8 +601,9 @@ def test_resumed_state_is_co_partitioned(spark, tmp_path, monkeypatch, request, 
 def test_layout_is_recorded(spark, tmp_path):
     """Each run records the partition layout it chose, with the inputs of
     the choice, on its result and in every ``_metrics.json``. Edges with
-    a build lineage carry Spark's unbounded size estimate, so their
-    ``P`` is the cap."""
+    a build lineage are measured through a cache, not sized by Spark's
+    unbounded estimate for their plan, so this 60-vertex graph's ``P``
+    is 1, not the cap."""
     import json
 
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -565,13 +612,13 @@ def test_layout_is_recorded(spark, tmp_path):
     res = connected_components(e, max_iterations=3, checkpoint_dir=str(ck), checkpoint_every=1)
     layout = res.layout
     assert layout == {
-        "partitions": n,
+        "partitions": 1,
         "leaf_bytes": layout["leaf_bytes"],
         "min_partition_bytes": 1 << 20,
         "shuffle_partitions": n,
         "borrowed": False,
     }
-    assert layout["leaf_bytes"] > n << 20, layout
+    assert 0 < layout["leaf_bytes"] < 1 << 20, layout
     for k in range(1, res.iterations + 1):
         assert json.loads((ck / f"superstep={k}" / "_metrics.json").read_text())["layout"] == layout
 

@@ -119,8 +119,9 @@ def reorder_bfs(edges: DataFrame) -> DataFrame:
     PRECONDITION: ``edges`` must be symmetrized (both directions
     present), as ``connected_components`` requires — on a one-direction
     table, vertices with only in-edges would silently drop from the
-    mapping and ``reassign_ids`` would then drop their edges. Verified
-    by an assert on the mapping row count below.
+    mapping and ``reassign_ids`` would then drop their edges. Checked
+    against the component state, which has one row per ``src ∪ dst``
+    vertex; a shortfall raises ``ValueError``.
     """
     from simdgraphprocessing_spark.algorithms import connected_components
     from simdgraphprocessing_spark.operators.paths import bfs_levels
@@ -134,12 +135,7 @@ def reorder_bfs(edges: DataFrame) -> DataFrame:
         [F.col("component").asc(), F.col("level").asc(), F.col("id").asc()],
         out_col="new_id",
     ).select("id", "new_id", "degree")
-    n_vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .count()
-    )
+    n_vertices = cc.count()
     n_mapped = mapping.count()
     if n_mapped != n_vertices:
         raise ValueError(

@@ -1,7 +1,11 @@
 """Superstep driver with checkpoint/resume — the distributed
 generalization of the reference's frontier loop
 (``apps/n_path.cpp:58-83``: per-thread buffers → tree merge → global
-union → difference → convergence test).
+union → difference → convergence test). It is the package's one
+iterative loop: BFS (that frontier loop itself), PageRank, connected
+components and label propagation are steps run on it, and only this
+module holds the handle on a checkpoint's blocks (other modules free a
+leaf with :func:`free_leaf`).
 
 Contract: a superstep is a pure function
 ``state_df -> (new_state_df, metrics_dict)``. A metric whose value is
@@ -370,10 +374,6 @@ def run_supersteps(
             state = state.dropDuplicates(["id"])
 
     state = _static_local_checkpoint(spark, state, partitions)
-
-    # JVM handle of the CURRENT state's localCheckpoint blocks; freed as
-    # soon as the next state is materialized
-    state_ckpt_jrdd = _local_ckpt_jrdd(state)
     k = start_k
     while k < max_iterations:
         t0 = time.time()
@@ -390,12 +390,9 @@ def run_supersteps(
         # materializing action
         new_state = _static_local_checkpoint(spark, new_state, partitions)
         # the new checkpoint is materialized, so the previous one's
-        # RDD-level blocks (which DataFrame.unpersist cannot reach) are
-        # dead weight — free them NOW instead of waiting for the
-        # ContextCleaner (see _local_ckpt_jrdd)
-        if state_ckpt_jrdd is not None:
-            state_ckpt_jrdd.unpersist(False)
-        state_ckpt_jrdd = _local_ckpt_jrdd(new_state)
+        # blocks are dead weight — free them NOW instead of waiting for
+        # the ContextCleaner (see _local_ckpt_jrdd)
+        free_leaf(state)
         n_rows = partition_lineage = None
         if durable:
             # written from the checkpoint, which stays the live state: a

@@ -2,19 +2,22 @@
 (``apps/n_path.cpp:58-83``): ``visited ∪= ⋃ N(frontier);
 frontier = new_visited ∖ old_visited`` until empty or depth reached.
 
-Spark realization: the frontier is a DataFrame of vertex ids;
-each level is one join on the (persisted, src-partitioned) edge
-table + distinct + left_anti against visited. The visited set is
-checkpointed (localCheckpoint) every few levels to truncate lineage —
-the distributed analog of the reference's three reusable bitsets.
+Spark realization: a step of the superstep driver
+(:mod:`simdgraphprocessing_spark.iteration`) framed like connected
+components, over state ``(id, level)``: ``level`` is 0 for a seed and
+null until reached. Superstep ``k`` joins the frontier ``level == k``
+to the edge leaf, groups the hits by ``dst`` and sets ``level = k + 1``
+on the unreached ones; it observes how many it reached, and the loop
+stops at 0 or after ``max_depth`` supersteps. The default seed is
+planned into the initial state: no job collects it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from simdgraphprocessing_spark.iteration import _local_ckpt_jrdd
+from simdgraphprocessing_spark.iteration import edge_leaf, free_leaf, run_supersteps
 from simdgraphprocessing_spark.operators.stats import max_degree_vertex
 
 
@@ -22,7 +25,6 @@ def bfs_levels(
     edges: DataFrame,
     start: int | None = None,
     max_depth: int = 1 << 30,
-    checkpoint_every: int = 4,
     start_df: DataFrame | None = None,
 ) -> DataFrame:
     """(id, level) for every vertex reachable from ``start``
@@ -30,54 +32,51 @@ def bfs_levels(
 
     ``start_df`` (a single-column ``id`` DataFrame) runs a
     multi-source BFS instead: level = hops from the NEAREST seed.
+    A seed that is no vertex of ``edges`` is returned at level 0.
     """
-    spark: SparkSession = edges.sparkSession
-    # The frontier loop touches the edge table once per level; persist
-    # it so an upstream ETL plan (e.g. the corpus self-join) runs once,
-    # not once per level — the analog of the reference holding its CSR
-    # in memory across the whole n_path loop (apps/n_path.cpp:58-83).
-    edges = edges.select("src", "dst").persist()
+    spark = edges.sparkSession
+    edges, vertices, layout = edge_leaf(edges)
     if start_df is not None:
-        frontier = start_df.select(F.col("id").cast("long")).distinct()
+        seeds = start_df.select(F.col("id").cast("long"))
+    elif start is not None:
+        seeds = spark.range(int(start), int(start) + 1)
     else:
-        if start is None:
-            start = max_degree_vertex(edges).collect()[0]["id"]
-        frontier = spark.range(int(start), int(start) + 1)
-    visited = frontier.withColumn("level", F.lit(0))
-    level = 0
-    frontiers = []
-    # handle of the live localCheckpoint blocks, freed when replaced —
-    # DataFrame.unpersist cannot reach them (see iteration._local_ckpt_jrdd)
-    visited_ckpt = None
-    while level < max_depth:
-        nxt = (
-            edges.join(
-                frontier.withColumnRenamed("id", "src"), "src", "left_semi"
-            )
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
+        seeds = max_degree_vertex(edges).select("id")
+    init = (  # one row per vertex and seed, partitioned on id
+        vertices.select("id", F.lit(None).cast("int").alias("level"))
+        .union(seeds.select("id", F.lit(0).alias("level")))
+        .groupBy("id")
+        .agg(F.min("level").alias("level"))
+    )
+
+    def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
+        frontier = state.filter(F.col("level") == k).select(F.col("id").alias("src"))
+        hits = (
+            edges.join(frontier.hint("shuffle_hash"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.lit(True).alias("hit"))
         )
-        nxt = nxt.persist()
-        if nxt.isEmpty():
-            nxt.unpersist()
-            break
-        level += 1
-        visited = visited.union(nxt.withColumn("level", F.lit(level)))
-        if level % checkpoint_every == 0:
-            visited = visited.localCheckpoint(eager=True)
-            if visited_ckpt is not None:
-                visited_ckpt.unpersist(False)
-            visited_ckpt = _local_ckpt_jrdd(visited)
-        frontiers.append(nxt)
-        frontier = nxt
-    visited = visited.localCheckpoint(eager=True)
-    if visited_ckpt is not None:
-        visited_ckpt.unpersist(False)
-    edges.unpersist()
-    for f in frontiers:
-        f.unpersist()
-    return visited
+        # counted by the job that materializes the new state
+        reached = Observation()
+        new = (
+            state.join(hits, "id", "left")
+            .observe(reached, F.count_if(F.col("level").isNull() & F.col("hit")).alias("reached"))
+            .select(
+                "id",
+                F.coalesce(F.col("level"), F.when(F.col("hit"), F.lit(k + 1))).alias("level"),
+            )
+        )
+        return new, {"reached": reached}
+
+    try:
+        res = run_supersteps(
+            spark, init, step, max_iterations=max_depth,
+            converged=lambda m: m["reached"] == 0, layout=layout,
+        )
+    finally:
+        if not layout.borrowed:
+            free_leaf(edges)
+    return res.state.filter(F.col("level").isNotNull())
 
 
 def n_path_length(edges: DataFrame, start: int | None = None, n: int = 4) -> int:

@@ -9,6 +9,7 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from simdgraphprocessing_spark.algorithms import (
     connected_components,
@@ -16,6 +17,8 @@ from simdgraphprocessing_spark.algorithms import (
     pagerank,
 )
 from simdgraphprocessing_spark.graph import Graph
+from simdgraphprocessing_spark.iteration import IterationResult
+from simdgraphprocessing_spark.operators.paths import bfs_levels, n_path_length
 from tests.conftest import edge_df, logical_plan, numpy_graph, zipf_random_pairs
 
 
@@ -134,6 +137,19 @@ def test_label_propagation_exact_vs_oracle(spark):
         assert lbl == expect[v], f"vertex {v}"
 
 
+# named and placed as bfs_levels: the parametrizations' test ids, and
+# _wrap_step, which patches run_supersteps in the algorithm's module
+@functools.wraps(bfs_levels, assigned=("__module__", "__name__"))
+def _bfs(edges, max_iterations=1 << 30):
+    """``bfs_levels`` from its default seed, shaped as the other loops'
+    result: the ``(id, level)`` rows as ``state`` and, as
+    ``iterations``, the supersteps it ran: one per level reached, and
+    the one that reached nothing unless ``max_iterations`` cut it."""
+    levels = bfs_levels(edges, max_depth=max_iterations)
+    depth = levels.agg(F.max("level")).first()[0]
+    return IterationResult(levels, min(max_iterations, (depth or 0) + 1))
+
+
 def test_checkpoint_resume(spark, tmp_path):
     """Kill-and-resume: run 3 supersteps, then re-run with same dir —
     must resume from superstep 3, not restart."""
@@ -183,15 +199,21 @@ def test_resume_from_torn_checkpoint(spark, tmp_path, algorithm):
     assert all(abs(got[v] - want[v]) < 1e-12 for v in want)
 
 
-@pytest.mark.parametrize("algorithm", [pagerank, connected_components, label_propagation])
+@pytest.mark.parametrize("algorithm", [pagerank, connected_components, label_propagation, _bfs])
 @pytest.mark.parametrize("pairs", [[], [(0, 0), (1, 1)]], ids=["empty", "self_loops_only"])
 def test_degenerate_inputs(spark, algorithm, pairs):
     """An empty edge table gives an empty state; a graph of self-loops
-    only keeps every vertex to itself: identity labels, and an even
-    split of the rank (each vertex links only to itself)."""
-    res = algorithm(spark.createDataFrame(pairs, "src long, dst long"))
+    only keeps every vertex to itself: identity labels, an even split
+    of the rank (each vertex links only to itself), and a BFS from the
+    default seed (vertex 0, the smaller of two tied degrees) that
+    reaches no other vertex, so its path length is 0."""
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    res = algorithm(edges)
     got = dict(res.state.collect())
-    if not pairs:
+    if algorithm is _bfs:
+        assert got == ({0: 0} if pairs else {}) and n_path_length(edges) == 0
+        assert res.state.schema.simpleString() == "struct<id:bigint,level:int>"
+    elif not pairs:
         assert got == {}
     elif algorithm is pagerank:
         assert got.keys() == {0, 1} and all(abs(r - 0.5) < 1e-12 for r in got.values())
@@ -379,7 +401,7 @@ def test_pagerank_superstep_plan_has_one_exchange(spark, monkeypatch, partitions
     assert scans == 3 and shuffled == 0, (scans, shuffled)
 
 
-@pytest.mark.parametrize("algorithm", [connected_components, label_propagation])
+@pytest.mark.parametrize("algorithm", [connected_components, label_propagation, _bfs])
 def test_cc_lpa_read_state_without_exchange(spark, monkeypatch, algorithm, partitions_at_cap):
     """Superstep 2 scans the edge leaf once and the state twice, and
     shuffles none of them."""
@@ -391,7 +413,7 @@ def test_cc_lpa_read_state_without_exchange(spark, monkeypatch, algorithm, parti
     assert scans == 3 and shuffled == 0, (scans, shuffled, exchanges)
 
 
-@pytest.mark.parametrize("algorithm", [pagerank, connected_components, label_propagation])
+@pytest.mark.parametrize("algorithm", [pagerank, connected_components, label_propagation, _bfs])
 def test_superstep_plan_does_not_carry_input_lineage(spark, monkeypatch, algorithm):
     """The loop's inputs are checkpointed leaves: superstep 2 plans the
     same few nodes whether the edges come straight from a table or
@@ -575,6 +597,30 @@ def test_loops_borrow_the_persisted_leaf(spark):
             assert jobs == (12 if graph == "persisted" else 14), (graph, jobs)
     finally:
         g.unpersist()
+
+
+def test_bfs_runs_one_job_per_superstep(spark, monkeypatch):
+    """``bfs_levels`` over ``Graph.persist()`` edges, counted by job
+    group: one job materializes the initial state, into whose plan the
+    default max-degree seed is folded (no job collects a start vertex),
+    then one job per superstep; the last superstep reaches nothing and
+    ends the loop. The graph's leaf outlives the call."""
+    states = _record_superstep_states(monkeypatch, bfs_levels)
+    g = _persisted(spark, zipf_random_pairs(n=400, seed=11))
+    leaf_id = g.edges._jdf.queryExecution().analyzed().rdd().id()
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("bfs-jobs", "bfs_levels")
+        try:
+            levels = bfs_levels(g.edges)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert sc._jsc.getPersistentRDDs().containsKey(leaf_id)
+    finally:
+        g.unpersist()
+    depth = levels.agg(F.max("level")).first()[0]
+    assert len(states) == depth + 1 >= 3, (len(states), depth)
+    assert _jobs_in_group(spark, "bfs-jobs") == 1 + len(states)
 
 
 @pytest.mark.parametrize("at_cap", [False, True], ids=["default", "at_cap"])

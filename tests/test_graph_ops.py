@@ -152,6 +152,60 @@ def test_bfs_levels_bridge(spark):
     assert n_path_length(e, start=0, n=2) == 2
 
 
+def bfs_oracle(A: np.ndarray, seeds, max_depth=1 << 30) -> dict:
+    """Level-synchronous BFS over a dense adjacency matrix (``A[u, v]``
+    for an edge u → v): ``{id: hops from the nearest seed}``. A seed
+    outside ``A``'s ids reaches nothing and keeps level 0."""
+    n = len(A)
+    levels = {int(s): 0 for s in seeds}
+    inside = [s for s in levels if s < n]
+    visited = np.zeros(n, dtype=bool)
+    visited[inside] = True
+    frontier = visited.copy()
+    depth = 0
+    while frontier.any() and depth < max_depth:
+        frontier = (frontier @ A > 0) & ~visited
+        visited |= frontier
+        depth += 1
+        levels.update((int(v), depth) for v in np.flatnonzero(frontier))
+    return levels
+
+
+@pytest.mark.parametrize("directed", [False, True], ids=["symmetric", "directed"])
+def test_bfs_levels_vs_numpy_oracle(spark, directed):
+    """``bfs_levels`` on the zipf graph, both directions or low → high
+    only, against a numpy BFS: from the default (max-out-degree) seed,
+    a given start, a start that is no vertex, depths 0 and 2, and a
+    ``start_df`` with a duplicate seed and one that is no vertex."""
+    pairs = zipf_random_pairs(n=200, seed=7)
+    if directed:
+        A = np.zeros((200, 200), dtype=np.int64)
+        A[tuple(np.array(pairs).T)] = 1
+        edges = spark.createDataFrame(pairs, "src long, dst long")
+    else:
+        A = numpy_graph(pairs, n=200)
+        edges = edge_df(spark, pairs)
+    hub = int(A.sum(axis=1).argmax())  # first maximum: the smallest id
+    outside = 10**6
+    seeds = spark.createDataFrame([(5,), (5,), (outside,), (hub,)], "id long")
+    cases = [
+        (dict(), bfs_oracle(A, [hub])),
+        (dict(start=5), bfs_oracle(A, [5])),
+        (dict(start=outside), {outside: 0}),
+        (dict(max_depth=0), {hub: 0}),
+        (dict(max_depth=2), bfs_oracle(A, [hub], max_depth=2)),
+        (dict(start_df=seeds), bfs_oracle(A, [5, outside, hub])),
+    ]
+    g = Graph(edges).persist()
+    try:
+        for kwargs, want in cases:
+            got = {r["id"]: r["level"] for r in bfs_levels(g.edges, **kwargs).collect()}
+            assert got == want, kwargs
+        assert n_path_length(g.edges, n=2) == max(bfs_oracle(A, [hub], max_depth=2).values())
+    finally:
+        g.unpersist()
+
+
 def test_max_degree_and_similar_nodes(spark):
     e = edge_df(spark, two_triangles_bridge_pairs())
     m = max_degree_vertex(e).collect()[0]

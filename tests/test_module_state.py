@@ -78,7 +78,7 @@ def test_no_function_mutates_a_module_level_name():
 
 
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
-LAYOUT_HELPER = pathlib.Path("simdgraphprocessing_spark/iteration.py")
+ITERATION = pathlib.Path("simdgraphprocessing_spark/iteration.py")
 
 
 def test_one_source_for_the_partition_count():
@@ -89,7 +89,7 @@ def test_one_source_for_the_partition_count():
     session builder's ``.config(...)``, which sets the cap, is a write."""
     found = []
     for name, tree in _modules():
-        if name == LAYOUT_HELPER:
+        if name == ITERATION:
             continue
         writes = {
             id(arg)
@@ -104,4 +104,18 @@ def test_one_source_for_the_partition_count():
             reads_jvm = isinstance(node, ast.Attribute) and node.attr == "numShufflePartitions"
             if (reads_conf and id(node) not in writes) or reads_jvm:
                 found.append(f"{name}:{node.lineno}")
+    assert found == []
+
+
+def test_only_the_superstep_driver_frees_checkpoint_blocks():
+    """Only ``iteration`` names ``_local_ckpt_jrdd``, the handle on a
+    ``localCheckpoint``'s blocks: lineage cutting and block freeing live
+    in the superstep driver, and any other module frees a leaf it built
+    through ``iteration.free_leaf``."""
+    found = [
+        str(path.relative_to(PACKAGE.parent))
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path.relative_to(PACKAGE.parent) != ITERATION
+        and "_local_ckpt_jrdd" in path.read_text()
+    ]
     assert found == []

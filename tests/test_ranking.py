@@ -29,14 +29,6 @@ def test_global_row_number_start_offset(spark):
     assert rows[0] == 1 and rows[99] == 100
 
 
-def test_global_row_number_no_single_partition_exchange(spark):
-    df = spark.range(1000).select(F.col("id"), (F.col("id") % 3).alias("k"))
-    plan = global_row_number(
-        df, [F.col("k").asc(), F.col("id").asc()], out_col="r"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
-
-
 def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
@@ -98,9 +90,9 @@ def test_global_row_number_start_with_ties(spark):
 
 def test_global_row_number_plans_no_window_and_no_pid_exchange(spark, monkeypatch):
     """The ranked rows are numbered inside their range partitions: the
-    plan the checkpoint materializes has no ``Window``, and its only
-    exchange is the range shuffle into the persisted input (none on the
-    partition id)."""
+    plan the checkpoint materializes has no ``Window``, no
+    single-partition exchange, and its only exchange is the range
+    shuffle into the persisted input (none on the partition id)."""
     df = spark.range(1000).select(F.col("id"), (F.col("id") % 3).alias("k"))
     checkpointed = []
     real = type(df).localCheckpoint
@@ -115,6 +107,7 @@ def test_global_row_number_plans_no_window_and_no_pid_exchange(spark, monkeypatc
     plan = checkpointed[0]._jdf.queryExecution().executedPlan().toString()
     exchanges = [line for line in plan.splitlines() if "Exchange" in line]
     assert "Window" not in plan and "_pid" not in "".join(exchanges), plan
+    assert "SinglePartition" not in plan, plan
     assert exchanges and all("rangepartitioning" in line for line in exchanges), plan
 
 

@@ -113,6 +113,15 @@ def test_reorder_bfs_component_locality(spark):
     assert {m[10], m[11]} == {3, 4}
 
 
+def test_reorder_bfs_rejects_one_direction_edges(spark):
+    """On a one-direction edge table vertex 2 has only an in-edge, so
+    no degree row, and the mapping would miss it (``reassign_ids`` then
+    drops its edges): ``reorder_bfs`` raises instead."""
+    e = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
+    with pytest.raises(ValueError, match="covers 2 of 3 vertices"):
+        reorder_bfs(e)
+
+
 def test_reorder_shingles_groups_shared_neighborhoods(spark):
     # 0 and 1 share their full neighborhood {2,3} → identical shingles
     # → adjacent new ids; 4-5-6 is a separate path

@@ -88,12 +88,10 @@ def test_global_row_number_start_with_ties(spark):
     assert ranks == list(range(5, 505))
 
 
-def test_global_row_number_plans_no_window_and_no_pid_exchange(spark, monkeypatch):
-    """The ranked rows are numbered inside their range partitions: the
-    plan the checkpoint materializes has no ``Window``, no
-    single-partition exchange, and its only exchange is the range
-    shuffle into the persisted input (none on the partition id)."""
-    df = spark.range(1000).select(F.col("id"), (F.col("id") % 3).alias("k"))
+def _checkpointed_plan(monkeypatch, df, order):
+    """Run ``global_row_number(df, order)`` and return the executed plan
+    of the one table it local-checkpoints: the plan that actually runs,
+    not the bare scan of the checkpoint's result."""
     checkpointed = []
     real = type(df).localCheckpoint
 
@@ -102,12 +100,27 @@ def test_global_row_number_plans_no_window_and_no_pid_exchange(spark, monkeypatc
         return real(self, *args, **kwargs)
 
     monkeypatch.setattr(type(df), "localCheckpoint", recording)
-    global_row_number(df, [F.col("k").asc(), F.col("id").asc()])
+    global_row_number(df, order)
     assert len(checkpointed) == 1
-    plan = checkpointed[0]._jdf.queryExecution().executedPlan().toString()
+    return checkpointed[0]._jdf.queryExecution().executedPlan().toString()
+
+
+def test_global_row_number_no_single_partition_exchange(spark, monkeypatch):
+    """No step of the numbering gathers the rows into one partition."""
+    df = spark.range(1000).select(F.col("id"), (F.col("id") % 3).alias("k"))
+    plan = _checkpointed_plan(monkeypatch, df, [F.col("k").asc(), F.col("id").asc()])
+    assert "SinglePartition" not in plan, plan
+
+
+def test_global_row_number_plans_no_window_and_no_pid_exchange(spark, monkeypatch):
+    """The ranked rows are numbered inside their range partitions: the
+    plan the checkpoint materializes has no ``Window``, and its only
+    exchange is the range shuffle into the persisted input (none on the
+    partition id)."""
+    df = spark.range(1000).select(F.col("id"), (F.col("id") % 3).alias("k"))
+    plan = _checkpointed_plan(monkeypatch, df, [F.col("k").asc(), F.col("id").asc()])
     exchanges = [line for line in plan.splitlines() if "Exchange" in line]
     assert "Window" not in plan and "_pid" not in "".join(exchanges), plan
-    assert "SinglePartition" not in plan, plan
     assert exchanges and all("rangepartitioning" in line for line in exchanges), plan
 
 

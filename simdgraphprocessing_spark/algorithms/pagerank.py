@@ -165,6 +165,14 @@ def _run(spark, plan, damping, max_iterations, tol, checkpoint_dir, checkpoint_e
     # observes the dangling mass of the state the next superstep reads
     # (None: r_0 = 1/N gives it from the plan, a resumed state by action)
     dangling_obs = None
+    # the superstep's columns do not change from one superstep to the
+    # next: built once, they cost no JVM round trips inside the loop
+    weights = [F.col("id").alias("src"), (F.col("rank") / F.col("outdeg")).alias("w")]
+    by_dst = F.col("dst").alias("id")
+    msum = F.sum("w").alias("msum")
+    spread = F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
+    old_rank = F.col("rank")
+    is_dangling = F.col("outdeg").isNull()
 
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
         nonlocal dangling_obs
@@ -174,34 +182,27 @@ def _run(spark, plan, damping, max_iterations, tol, checkpoint_dir, checkpoint_e
         elif n_dangling and k == 0:
             dangling = n_dangling / n
         elif n_dangling:
-            dangling = (
-                state.filter(F.col("outdeg").isNull()).agg(F.sum("rank")).first()[0] or 0.0
-            )
+            dangling = state.filter(is_dangling).agg(F.sum("rank")).first()[0] or 0.0
         # the E-sized join: the edge leaf stays put (hash-partitioned
         # by src); the V-sized rank side, co-partitioned with it,
         # builds the hash table (shuffle_hash — no 19M-row re-sort per
         # superstep)
         contribs = (
-            edges.join(
-                state.select(
-                    F.col("id").alias("src"), (F.col("rank") / F.col("outdeg")).alias("w")
-                ).hint("shuffle_hash"),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("w").alias("msum"))
+            edges.join(state.select(*weights).hint("shuffle_hash"), "src")
+            .groupBy(by_dst)
+            .agg(msum)
         )
         base = (1.0 - damping) / n + damping * dangling / n
         joined = state.join(contribs.hint("shuffle_hash"), "id", "left")
-        rank = F.lit(base) + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
+        rank = F.lit(base) + spread
         m = {"dangling_mass": float(dangling)}
         # the old rank and the outdeg are on the joined row: both
         # scalars are observed while the driver materializes the new state
         observed = []
         if compute_delta:
-            observed.append(F.sum(F.abs(rank - F.col("rank"))).alias("l1_delta"))
+            observed.append(F.sum(F.abs(rank - old_rank)).alias("l1_delta"))
         if n_dangling:
-            observed.append(F.sum(F.when(F.col("outdeg").isNull(), rank)).alias("dangling"))
+            observed.append(F.sum(F.when(is_dangling, rank)).alias("dangling"))
         if observed:
             obs = Observation()
             joined = joined.observe(obs, *observed)

@@ -54,6 +54,13 @@ def get_spark(
         # the 1g default would kill that collect well under the cap
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame query context: every Column function call
+        # captures its Python call site and sends it to the JVM, about
+        # nine py4j round trips per call. A superstep builds its plan
+        # anew each time: on the benchmark's 36k-edge graph this was
+        # about half of a pagerank(10)'s ~3,400 round trips. Errors
+        # still carry Spark's own message and plan.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
